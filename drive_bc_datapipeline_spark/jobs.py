@@ -20,6 +20,7 @@ import json
 import os
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -237,6 +238,19 @@ def _check_heldout_args(val_frac: float | None, seeds_val) -> None:
         raise ValueError(f"val_frac must be in (0, 1), got {val_frac}")
 
 
+def _cache_uncached(*frames) -> list:
+    """``cache()`` each given frame that is not cached already and
+    return those, for the caller to ``unpersist()``: a frame the
+    caller cached itself stays cached after the release."""
+    own = [
+        f for f in frames
+        if f is not None and f.storageLevel == StorageLevel.NONE
+    ]
+    for f in own:
+        f.cache()
+    return own
+
+
 def _precision_at_cut(curve_rows: list, t: float) -> float | None:
     """Precision of the gate ``score >= t`` read off a collected PR
     curve: the curve is cumulative-from-the-top over OCCUPIED bins,
@@ -326,6 +340,13 @@ def build_curation_frames(
     The corpus-count and kept-count ride that same checkpoint job as
     Observations (``gate_obs``) — no separate ``count()`` actions.
 
+    Read-once label set: ``seeds`` (and ``seeds_val`` when given) are
+    cached after the scrub and scanned once; training, the seed and
+    held-out curves and calibration all read the cached rows, and the
+    cache is released before this function returns (on a raise too).
+    A label frame the caller has cached already is used as it is and
+    stays cached.
+
     ``calibrate=True`` fits an isotonic table (E11) on the seed
     scores, audits it (E12 ECE/MCE/Brier), and selects the threshold
     on CALIBRATED probabilities — so ``threshold`` then means "keep
@@ -401,155 +422,168 @@ def build_curation_frames(
     )
 
     _check_heldout_args(val_frac, seeds_val)
-    seeds_train = seeds
-    if val_frac is not None:
-        # deterministic doc-level split on the seed+4 stream; pmod so
-        # xxhash64's negative half doesn't silently empty the val side
-        is_val = F.pmod(
-            F.xxhash64(F.col(id_col), F.lit(seed + 4)), F.lit(1_000_000)
-        ) < int(val_frac * 1_000_000)
-        seeds_val = seeds.filter(is_val)
-        seeds_train = seeds.filter(~is_val)
+    # The label frames are read ONCE: cached here, after the scrub,
+    # and released in the finally — every consumer (training, the
+    # seed and held-out curves, calibration) is collected before
+    # this function returns, so nothing it hands back reads them.
+    labels = _cache_uncached(seeds, seeds_val)
+    try:
+        seeds_train = seeds
+        if val_frac is not None:
+            # deterministic doc-level split on the seed+4 stream; pmod so
+            # xxhash64's negative half doesn't silently empty the val side
+            is_val = F.pmod(
+                F.xxhash64(F.col(id_col), F.lit(seed + 4)), F.lit(1_000_000)
+            ) < int(val_frac * 1_000_000)
+            seeds_val = seeds.filter(is_val)
+            seeds_train = seeds.filter(~is_val)
 
-    w, b = train_hashed_linear(
-        spark,
-        seeds_train,
-        label_col=label_col,
-        text_col=text_col,
-        id_col=id_col,
-        n_buckets=n_buckets,
-        n_rounds=n_rounds,
-        lr=lr,
-        n_gram=n_gram,
-    )
-    seed_scored = score_hashed_linear(
-        spark, seeds_train, w, text_col=text_col, id_col=id_col,
-        n_buckets=n_buckets, bias=b, n_gram=n_gram,
-    ).join(seeds_train.select(id_col, label_col), id_col)
-
-    gate_col = "score"
-    cal_table: list | None = None
-    cal_audit: dict | None = None
-    if calibrate:
-        # E11: fit on the seed scores with the E10 bin convention so
-        # the calibrated threshold maps exactly through the step fn
-        cal_table = isotonic_calibration_table(
-            seed_scored, label_col=label_col, n_bins=curve_bins
+        w, b = train_hashed_linear(
+            spark,
+            seeds_train,
+            label_col=label_col,
+            text_col=text_col,
+            id_col=id_col,
+            n_buckets=n_buckets,
+            n_rounds=n_rounds,
+            lr=lr,
+            n_gram=n_gram,
         )
-        seed_scored = apply_isotonic_calibration(
-            seed_scored, cal_table, n_bins=curve_bins
-        )
-        gate_col = "calibrated"
-        # E12: audit the calibrated probabilities (seed-sized scan)
-        cal_audit = expected_calibration_error(
-            seed_scored, label_col=label_col, score_col=gate_col
-        )
-
-    curve_train = classifier_pr_curve(
-        seed_scored, label_col=label_col, score_col=gate_col,
-        n_bins=curve_bins,
-    ).collect()
-    held_out = seeds_val is not None
-    if held_out:
-        val_scored = score_hashed_linear(
-            spark, seeds_val, w, text_col=text_col, id_col=id_col,
+        seed_scored = score_hashed_linear(
+            spark, seeds_train, w, text_col=text_col, id_col=id_col,
             n_buckets=n_buckets, bias=b, n_gram=n_gram,
-        ).join(seeds_val.select(id_col, label_col), id_col)
+        ).join(seeds_train.select(id_col, label_col), id_col)
+
+        gate_col = "score"
+        cal_table: list | None = None
+        cal_audit: dict | None = None
         if calibrate:
-            val_scored = apply_isotonic_calibration(
-                val_scored, cal_table, n_bins=curve_bins
+            # E11: fit on the seed scores with the E10 bin convention so
+            # the calibrated threshold maps exactly through the step fn
+            cal_table = isotonic_calibration_table(
+                seed_scored, label_col=label_col, n_bins=curve_bins
             )
-        curve_sel = classifier_pr_curve(
-            val_scored, label_col=label_col, score_col=gate_col,
+            seed_scored = apply_isotonic_calibration(
+                seed_scored, cal_table, n_bins=curve_bins
+            )
+            gate_col = "calibrated"
+            # E12: audit the calibrated probabilities (seed-sized scan)
+            cal_audit = expected_calibration_error(
+                seed_scored, label_col=label_col, score_col=gate_col
+            )
+
+        curve_train = classifier_pr_curve(
+            seed_scored, label_col=label_col, score_col=gate_col,
             n_bins=curve_bins,
         ).collect()
-        if not curve_sel:
+        held_out = seeds_val is not None
+        if held_out:
+            val_scored = score_hashed_linear(
+                spark, seeds_val, w, text_col=text_col, id_col=id_col,
+                n_buckets=n_buckets, bias=b, n_gram=n_gram,
+            ).join(seeds_val.select(id_col, label_col), id_col)
+            if calibrate:
+                val_scored = apply_isotonic_calibration(
+                    val_scored, cal_table, n_bins=curve_bins
+                )
+            curve_sel = classifier_pr_curve(
+                val_scored, label_col=label_col, score_col=gate_col,
+                n_bins=curve_bins,
+            ).collect()
+            if not curve_sel:
+                raise ValueError(
+                    "held-out validation split is empty (val_frac "
+                    f"{val_frac!r} on this seed set / empty seeds_val): "
+                    "the threshold cannot be selected out-of-sample"
+                )
+        else:
+            curve_sel = curve_train
+        where = "held-out validation" if held_out else "seed"
+        eligible = [r for r in curve_sel if r["precision"] >= min_precision]
+        if not eligible:
+            best = max(r["precision"] for r in curve_sel)
             raise ValueError(
-                "held-out validation split is empty (val_frac "
-                f"{val_frac!r} on this seed set / empty seeds_val): "
-                "the threshold cannot be selected out-of-sample"
+                f"no threshold reaches precision {min_precision} on the "
+                f"{where} set (best {best:.3f}): the gate is not usable — "
+                "train longer, add seeds, or lower min_precision"
             )
-    else:
-        curve_sel = curve_train
-    where = "held-out validation" if held_out else "seed"
-    eligible = [r for r in curve_sel if r["precision"] >= min_precision]
-    if not eligible:
-        best = max(r["precision"] for r in curve_sel)
-        raise ValueError(
-            f"no threshold reaches precision {min_precision} on the "
-            f"{where} set (best {best:.3f}): the gate is not usable — "
-            "train longer, add seeds, or lower min_precision"
-        )
-    threshold = min(r["threshold"] for r in eligible)
-    precision_sel = _precision_at_cut(curve_sel, threshold)
-    precision_train = _precision_at_cut(curve_train, threshold)
+        threshold = min(r["threshold"] for r in eligible)
+        precision_sel = _precision_at_cut(curve_sel, threshold)
+        precision_train = _precision_at_cut(curve_train, threshold)
 
-    scored = score_hashed_linear(
-        spark, docs, w, text_col=text_col, id_col=id_col,
-        n_buckets=n_buckets, bias=b, n_gram=n_gram,
-    )
-    if calibrate:
-        scored = apply_isotonic_calibration(
-            scored, cal_table, n_bins=curve_bins
+        scored = score_hashed_linear(
+            spark, docs, w, text_col=text_col, id_col=id_col,
+            n_buckets=n_buckets, bias=b, n_gram=n_gram,
         )
-    gate = F.col(gate_col) >= threshold
-    gate_obs = Observation("gate_counts")
-    kept_ids = (
-        scored.observe(
-            gate_obs,
-            F.count(F.lit(1)).alias("n_docs"),
-            F.coalesce(F.sum(gate.cast("long")), F.lit(0)).alias("n_kept"),
+        if calibrate:
+            scored = apply_isotonic_calibration(
+                scored, cal_table, n_bins=curve_bins
+            )
+        gate = F.col(gate_col) >= threshold
+        gate_obs = Observation("gate_counts")
+        kept_ids = (
+            scored.observe(
+                gate_obs,
+                F.count(F.lit(1)).alias("n_docs"),
+                F.coalesce(F.sum(gate.cast("long")), F.lit(0)).alias("n_kept"),
+            )
+            .filter(gate)
+            .select(id_col)
+            .localCheckpoint(eager=True)  # THE one corpus-scoring job
         )
-        .filter(gate)
-        .select(id_col)
-        .localCheckpoint(eager=True)  # THE one corpus-scoring job
-    )
-    kept = docs.join(kept_ids, id_col)
+        kept = docs.join(kept_ids, id_col)
 
-    table, default = dsir_log_ratio(
-        dsir_bucket_counts(target, text_col=text_col, n_buckets=dsir_buckets),
-        dsir_bucket_counts(kept, text_col=text_col, n_buckets=dsir_buckets),
-        n_buckets=dsir_buckets,
-    )
-    weights = dsir_importance_weights(
-        spark, kept, table, default,
-        text_col=text_col, id_col=id_col, n_buckets=dsir_buckets,
-    )
-    sample = dsir_resample(weights, k, id_col=id_col, seed=seed)
+        table, default = dsir_log_ratio(
+            dsir_bucket_counts(
+                target, text_col=text_col, n_buckets=dsir_buckets
+            ),
+            dsir_bucket_counts(
+                kept, text_col=text_col, n_buckets=dsir_buckets
+            ),
+            n_buckets=dsir_buckets,
+        )
+        weights = dsir_importance_weights(
+            spark, kept, table, default,
+            text_col=text_col, id_col=id_col, n_buckets=dsir_buckets,
+        )
+        sample = dsir_resample(weights, k, id_col=id_col, seed=seed)
 
-    selected = seeded_shuffle(
-        docs.join(sample.select(id_col), id_col),
-        id_col,
-        seed=seed + 2,  # independent of the Gumbel stream at `seed`
-        n_shards=n_shards,
-    )
-    return {
-        "threshold": threshold,
-        "threshold_selection": (
-            "held-out" if held_out else "in-sample-seeds"
-        ),
-        # precision of the chosen cut on each curve: equal when the
-        # selection is in-sample; the spread between them is the
-        # in-sample optimism the r13 ADVICE warned about
-        "precision_train": precision_train,
-        "precision_val": precision_sel if held_out else None,
-        "gate_col": gate_col,
-        "gate_obs": gate_obs,
-        # the trained model is driver-sized state a caller needs to
-        # run the SAME gate incrementally (J11's streaming twin);
-        # "weights" (unqualified) is the DSIR importance relation below
-        "model_weights": w,
-        "model_bias": b,
-        "scored": scored,  # test seam: raw (+calibrated) corpus scores
-        "kept_ids": kept_ids,
-        "kept": kept,
-        "weights": weights,
-        "sample": sample,
-        "selected": selected,
-        "cal_table": cal_table,
-        "cal_audit": cal_audit,
-        "rules_funnel": rules_funnel,
-    }
+        selected = seeded_shuffle(
+            docs.join(sample.select(id_col), id_col),
+            id_col,
+            seed=seed + 2,  # independent of the Gumbel stream at `seed`
+            n_shards=n_shards,
+        )
+        return {
+            "threshold": threshold,
+            "threshold_selection": (
+                "held-out" if held_out else "in-sample-seeds"
+            ),
+            # precision of the chosen cut on each curve: equal when the
+            # selection is in-sample; the spread between them is the
+            # in-sample optimism the r13 ADVICE warned about
+            "precision_train": precision_train,
+            "precision_val": precision_sel if held_out else None,
+            "gate_col": gate_col,
+            "gate_obs": gate_obs,
+            # the trained model is small in-memory state a caller needs to
+            # run the SAME gate incrementally (J11's streaming twin);
+            # "weights" (unqualified) is the DSIR importance relation below
+            "model_weights": w,
+            "model_bias": b,
+            "scored": scored,  # test seam: raw (+calibrated) corpus scores
+            "kept_ids": kept_ids,
+            "kept": kept,
+            "weights": weights,
+            "sample": sample,
+            "selected": selected,
+            "cal_table": cal_table,
+            "cal_audit": cal_audit,
+            "rules_funnel": rules_funnel,
+        }
+    finally:
+        for f in labels:
+            f.unpersist()
 
 
 def run_curation_pipeline(

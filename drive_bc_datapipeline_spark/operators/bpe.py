@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from drive_bc_datapipeline_spark.session import local_frame
+
 #: End-of-word marker appended as a terminal symbol, so merges can
 #: learn word-final units distinctly from word-internal ones (the
 #: original paper's `</w>` convention).
@@ -210,7 +212,8 @@ def bpe_train_df(
     """``bpe_train`` as a DataFrame (merge_rank, left, right, merged,
     pair_count) — the engine-surface shape."""
     merges = bpe_train(df, n_merges, text_col=text_col, min_count=min_count)
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         merges,
         "merge_rank int, left string, right string, merged string, "
         "pair_count long",

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drive_bc_datapipeline_spark.session import local_frame
+
 
 def hash_bucket(col, n_buckets: int):
     """md5-prefix bucket id, identical to H15's convention: the first
@@ -116,7 +118,8 @@ def score_hashed_linear(
     _check_n_gram(n_gram)
     if not weights:
         raise ValueError("score_hashed_linear needs a non-empty model")
-    wdf = spark.createDataFrame(
+    wdf = local_frame(
+        spark,
         [(int(b), float(w)) for b, w in sorted(weights.items())],
         "bucket int, weight double",
     )
@@ -221,8 +224,9 @@ def train_hashed_linear(
     - the corpus featurizes ONCE: tokens hash JVM-side (the H15 md5
       convention shared with the scorer), collapse to per-(doc,
       bucket) normalized counts x = cnt / n_tokens, and the sparse
-      feature relation is localCheckpoint'd — every round reuses it,
-      nothing re-scans text;
+      feature relation is cached, hash-partitioned on the doc id —
+      every round reuses it, nothing re-scans text, and the cache is
+      released before the function returns;
     - the bias is a sentinel feature: every doc gets one extra row
       (bucket -1, x 1.0) — unreachable by the hash, which is
       non-negative — so each round is ONE broadcast join of the
@@ -353,7 +357,8 @@ def train_hashed_linear(
             spark.conf.set("spark.sql.adaptive.enabled", "false")
             model: dict[int, float] = {-1: 0.0}  # -1 = bias
             for _round in range(n_rounds):
-                wdf = spark.createDataFrame(
+                wdf = local_frame(
+                    spark,
                     [(b, w) for b, w in sorted(model.items())],
                     "bucket int, weight double",
                 )
@@ -704,7 +709,7 @@ def apply_isotonic_calibration(
             cur = b_next[3]
             b_next = next(it, None)
         filled.append((b, cur))
-    cal = spark.createDataFrame(filled, "__bin int, {} double".format(out_col))
+    cal = local_frame(spark, filled, "__bin int, {} double".format(out_col))
     s = F.col(score_col)
     valid = s.isNotNull() & ~F.isnan(s) & (s >= 0.0) & (s <= 1.0)
     binned = df.withColumn(

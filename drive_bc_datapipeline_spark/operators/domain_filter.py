@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from drive_bc_datapipeline_spark.session import local_frame
+
 #: guard: the threshold table is broadcast model state
 MAX_DOMAIN_THRESHOLDS = 1_000_000
 
@@ -141,7 +143,8 @@ def _two_threshold_map(spark, rows: list) -> DataFrame:
     per_src: dict[str, dict[float, float]] = {}
     for r in rows:
         per_src.setdefault(r["source"], {})[r["q"]] = r["threshold"]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(s, t[lo], t[hi]) for s, t in sorted(per_src.items())],
         "source string, __t_lo double, __t_hi double",
     )
@@ -244,7 +247,8 @@ def apply_domain_filter(
         raise ValueError(
             f"apply_domain_filter: the table holds no quantile {q}"
         )
-    one_q = df.sparkSession.createDataFrame(
+    one_q = local_frame(
+        df.sparkSession,
         sorted((r["source"], r["threshold"]) for r in rows),
         "source string, threshold double",
     )

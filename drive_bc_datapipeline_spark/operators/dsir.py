@@ -53,6 +53,7 @@ from drive_bc_datapipeline_spark.operators.classifier import (
     word_grams,
 )
 from drive_bc_datapipeline_spark.operators.sampling import _hash_unit
+from drive_bc_datapipeline_spark.session import local_frame
 
 #: Largest double below 1.0 — the Gumbel clamp bound (see
 #: ``dsir_resample``): math.nextafter(1.0, 0.0).
@@ -197,7 +198,8 @@ def dsir_importance_weights(
             "n_buckets (out-of-range entries could never join and "
             "every gram would silently take the default)"
         )
-    rdf = spark.createDataFrame(
+    rdf = local_frame(
+        spark,
         [(int(b), float(v)) for b, v in sorted(log_ratio.items())]
         or [(0, float(default_log_ratio))],
         "bucket int, lr double",

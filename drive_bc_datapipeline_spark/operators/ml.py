@@ -32,6 +32,8 @@ from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from drive_bc_datapipeline_spark.session import local_frame
+
 LABEL = "duration_days"
 NUMERIC = ["num_items", "total_qty", "total_price"]
 CATEGORICAL = ["o_orderstatus", "o_orderpriority"]
@@ -387,7 +389,7 @@ def kcenter_coreset(
             cur.count()  # materialize before releasing the old state
             prev.unpersist()
             prev = None
-        return df.sparkSession.createDataFrame(centers, out_schema)
+        return local_frame(df.sparkSession, centers, out_schema)
     finally:
         if prev is not None:
             prev.unpersist()

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from drive_bc_datapipeline_spark.session import local_frame
+
 
 def exclusive_prefix_sum(
     df: DataFrame,
@@ -87,7 +89,8 @@ def exclusive_prefix_sum(
     # The local window partitions by __pid, so no second exchange:
     # data is already range-partitioned and locally sorted.
     spark = df.sparkSession
-    offsets_df = spark.createDataFrame(
+    offsets_df = local_frame(
+        spark,
         [(pid, off) for pid, off in offsets.items()] or [(0, 0)],
         "__pid INT, __offset BIGINT",
     )

@@ -40,6 +40,7 @@ from drive_bc_datapipeline_spark.operators.bpe import (
     word_freq_table,
     words_array,
 )
+from drive_bc_datapipeline_spark.session import local_frame
 
 
 def bpe_vocab(
@@ -63,8 +64,8 @@ def bpe_vocab(
         .select(F.explode("syms").alias("token"))
         .distinct()
     )
-    learned = df.sparkSession.createDataFrame(
-        [(EOW,)] + [(m[3],) for m in merges], "token string"
+    learned = local_frame(
+        df.sparkSession, [(EOW,)] + [(m[3],) for m in merges], "token string"
     )
     return chars.unionByName(learned).distinct()
 
@@ -73,8 +74,8 @@ def unigram_vocab(
     df: DataFrame, pieces: list[tuple[str, int, float]]
 ) -> DataFrame:
     """(token) — a unigram piece table as a vocabulary relation."""
-    return df.sparkSession.createDataFrame(
-        [(p,) for p, _c, _lp in pieces], "token string"
+    return local_frame(
+        df.sparkSession, [(p,) for p, _c, _lp in pieces], "token string"
     ).distinct()
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from drive_bc_datapipeline_spark.session import local_frame
 from drive_bc_datapipeline_spark.tables import spread
 from drive_bc_datapipeline_spark.plans.registry import (
     query,
@@ -2276,8 +2277,8 @@ def pagerank_type_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             v: (1.0 - _PR_D) / n + _PR_D * (contrib[v] + mass / n)
             for v in nodes
         }
-    out = spark.createDataFrame(
-        [(v, rank[v]) for v in nodes], "event_type string, pagerank double"
+    out = local_frame(
+        spark, [(v, rank[v]) for v in nodes], "event_type string, pagerank double"
     )
     return out.select("event_type", r6(F.col("pagerank")).alias("pagerank"))
 

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from drive_bc_datapipeline_spark.functions import geo as geo_fns
+from drive_bc_datapipeline_spark.session import local_frame
 from drive_bc_datapipeline_spark.tables import spread
 from drive_bc_datapipeline_spark.plans.registry import (
     query,
@@ -291,8 +292,8 @@ def geo_bbox_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.063). No-op on multi-file corpora at 100 TB.
     e = spread(t(spark, sf_dir, "events"), by="event_id")
     pts = e.select(_lat().alias("lat"), _lon().alias("lon"))
-    boxes = spark.createDataFrame(
-        BOXES, "box_id INT, lat_lo DOUBLE, lat_hi DOUBLE, "
+    boxes = local_frame(
+        spark, BOXES, "box_id INT, lat_lo DOUBLE, lat_hi DOUBLE, "
         "lon_lo DOUBLE, lon_hi DOUBLE"
     )
     contained = pts.join(

@@ -119,9 +119,9 @@ GATE_PIN: dict[str, int] = {
     # round-10 replan: driver-side iteration over the collected
     # ≤|types|² edge matrix (enumerable-domain boundedness) replaces
     # the distributed join-agg rounds; same arithmetic, same oracle.
-    # Already in the r10 staleness window (last green r6), so the pin
-    # costs no extra slot:
-    "pagerank_type_graph": 10,
+    # That pin (value 10, satisfied by its r10 green row) is
+    # superseded by the r19 local-relation entry below — a dict
+    # literal can't carry the same key twice.
     # round-10 rewire: consumes F9's pairs through the session pair
     # memo (materialized-view rule; rows identical, cold==warm-tested).
     # Already in the r10 window (last green r5) — no extra slot:
@@ -218,6 +218,17 @@ GATE_PIN: dict[str, int] = {
     # gate-pinned here at 18, then REVERTED after three tracked bench
     # runs read it consistently slower — see the comment at the key's
     # plan; no r18 pin ships because the shipped plan is the r17 one.)
+    # round-19 replans: relations built from Python rows (prefix sums,
+    # the bbox table, the PageRank result) are now JVM LocalRelations
+    # (session.local_frame) instead of Python-RDD scans — the plans
+    # read LocalTableScan where they read Scan ExistingRDD; results
+    # unchanged. Found by diffing every key's formatted plan before
+    # and after (tools/dump_round_plans.py); no other key moved.
+    "exact_auc_purchase": 19,
+    "geo_bbox_contains": 19,
+    "pagerank_type_graph": 19,
+    "shard_packing": 19,
+    "user_rfm_segments": 19,
 }
 
 

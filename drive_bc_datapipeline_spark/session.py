@@ -12,8 +12,10 @@ long tail).
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -86,3 +88,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: StructType | str
+) -> DataFrame:
+    """Python rows (model weights, lookup tables, results computed in
+    Python) as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>)`` plans a ``LogicalRDD`` over
+    a ``PythonRDD``, so every scan of it starts Python-worker tasks. A
+    ``pyarrow.Table`` is handed to the JVM whole and planned as a
+    ``LocalTableScan``: no Python worker, and real size statistics for
+    the optimizer. ``schema`` (a ``StructType`` or a DDL string) is
+    kept exactly — names, types and nullability — and so is the row
+    order; an empty ``rows`` gives an empty frame of that schema.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -278,6 +278,60 @@ def _frames_inputs(spark):
     return docs, seeds, target
 
 
+
+def test_run_curation_pipeline_leaves_cache_manager_as_found(
+    spark, tmp_path
+):
+    """Session hygiene: the label set is cached for the call only. On
+    success and on the "no threshold reaches precision" raise, the
+    CacheManager holds exactly the entries it held before, and a seed
+    frame the caller cached itself is still cached afterwards."""
+    from pyspark import StorageLevel
+
+    from drive_bc_datapipeline_spark.jobs import run_curation_pipeline
+
+    docs, seeds, target = _frames_inputs(spark)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    kwargs = dict(
+        k=5, n_buckets=N_BUCKETS, n_rounds=2, lr=1.0, min_precision=0.5,
+        dsir_buckets=DSIR_BUCKETS, n_shards=2,
+    )
+
+    before = cm.numCachedEntries()
+    m = run_curation_pipeline(
+        spark, docs, seeds, target, str(tmp_path / "ok"), **kwargs
+    )
+    assert m["n_selected"] == 5
+    assert cm.numCachedEntries() == before
+    assert seeds.storageLevel == StorageLevel.NONE
+
+    # every text appears with BOTH labels, so no score bin beats 0.5
+    # precision and threshold selection raises after training
+    twin_seeds = spark.createDataFrame(
+        [(i, 0, _doc(_CLEAN, i)) for i in range(8)]
+        + [(100 + i, 1, _doc(_CLEAN, i)) for i in range(8)],
+        "doc_id long, label int, text string",
+    )
+    with pytest.raises(ValueError, match="no threshold reaches precision"):
+        run_curation_pipeline(
+            spark, docs, twin_seeds, target, str(tmp_path / "raise"),
+            **{**kwargs, "min_precision": 0.95},
+        )
+    assert cm.numCachedEntries() == before
+
+    seeds.cache()
+    try:
+        cached = cm.numCachedEntries()
+        run_curation_pipeline(
+            spark, docs, seeds, target, str(tmp_path / "cached"),
+            **kwargs,
+        )
+        assert cm.numCachedEntries() == cached
+        assert seeds.storageLevel != StorageLevel.NONE
+    finally:
+        seeds.unpersist()
+
+
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 

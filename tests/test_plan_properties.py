@@ -631,3 +631,66 @@ def test_calibration_plans_single_scan_no_python(spark):
     assert plan.count("FileScan parquet") == scored_plan.count(
         "FileScan parquet"
     ), "apply added a corpus re-scan over the scored plan"
+
+
+def _assert_local_model_table(plan: str) -> None:
+    """A model table built from Python rows must scan as a JVM
+    LocalTableScan. A ``createDataFrame(<python list>)`` relation plans
+    as ``Scan ExistingRDD`` over a PythonRDD, which the BatchEvalPython
+    / ArrowEval checks above cannot see, yet every scan of it starts
+    Python-worker tasks."""
+    assert "LocalTableScan" in plan, plan
+    assert "Scan ExistingRDD" not in plan, plan
+
+
+def test_model_tables_scan_in_the_jvm(spark, monkeypatch):
+    """The scorer's weights, one training round's weights, DSIR's
+    log-ratio table and the isotonic bin table are all LocalTableScans
+    in the executed plans that consume them."""
+    from pyspark.sql import functions as F
+
+    from drive_bc_datapipeline_spark.operators import classifier
+    from drive_bc_datapipeline_spark.operators.dsir import (
+        dsir_importance_weights,
+    )
+    from drive_bc_datapipeline_spark.tables import load_table
+
+    docs = load_table(spark, SF, "documents")
+    scored = classifier.score_hashed_linear(
+        spark, docs, {3: 0.5}, n_buckets=64
+    )
+    _assert_local_model_table(
+        scored._jdf.queryExecution().executedPlan().toString()
+    )
+    weights = dsir_importance_weights(
+        spark, docs, {0: 0.5, 1: -0.2}, -0.1, n_buckets=64
+    )
+    _assert_local_model_table(
+        weights._jdf.queryExecution().executedPlan().toString()
+    )
+    calibrated = classifier.apply_isotonic_calibration(
+        scored, [(5, 4, 2, 0.5), (9, 2, 2, 1.0)], n_bins=10
+    )
+    _assert_local_model_table(
+        calibrated._jdf.queryExecution().executedPlan().toString()
+    )
+
+    # the per-round weight table is built inside the training loop:
+    # capture the plan of the round the trainer actually runs
+    plans = []
+    real_round = classifier._gradient_frame
+
+    def spy(feats, docs_, wdf):
+        g = real_round(feats, docs_, wdf)
+        plans.append(g._jdf.queryExecution().executedPlan().toString())
+        return g
+
+    monkeypatch.setattr(classifier, "_gradient_frame", spy)
+    labelled = docs.select(
+        "doc_id", "text", (F.col("doc_id") % 2).cast("int").alias("label")
+    )
+    classifier.train_hashed_linear(
+        spark, labelled, n_buckets=64, n_rounds=1
+    )
+    assert len(plans) == 1
+    _assert_local_model_table(plans[0])

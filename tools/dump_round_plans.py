@@ -1,13 +1,16 @@
-"""Dump .explain('formatted') for every registry key into plans/r17/.
+"""Dump .explain('formatted') for every registry key into plans/r<round>/.
 
 Usage:
-    python tools/dump_r17_plans.py [suffix] [key ...]
+    python tools/dump_round_plans.py ROUND [suffix] [key ...]
 
-Writes plans/r17/<key>_<suffix>.txt (suffix defaults to "before").
-With no keys given, dumps every registered key. Build-time side
+Writes plans/r<ROUND>/<key>_<suffix>.txt (suffix defaults to "before").
+With no keys given, dumps every registered key. SPARK_GRAFT_SF_DIR
+picks the tables (default: the sf0.1 test data). Build-time side
 effects (eager localCheckpoints) run as usual; the dump is the
 ANALYZED/initial physical plan (AdaptiveSparkPlan isFinalPlan=false),
-which is what plan-shape claims in OPTIMIZATION_r17.md reference.
+which is what the plan-shape claims of a round's OPTIMIZATION log
+reference. Dump the same keys before and after a change and diff the
+two files to find the keys whose plan moved (each needs a GATE_PIN).
 """
 
 from __future__ import annotations
@@ -21,21 +24,24 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     args = sys.argv[1:]
-    suffix = args[0] if args else "before"
-    keys = args[1:]
+    if not args or not args[0].isdigit():
+        sys.exit(__doc__)
+    rnd = args[0]
+    suffix = args[1] if len(args) > 1 else "before"
+    keys = args[2:]
 
     from drive_bc_datapipeline_spark.plans import registry
     from drive_bc_datapipeline_spark.session import get_spark
 
     registry.load_all_plans()
     names = keys or sorted(registry.QUERIES)
-    spark = get_spark("dump_r17_plans")
+    spark = get_spark(f"dump_r{rnd}_plans")
     spark.sparkContext.setLogLevel("ERROR")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r17",
+        f"r{rnd}",
     )
     os.makedirs(out_dir, exist_ok=True)
     try:
