@@ -812,9 +812,9 @@ def run_ccnet_prefilter(
     rotation loop in ONE call: after the cut, the fitted LM tables +
     thresholds publish as a versioned gate model
     (``publish_ccnet_gate_model``), so every in-flight
-    ``start_versioned_ccnet_gate_stream`` sink swaps to this fit at
-    its next micro-batch boundary; the manifest records the
-    ``published_version``. ``tables`` injects the pre-fit
+    ``start_gate_stream(..., versioned_gate(spark, model_dir))`` sink
+    swaps to this fit at its next micro-batch boundary; the manifest
+    records the ``published_version``. ``tables`` injects the pre-fit
     ``[unigram, order2, ...]`` list (the
     ``_fit_reference_lm_tables`` shape) so a composing job can fit
     ONCE and publish exactly what the cut used; ``len(tables)`` must

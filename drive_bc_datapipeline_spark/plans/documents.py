@@ -198,9 +198,6 @@ def _verify_jaccard(
     cand: DataFrame,
     threshold: float,
     hash_col: str | None = None,
-    cand_docs: DataFrame | None = None,
-    pin_cand: bool = True,
-    spread_cand: bool = False,
 ) -> DataFrame:
     """Verify candidate pairs with exact Jaccard via per-doc hash sets.
 
@@ -220,14 +217,6 @@ def _verify_jaccard(
     (dedup_ngram_jaccard hashes before its blocking shuffles so every
     exchange carries 8-byte longs instead of shingle strings) pass its
     name to skip re-hashing here.
-
-    ``cand_docs`` (r18): callers whose blocking scheme lets them derive
-    the candidate-doc set WITHOUT consuming ``cand`` (e.g. ngram's
-    "every doc holding a rare shingle is in some pair") pass it here;
-    the docsets subtree then no longer depends on cand, which makes
-    ``pin_cand=False`` legal — cand is consumed exactly once (the
-    final join) and its pipeline runs lazily inside that job instead
-    of as an eager checkpoint barrier.
     """
     # Build hash-sets ONLY for docs that appear in some candidate pair:
     # blocking typically leaves a small fraction of the corpus as
@@ -242,30 +231,12 @@ def _verify_jaccard(
     # CacheManager for the whole session (one leaked cached plan per
     # invocation), while checkpoint blocks are freed by the
     # ContextCleaner when the returned DataFrame is garbage-collected.
-    if spread_cand:
-        # The verification stage below is CPU-bound (array_intersect
-        # per pair) but its input is BYTES-tiny, so AQE coalesces the
-        # candidate layout to a handful of partitions and the intersect
-        # runs nearly serial (r18 profile: 4 tasks, taskMax 1.07s of a
-        # 4.2s key). Hash-repartition to the session's parallelism
-        # INSIDE the pinned job (r17 entry 9b measured the same
-        # repartition AFTER the checkpoint as a losing extra barrier) —
-        # the exchange moves only (id, id) longs and the pinned layout
-        # then drives the verify stage at full width. defaultParallelism
-        # scales with the cluster, not a local constant.
-        cand = cand.repartition(
-            cand.sparkSession.sparkContext.defaultParallelism,
-            "doc_id_a",
-            "doc_id_b",
-        )
-    if pin_cand or cand_docs is None:
-        cand = cand.localCheckpoint(eager=True)
-    if cand_docs is None:
-        cand_docs = (
-            cand.select(F.col("doc_id_a").alias("doc_id"))
-            .unionByName(cand.select(F.col("doc_id_b").alias("doc_id")))
-            .distinct()
-        )
+    cand = cand.localCheckpoint(eager=True)
+    cand_docs = (
+        cand.select(F.col("doc_id_a").alias("doc_id"))
+        .unionByName(cand.select(F.col("doc_id_b").alias("doc_id")))
+        .distinct()
+    )
     h = (
         F.col(hash_col) if hash_col is not None else F.xxhash64("shingle")
     )
@@ -371,26 +342,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p.doc_id_a", "p.doc_id_b")
         .distinct()
     )
-    # r18 (verdict Next #3): a two-part replan was built, A/B'd and
-    # REVERTED — recorded so the next round doesn't re-derive it.
-    # (a) cand_docs from the rare screen (provably the same doc set:
-    #     df>=2 pairs every rare-shingle holder, and every pair comes
-    #     from a rare shingle) + (b) spread_cand (re-widen the pinned
-    #     candidate layout inside the pin job so the array_intersect
-    #     verify stage runs 32-wide instead of on ~4 AQE-coalesced
-    #     partitions; profile showed verify taskMax 1.07s of a 4.2s
-    #     key). Rows verified oracle-identical at sf0.001/0.01/0.1 and
-    #     the interleaved A/B read it −12% — but that A/B ran under
-    #     external CPU-steal (load 3–7), and THREE subsequent tracked
-    #     full-bench runs read the key consistently WORSE (5.03/4.73/
-    #     5.32 vs the 4.28 opening record) with its pair-memo graph
-    #     consumers dragged along: deriving cand_docs upstream makes
-    #     the docsets pin job recompute the rare aggregate that the
-    #     cand pin job already computes (rare runs twice per build),
-    #     which costs more than the union-distinct it saves, and the
-    #     wider verify stage doesn't pay for the extra exchange at
-    #     this candidate volume. The helper knobs (cand_docs/pin_cand/
-    #     spread_cand, default-off) stay for a quieter-box retest.
+    # r18 verify replan, A/B'd and reverted: OPTIMIZATION_r18.md §2
     return _verify_jaccard(shingles, cand, JACCARD_MIN, hash_col="h")
 
 

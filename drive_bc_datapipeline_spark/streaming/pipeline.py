@@ -606,62 +606,62 @@ def read_committed(spark: SparkSession, sink_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# J11 (r14 frontier) — the INCREMENTAL twin of the batch curation gate:
-# score each micro-batch of arriving documents with the broadcast E9
-# model and keep only rows clearing the E10-selected threshold,
-# written through the J10 exactly-once commit log. This is how a
-# 100 TB/day ingest keeps its training corpus current without nightly
-# full rescans: the model is driver-sized state (D-bounded weight
-# dict), scoring is the SAME E7 expression the batch gate uses
-# (broadcast weight join + per-doc mean + sigmoid — per-doc pure, so
-# streaming-over-batches equals the batch gate on the union, which the
-# test pins), and the sink's batch-id marker protocol closes
-# foreachBatch's at-least-once replay window. A replayed batch id
-# short-circuits on its marker BEFORE any scoring work re-runs.
+# J11-J13 — quality gates over a document stream: the INCREMENTAL twins
+# of the batch curation gates, one stream shape for every gate family.
+# Each micro-batch of arriving documents runs through a gate — a
+# ``kept_of_batch`` callable built once from a frozen model — and the
+# kept rows commit through the J10 exactly-once log. Scoring is per-doc
+# pure, so streaming over batches equals the batch gate on the union
+# (test-pinned for every family). The families compose:
+#
+#   classifier_gate   E7 hashed-linear score >= threshold (J11)
+#   ccnet_gate        optional H51 rule screen, then the frozen LM +
+#                     per-domain CCNet cut (J12)
+#   staged_gate       a CCNet gate, then a classifier gate on its
+#                     survivors — run_staged_curation's filterable
+#                     prefix (J13)
+#   versioned_gate    any of the three, rebuilt from model_dir's
+#                     CURRENT manifest at batch boundaries (J14)
+#
+# Models are frozen per stream (or per published version) on purpose:
+# CCNet thresholds are corpus-distribution quantiles and the classifier
+# threshold is a PR-curve pick, so refitting per batch would make the
+# cut depend on arrival order. A drifted corpus gets a new batch fit,
+# published as a new version. DSIR/selection stay batch-side for the
+# same reason: importance resampling is corpus-level state. Not a
+# transformWithState job: with a static model and stateless per-doc
+# scoring, foreachBatch + the commit log is the whole machine.
 # ---------------------------------------------------------------------------
 
-#: the J11 document-stream schema (the documents-table contract)
+#: the document-stream schema (the documents-table contract)
 DOC_STREAM_SCHEMA = "doc_id bigint, source string, text string"
+#: its columns, as the gates read them
+DOC_ID, DOC_SOURCE, DOC_TEXT = "doc_id", "source", "text"
 
 
-def _doc_stream_reader(
-    spark: SparkSession,
-    source_dir: str,
-    schema: str,
-    max_files_per_trigger: int | None,
-) -> DataFrame:
-    """The document file-stream source shared by the J11/J12/J13 gate
-    streams: explicit schema, optional per-trigger file cap (the
-    file-source equivalent of a per-shard read cap)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(source_dir)
-
-
-def _scored_gate_writer(sink_dir: str, kept_of_batch):
-    """The ONE copy of the gate-writer replay protocol shared by the
-    J11 classifier gate and the J12 CCNet gate (r15 review catch —
-    the scaffolding had been duplicated): marker probe FIRST (a
-    replayed committed batch must not build any scoring plan — base
+def gate_batch_writer(sink_dir: str, gate):
+    """foreachBatch callback: ``gate`` → exactly-once commit, the ONE
+    copy of the gate-writer replay protocol. The marker probe runs
+    FIRST: a replayed committed batch builds no scoring plan (base
     would skip the write, but only after its isEmpty probe executed
-    the plan once), then persist the kept frame around base's
-    isEmpty probe + write so each fresh batch scores ONCE.
+    the plan once). The kept frame is persisted around base's isEmpty
+    probe + write so each fresh batch scores ONCE.
 
-    ``kept_of_batch(batch_df)`` supplies the gate: either a bare
-    DataFrame, or ``(DataFrame, aux)`` where ``aux`` is a tuple of
-    intermediate frames the builder persisted for intra-batch reuse —
-    they are unpersisted here alongside the kept frame (r15 ADVICE:
-    the staged writer's per-batch localCheckpoint blocks were never
-    released, accumulating executor storage over a long stream)."""
+    ``gate(batch_df)`` returns either a bare DataFrame, or
+    ``(DataFrame, aux)`` where ``aux`` is a tuple of intermediate
+    frames the gate persisted for intra-batch reuse — they are
+    unpersisted here alongside the kept frame, so a long stream does
+    not accumulate one pinned block set per micro-batch. Split out from
+    ``start_gate_stream`` so crash/replay tests can drive the protocol
+    with synthetic batch ids."""
+    import os
+
     base = exactly_once_batch_writer(sink_dir)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         if os.path.exists(commit_marker_path(sink_dir, batch_id)):
             return
-        out = kept_of_batch(batch_df)
+        out = gate(batch_df)
         kept, aux = out if isinstance(out, tuple) else (out, ())
         kept = kept.persist()
         try:
@@ -674,14 +674,40 @@ def _scored_gate_writer(sink_dir: str, kept_of_batch):
     return write_batch
 
 
+def start_gate_stream(
+    spark: SparkSession,
+    source_dir: str,
+    sink_dir: str,
+    checkpoint_dir: str,
+    gate,
+    *,
+    max_files_per_trigger: int | None = None,
+) -> StreamingQuery:
+    """Stream documents (parquet, ``DOC_STREAM_SCHEMA``) from
+    ``source_dir`` through ``gate`` into the exactly-once sink at
+    ``sink_dir``. ``gate`` is any of ``classifier_gate``,
+    ``ccnet_gate``, ``staged_gate`` or ``versioned_gate``; building it
+    runs the model's validation, so a bad model raises before the
+    stream starts. ``max_files_per_trigger`` caps each micro-batch (the
+    file-source equivalent of a per-shard read cap)."""
+    reader = spark.readStream.schema(DOC_STREAM_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return (
+        reader.parquet(source_dir)
+        .writeStream.foreachBatch(gate_batch_writer(sink_dir, gate))
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def _resolve_gate_threshold(
     threshold: float, cal_table: list | None, curve_bins: int | None
 ) -> float:
-    """THE one copy of the calibrated-handoff resolution shared by
-    the J11 and J13 stream starters (r15 review catch — it had been
-    duplicated, with the two writers resolving at different levels):
-    a calibrated threshold arrives WITH its calibration table and
-    bin convention or not at all; writers always receive raw."""
+    """THE one copy of the calibrated-handoff resolution: a calibrated
+    threshold arrives WITH its calibration table and bin convention or
+    not at all; the gate always filters raw scores."""
     if cal_table is not None:
         from drive_bc_datapipeline_spark.operators.classifier import (
             calibrated_threshold_to_raw,
@@ -712,92 +738,19 @@ def _resolve_gate_threshold(
     return threshold
 
 
-def _classifier_kept(
-    weights: dict[int, float],
-    bias: float,
-    threshold: float,
-    *,
-    n_buckets: int,
-    text_col: str,
-    id_col: str,
-    n_gram: int = 1,
-):
-    """kept-of-batch builder for the E7 classifier gate — THE one
-    copy of the scoring body, composed by J11 alone and by J13 after
-    the CCNet stage (r15 review catch: the body had been duplicated,
-    so a fix to one writer would not reach the other)."""
-    from drive_bc_datapipeline_spark.operators.classifier import (
-        score_hashed_linear,
-    )
-
-    def kept(df: DataFrame) -> DataFrame:
-        scored = score_hashed_linear(
-            df.sparkSession,
-            df,
-            weights,
-            text_col=text_col,
-            id_col=id_col,
-            n_buckets=n_buckets,
-            bias=bias,
-            n_gram=n_gram,
-        )
-        return df.join(
-            scored.filter(F.col("score") >= threshold).select(
-                id_col, "score"
-            ),
-            id_col,
-        )
-
-    return kept
-
-
-def curation_gate_batch_writer(
-    sink_dir: str,
+def classifier_gate(
     weights: dict[int, float],
     bias: float,
     threshold: float,
     *,
     n_buckets: int = 4096,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_gram: int = 1,
-):
-    """foreachBatch callback: score → filter → exactly-once commit.
-
-    Split out from ``start_curation_gate_stream`` (the J10 pattern) so
-    crash/replay tests can drive the protocol with synthetic batch
-    ids. The kept rows keep every input column plus ``score`` — the
-    audit trail a curation sink needs (why did this doc pass?).
-    """
-    return _scored_gate_writer(
-        sink_dir,
-        _classifier_kept(
-            weights, bias, threshold,
-            n_buckets=n_buckets, text_col=text_col, id_col=id_col,
-            n_gram=n_gram,
-        ),
-    )
-
-
-def start_curation_gate_stream(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    *,
-    weights: dict[int, float],
-    bias: float,
-    threshold: float,
     cal_table: list | None = None,
     curve_bins: int | None = None,
-    n_buckets: int = 4096,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_gram: int = 1,
-    schema: str = DOC_STREAM_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """J11: stream documents → E7 quality gate → exactly-once sink.
+):
+    """J11: the E7 classifier gate — keep documents whose hashed-linear
+    score clears ``threshold``. Kept rows keep every input column plus
+    ``score``, the audit trail a curation sink needs.
 
     ``weights``/``bias``/``threshold`` come from the batch side —
     ``train_hashed_linear`` + the PR-curve selection. The gate filters
@@ -810,58 +763,45 @@ def start_curation_gate_stream(
       probability on the CALIBRATED scale; pass the manifest's
       ``calibration_table`` as ``cal_table`` (+ its ``curve_bins``)
       and the conversion through
-      ``classifier.calibrated_threshold_to_raw`` happens HERE. Feeding
-      a calibrated threshold without the table would silently apply
-      the wrong cut (the r14 ADVICE finding — previously only a
-      docstring warned), so the handoff is now an argument pair the
-      caller can't half-supply.
+      ``classifier.calibrated_threshold_to_raw`` happens HERE, so the
+      caller cannot apply a calibrated cut to raw scores by mistake.
 
-    Not a ``transformWithState`` job on purpose: the model is static
-    per stream, scoring is stateless per-doc, so foreachBatch +
-    commit log is the whole machine.
-    """
-    threshold = _resolve_gate_threshold(threshold, cal_table, curve_bins)
-    return (
-        _doc_stream_reader(spark, source_dir, schema, max_files_per_trigger)
-        .writeStream.foreachBatch(
-            curation_gate_batch_writer(
-                sink_dir,
-                weights,
-                bias,
-                threshold,
-                n_buckets=n_buckets,
-                text_col=text_col,
-                id_col=id_col,
-                n_gram=n_gram,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    ``n_gram`` and the handoff pair are validated here, once, not at
+    the first micro-batch."""
+    from drive_bc_datapipeline_spark.operators.classifier import (
+        _check_n_gram,
+        score_hashed_linear,
     )
 
+    _check_n_gram(n_gram)
+    threshold = _resolve_gate_threshold(threshold, cal_table, curve_bins)
 
-# ---------------------------------------------------------------------------
-# J12 (r15 frontier) — the INCREMENTAL twin of the CCNet prefilter
-# (H49/H50 → H48), mirroring J11's relationship to the batch
-# classifier gate: documents stream in, each micro-batch is scored
-# under the FROZEN reference LM and cut at the FROZEN per-domain
-# thresholds from a ccnet_manifest, and survivors flow through the
-# J10 exactly-once commit log. This is how a continuous ingest keeps
-# a CCNet-prefiltered corpus current without nightly full re-scores:
-# the model (LM relation + threshold table) is fit ONCE on the batch
-# side and never refit per batch — a drifting corpus needs a new
-# batch fit and a new stream, which is the honest semantics (CCNet
-# thresholds are corpus-distribution quantiles; updating them
-# per-batch would make the cut depend on arrival order).
-# ---------------------------------------------------------------------------
+    def kept(df: DataFrame) -> DataFrame:
+        scored = score_hashed_linear(
+            df.sparkSession,
+            df,
+            weights,
+            text_col=DOC_TEXT,
+            id_col=DOC_ID,
+            n_buckets=n_buckets,
+            bias=bias,
+            n_gram=n_gram,
+        )
+        return df.join(
+            scored.filter(F.col("score") >= threshold).select(
+                DOC_ID, "score"
+            ),
+            DOC_ID,
+        )
+
+    return kept
 
 
 def _higher_order_tables(bigram, trigram, fourgram, fivegram) -> list:
     """The supplied chain above order 1, with the contiguity guard —
-    THE one copy (r17): an order-m table without every lower order
-    has no backoff to interpolate onto, so a gap is a config error,
-    not a shorter chain."""
+    THE one copy: an order-m table without every lower order has no
+    backoff to interpolate onto, so a gap is a config error, not a
+    shorter chain."""
     supplied = [bigram, trigram, fourgram, fivegram]
     names = ("bigram", "trigram", "fourgram", "fivegram")
     present = [t is not None for t in supplied]
@@ -884,16 +824,13 @@ def _validate_lm_order(
     lm_order: int | None, bigram, trigram=None, fourgram=None,
     fivegram=None,
 ) -> None:
-    """THE one copy of the manifest-vs-model order check shared by the
-    J12 and J13 stream starters (r15 ADVICE): thresholds fit at
-    lm_order=2 applied with ``bigram=None`` silently score order-1
-    and the streamed kept-set diverges from the batch cut — only
-    alpha/lam were documented. Pass the batch manifest's
-    ``lm_order``; ``None`` skips the check (a caller without a
-    manifest already chose the scorer by supplying the tables).
-    r16 extended the check to order 3; r17 to the generic chain's
-    order 5: the supplied tables must be EXACTLY the manifest's
-    order in both directions."""
+    """THE one copy of the manifest-vs-model order check: thresholds
+    fit at lm_order=2 applied with ``bigram=None`` would silently score
+    order-1 and the streamed kept-set would diverge from the batch
+    cut. Pass the batch manifest's ``lm_order``; ``None`` skips the
+    check (a caller without a manifest already chose the scorer by
+    supplying the tables). The supplied tables must be EXACTLY the
+    manifest's order, in both directions, up to order 5."""
     if lm_order is None:
         return
     if lm_order not in (1, 2, 3, 4, 5):
@@ -927,8 +864,7 @@ def _check_ccnet_gate_inputs(
     thresholds, bigram, trigram, fourgram=None, fivegram=None
 ) -> None:
     """THE one copy of the CCNet gate's structural guards, shared by
-    the kept builder and both publishers (the text had been
-    copy-pasted three times — review catch)."""
+    the gate and both CCNet publishers."""
     if not thresholds:
         raise ValueError(
             "empty thresholds: fit the batch prefilter first — a "
@@ -938,29 +874,46 @@ def _check_ccnet_gate_inputs(
     _higher_order_tables(bigram, trigram, fourgram, fivegram)
 
 
-def _ccnet_kept(
+def ccnet_gate(
     lm,
     thresholds: dict[str, float],
     q: float,
     *,
-    bigram,
-    alpha: float,
-    lam: float,
-    text_col: str,
-    id_col: str,
-    source_col: str,
+    bigram=None,
     trigram=None,
     fourgram=None,
     fivegram=None,
+    alpha: float = 0.5,
+    lam: float = 0.7,
+    lm_order: int | None = None,
+    rules_config: dict | None = None,
 ):
-    """kept-of-batch builder for the frozen CCNet cut — THE one copy
-    of the H49/H50/H52 scoring body, composed by J12 alone and by J13
-    ahead of the classifier gate (r15 review catch: the body had
-    been duplicated, so a fix to one writer would not reach the
-    other). Validates and empty-checks the frozen model HERE, once
-    per builder, never per micro-batch. The higher-order tables
-    (r17: up to ``fivegram``) select the generic backoff chain at
-    their order; each requires every lower order."""
+    """J12: the frozen CCNet cut (H49/H50/H52 scoring → H48 per-domain
+    threshold), optionally behind the H51 rule screen.
+
+    ``lm`` is the unigram_lm_table relation; ``bigram`` … ``fivegram``
+    select the generic backoff chain at their order (each requires
+    every lower order). ``thresholds``/``q`` are the batch prefilter
+    manifest's {source: threshold} dict and quantile, applied through
+    apply_domain_filter's pre-collected-rows path, so a document from a
+    domain the fit never saw fails fast exactly like the batch job.
+    Pass the SAME alpha/lam the manifest records, and its ``lm_order``
+    so a thresholds/model order mismatch raises instead of silently
+    scoring the wrong order. Token-less docs drop (the H49 contract).
+    Kept rows carry n_toks/avg_nll as the audit trail.
+
+    ``rules_config`` is the batch job's stage-0 rule screen verbatim
+    (``None`` = the batch ran without rules; ``{}`` = rules on at the
+    Gopher defaults). The screen is part of the decision function: a
+    stream without it keeps rule-failing docs the batch cut dropped.
+    It is a lazy codegen'd predicate that fuses into the LM stage's
+    scan, and the flag columns it appends are dropped again (by
+    set-difference, so every active flag goes), so kept rows carry the
+    input schema.
+
+    The frozen model's validation probes (the OOV-row read; for the
+    chain also the vocab stats + same-reference anti-joins) run ONCE
+    here, never per micro-batch."""
     from drive_bc_datapipeline_spark.operators.domain_filter import (
         apply_domain_filter,
     )
@@ -970,7 +923,11 @@ def _ccnet_kept(
         score_docs_under_ngram_chain,
         unigram_oov_logp,
     )
+    from drive_bc_datapipeline_spark.operators.quality_rules import (
+        quality_rule_flags,
+    )
 
+    _validate_lm_order(lm_order, bigram, trigram, fourgram, fivegram)
     _check_ccnet_gate_inputs(thresholds, bigram, trigram, fourgram,
                              fivegram)
     threshold_rows = [
@@ -986,195 +943,51 @@ def _ccnet_kept(
         frozen_oov = unigram_oov_logp(lm)
 
     def kept(df: DataFrame) -> DataFrame:
+        if rules_config is not None:
+            flagged = quality_rule_flags(
+                df, text_col=DOC_TEXT, **rules_config
+            )
+            added = [c for c in flagged.columns if c not in df.columns]
+            df = flagged.filter(F.col("rules_ok")).drop(*added)
         if len(tables) >= 2:
             scores = score_docs_under_ngram_chain(
                 df, tables,
-                text_col=text_col, id_col=id_col, alpha=alpha, lam=lam,
+                text_col=DOC_TEXT, id_col=DOC_ID, alpha=alpha, lam=lam,
                 stats=frozen_stats,
             )
         else:
             scores = score_docs_under_lm(
-                df, lm, text_col=text_col, id_col=id_col,
+                df, lm, text_col=DOC_TEXT, id_col=DOC_ID,
                 oov_logp=frozen_oov,
             )
         return apply_domain_filter(
-            df.join(scores, id_col), threshold_rows, q,
-            source_col=source_col, score_col="avg_nll",
+            df.join(scores, DOC_ID), threshold_rows, q,
+            source_col=DOC_SOURCE, score_col="avg_nll",
         )
 
     return kept
 
 
-def ccnet_gate_batch_writer(
-    sink_dir: str,
-    lm,
-    thresholds: dict[str, float],
-    q: float,
-    *,
-    bigram=None,
-    trigram=None,
-    fourgram=None,
-    fivegram=None,
-    alpha: float = 0.5,
-    lam: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    rules_config: dict | None = None,
-):
-    """foreachBatch callback: LM-score → per-domain cut → exactly-once
-    commit. Split out (the J10/J11 pattern) so crash/replay tests can
-    drive the protocol with synthetic batch ids.
+def staged_gate(ccnet, classifier):
+    """J13: ``ccnet`` (a ``ccnet_gate``) then ``classifier`` (a
+    ``classifier_gate``) on its survivors. The kept set equals running
+    the batch prefilter's cut then the batch classifier gate on the
+    survivors (test-pinned); kept rows carry BOTH audit trails.
 
-    ``lm`` is the unigram_lm_table relation (pass ``bigram`` =
-    bigram_lm_table relation to score order-2 — same knobs as
-    run_ccnet_prefilter); ``thresholds`` is the manifest's
-    {source: threshold} dict applied through apply_domain_filter's
-    pre-collected-rows path, so a document from a domain the fit
-    never saw fails fast exactly like the batch job. Token-less docs
-    drop (the H49 contract — they scored nothing in the batch fit
-    either). Kept rows carry n_toks/avg_nll as the audit trail.
-
-    The frozen model's validation probes (the OOV-row read; for
-    bigram also the vocab stats + same-reference anti-join) run ONCE
-    here at writer build, not per micro-batch (r15 review catch) —
-    the lm/bigram relations never change for the writer's lifetime,
-    so per-batch work is exactly the H49/H50 scoring join shape.
-    """
-    kept = _ccnet_kept(
-        lm, thresholds, q, bigram=bigram, trigram=trigram,
-        fourgram=fourgram, fivegram=fivegram,
-        alpha=alpha, lam=lam,
-        text_col=text_col, id_col=id_col, source_col=source_col,
-    )
-    if rules_config is not None:
-        rules_kept = _rules_kept(text_col, rules_config)
-        inner = kept
-        kept = lambda df: inner(rules_kept(df))  # noqa: E731
-    return _scored_gate_writer(sink_dir, kept)
-
-
-def start_ccnet_gate_stream(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    *,
-    lm,
-    thresholds: dict[str, float],
-    q: float,
-    bigram=None,
-    trigram=None,
-    fourgram=None,
-    fivegram=None,
-    alpha: float = 0.5,
-    lam: float = 0.7,
-    lm_order: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    rules_config: dict | None = None,
-    schema: str = DOC_STREAM_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """J12: stream documents → frozen CCNet cut → exactly-once sink.
-
-    ``lm`` (+ optional ``bigram``) and ``thresholds``/``q`` come from
-    the batch side — ``unigram_lm_table``/``bigram_lm_table`` on the
-    reference corpus and ``run_ccnet_prefilter``'s manifest
-    (``m["thresholds"]``, ``m["q"]``) — so streamed and batch cuts
-    are THE SAME decision function, which the test pins
-    (streamed kept-set == the batch job's kept-set on the union).
-    Pass the SAME alpha/lam the manifest records when scoring
-    order-2, and the manifest's ``lm_order`` so a thresholds/model
-    order mismatch raises instead of silently scoring the wrong
-    order (the cal_table/curve_bins half-supply discipline). Not a
-    transformWithState job on purpose: the model is static per
-    stream, scoring is stateless per-doc, so foreachBatch + commit
-    log is the whole machine (the J11 argument).
-    """
-    _validate_lm_order(lm_order, bigram, trigram, fourgram, fivegram)
-    _check_ccnet_gate_inputs(thresholds, bigram, trigram, fourgram,
-                             fivegram)
-    return (
-        _doc_stream_reader(spark, source_dir, schema, max_files_per_trigger)
-        .writeStream.foreachBatch(
-            ccnet_gate_batch_writer(
-                sink_dir,
-                lm,
-                thresholds,
-                q,
-                bigram=bigram,
-                trigram=trigram,
-                fourgram=fourgram,
-                fivegram=fivegram,
-                alpha=alpha,
-                lam=lam,
-                text_col=text_col,
-                id_col=id_col,
-                source_col=source_col,
-                rules_config=rules_config,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# ---------------------------------------------------------------------------
-# J13 (r15) — the staged gate stream: run_staged_curation's filterable
-# prefix (CCNet LM cut → classifier quality gate) applied per
-# micro-batch through ONE commit log. DSIR/selection stay batch-side
-# on purpose: importance resampling against a target distribution is
-# corpus-level state — per-batch resampling would make the selection
-# depend on arrival order, the same argument that keeps J12's
-# thresholds frozen. A production ingest runs THIS stream to keep the
-# gated pool current and the batch DSIR/shard job on a schedule over
-# the pool.
-# ---------------------------------------------------------------------------
-
-
-def _rules_kept(text_col: str, config: dict):
-    """Stage-0 kept builder: the H51 Gopher/C4 rule screen as a lazy
-    codegen'd predicate over the batch (no shuffle, no join — it
-    fuses into the CCNet stage's own scan). Drops the ACTIVE flag
-    set it appended (set-difference, not a hardcoded list — the
-    jobs.py r16 leak class), so the kept rows carry the input schema
-    exactly. ``config`` is the batch job's ``rules_config`` verbatim
-    (JSON round-trips tuples to lists; ``quality_rule_flags`` only
-    iterates them)."""
-    from drive_bc_datapipeline_spark.operators.quality_rules import (
-        quality_rule_flags,
-    )
-
-    def kept(df: DataFrame) -> DataFrame:
-        flagged = quality_rule_flags(df, text_col=text_col, **config)
-        added = [c for c in flagged.columns if c not in df.columns]
-        return flagged.filter(F.col("rules_ok")).drop(*added)
-
-    return kept
-
-
-def _staged_kept_of_batch(ccnet_kept, classifier_kept, rules_kept=None):
-    """THE one copy of the staged composition's per-batch shape,
-    shared by the plain J13 writer and its versioned twin: pin the
-    prefiltered relation (persist + eager count — one materialization
-    so the classifier stage's two consumers read the cache instead of
-    re-running the LM joins; the releasable alternative to
-    localCheckpoint, r15 ADVICE) and hand it back as aux so the
-    shared writer releases it after the commit. A raise between the
-    persist and the writer's try/finally would leave the pin behind
-    (the r15 ADVICE accumulation class, one level earlier) — release
-    and re-raise here."""
+    The prefiltered relation is persisted and eagerly counted per
+    batch: the classifier consumes it twice (score + join-back), and
+    without the pin the LM scoring joins would re-execute per consumer.
+    It is handed back as aux so ``gate_batch_writer`` releases it after
+    the commit (persist rather than localCheckpoint, whose blocks have
+    no release hook and would pile up on executors over a long
+    stream). A raise between the persist and the writer's try/finally
+    would leave the pin behind, so it is released and re-raised here."""
 
     def kept_of_batch(batch_df: DataFrame):
-        if rules_kept is not None:
-            batch_df = rules_kept(batch_df)  # lazy — fuses into stage 1
-        prefiltered = ccnet_kept(batch_df).persist()
+        prefiltered = ccnet(batch_df).persist()
         try:
             prefiltered.count()
-            return classifier_kept(prefiltered), (prefiltered,)
+            return classifier(prefiltered), (prefiltered,)
         except BaseException:
             prefiltered.unpersist()
             raise
@@ -1182,152 +995,10 @@ def _staged_kept_of_batch(ccnet_kept, classifier_kept, rules_kept=None):
     return kept_of_batch
 
 
-def staged_gate_batch_writer(
-    sink_dir: str,
-    lm,
-    thresholds: dict[str, float],
-    q: float,
-    weights: dict[int, float],
-    bias: float,
-    threshold: float,
-    *,
-    bigram=None,
-    trigram=None,
-    fourgram=None,
-    fivegram=None,
-    alpha: float = 0.5,
-    lam: float = 0.7,
-    n_buckets: int = 4096,
-    n_gram: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    rules_config: dict | None = None,
-):
-    """foreachBatch callback: CCNet cut → classifier gate →
-    exactly-once commit — the literal COMPOSITION of the J12 and J11
-    kept-of-batch builders over the ONE shared replay protocol
-    (r15 review catch: the first version copy-pasted both bodies, so
-    a fix to either gate would not have reached this one). Batch
-    equivalence: the kept set equals running the batch prefilter's
-    cut then the batch classifier gate on the survivors
-    (test-pinned). Kept rows carry BOTH audit trails: n_toks/avg_nll
-    from the LM cut and score from the classifier.
-
-    ``threshold`` is RAW here (the J11 writer contract) — the
-    calibrated handoff resolves in ``start_staged_gate_stream`` via
-    the shared ``_resolve_gate_threshold``, exactly like J11.
-
-    The prefiltered relation is persisted per batch and eagerly
-    materialized: the classifier stage consumes it twice (score +
-    join-back), and without the pin the LM scoring joins would
-    re-execute ~3x per micro-batch (r15 review catch — the same
-    re-scan class the batch jobs eliminate with their checkpoint).
-    persist + the writer's aux-unpersist protocol rather than
-    localCheckpoint (r15 ADVICE): checkpoint blocks have no release
-    hook and would linger on executors until the driver GC'd the
-    reference, accumulating storage over a long-running stream.
-    """
-    ccnet_kept = _ccnet_kept(
-        lm, thresholds, q, bigram=bigram, trigram=trigram,
-        fourgram=fourgram, fivegram=fivegram,
-        alpha=alpha, lam=lam,
-        text_col=text_col, id_col=id_col, source_col=source_col,
-    )
-    classifier_kept = _classifier_kept(
-        weights, bias, threshold,
-        n_buckets=n_buckets, text_col=text_col, id_col=id_col,
-        n_gram=n_gram,
-    )
-    return _scored_gate_writer(
-        sink_dir,
-        _staged_kept_of_batch(
-            ccnet_kept,
-            classifier_kept,
-            rules_kept=(
-                _rules_kept(text_col, rules_config)
-                if rules_config is not None
-                else None
-            ),
-        ),
-    )
-
-
-def start_staged_gate_stream(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    *,
-    lm,
-    thresholds: dict[str, float],
-    q: float,
-    weights: dict[int, float],
-    bias: float,
-    threshold: float,
-    bigram=None,
-    trigram=None,
-    fourgram=None,
-    fivegram=None,
-    alpha: float = 0.5,
-    lam: float = 0.7,
-    lm_order: int | None = None,
-    cal_table: list | None = None,
-    curve_bins: int | None = None,
-    n_buckets: int = 4096,
-    n_gram: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    rules_config: dict | None = None,
-    schema: str = DOC_STREAM_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """J13: stream documents → frozen CCNet cut → frozen classifier
-    gate → exactly-once sink — ``run_staged_curation``'s filterable
-    prefix, incremental. Model state comes from the staged manifest:
-    the prefilter half (``m["prefilter"]["thresholds"]``/``["q"]`` +
-    the LM re-fit on the same reference, with its ``lm_order`` passed
-    through so a model/thresholds order mismatch raises) and the gate
-    half (the trained weights/bias and the curation manifest's
-    threshold, calibrated or raw). Everything is frozen per stream —
-    see J12's docstring for why refitting per batch would be wrong.
-    The calibrated handoff resolves here through the same
-    ``_resolve_gate_threshold`` J11 uses (same half-supply guards).
-    ``rules_config`` (r17): pass the staged manifest's value when the
-    batch job ran ``rules=True`` — the stage-0 screen is part of the
-    decision function, so a stream without it keeps rule-failing docs
-    the batch cut dropped (``None`` = batch ran without rules).
-    """
-    _validate_lm_order(lm_order, bigram, trigram, fourgram, fivegram)
-    threshold = _resolve_gate_threshold(threshold, cal_table, curve_bins)
-    return (
-        _doc_stream_reader(spark, source_dir, schema, max_files_per_trigger)
-        .writeStream.foreachBatch(
-            staged_gate_batch_writer(
-                sink_dir, lm, thresholds, q, weights, bias, threshold,
-                bigram=bigram, trigram=trigram,
-                fourgram=fourgram, fivegram=fivegram,
-                alpha=alpha, lam=lam,
-                n_buckets=n_buckets, n_gram=n_gram,
-                text_col=text_col, id_col=id_col,
-                source_col=source_col, rules_config=rules_config,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 # ---------------------------------------------------------------------------
-# J14 (r16) — model-rotation protocol for the frozen streaming gates
-# (the r15 verdict's What's-missing #5): the J11/J12/J13 gates freeze
-# their model per stream on purpose (per-batch refits would make the
-# cut arrival-order-dependent), so a drifted corpus needs a NEW batch
-# fit — and until now that meant a stop-the-world stream restart.
-# The protocol here hands an in-flight sink to the new model at
-# exactly a micro-batch boundary:
+# J14 — model rotation for the frozen gates: a drifted corpus gets a
+# new batch fit, and the in-flight sink hands over to it at exactly a
+# micro-batch boundary instead of a stop-the-world restart.
 #
 #   model_dir/gate_model_v{N}.json   immutable versioned manifests
 #   model_dir/CURRENT                the pointer, swapped by atomic
@@ -1335,19 +1006,18 @@ def start_staged_gate_stream(
 #                                    atomicity point the commit log
 #                                    already relies on
 #
-# The versioned writer resolves CURRENT once per micro-batch, AFTER
-# the replay-marker probe (a replayed committed batch never reads the
-# version) and BEFORE any scoring plan is built; the kept rows carry
-# a ``model_version`` audit column so every committed row names the
-# model that passed it. A version change rebuilds the kept builder
-# exactly once (the frozen model-state probes re-run per VERSION, not
-# per batch — the J12 probe-once discipline survives rotation).
+# versioned_gate resolves CURRENT once per micro-batch, AFTER the
+# replay-marker probe (a replayed committed batch never reads the
+# version) and BEFORE any scoring plan is built; the kept rows carry a
+# ``model_version`` audit column so every committed row names the model
+# that passed it. A version change rebuilds the gate exactly once (the
+# frozen model-state probes run per VERSION, not per batch).
 #
-# Semantics note (documented, test-pinned): a crash-window REWRITE
-# (marker removed, batch re-driven) scores under the version CURRENT
-# points to at rewrite time, not the version that first wrote it —
-# last-write-wins per batch is the commit log's contract, and the
-# audit column records which model produced the surviving rows.
+# A crash-window REWRITE (marker removed, batch re-driven) scores under
+# the version CURRENT points to at rewrite time, not the version that
+# first wrote it — last-write-wins per batch is the commit log's
+# contract, and the audit column records which model produced the
+# surviving rows.
 # ---------------------------------------------------------------------------
 
 GATE_MODEL_PREFIX = "gate_model_v"
@@ -1423,35 +1093,8 @@ def read_current_gate_model(model_dir: str) -> tuple[int, dict]:
         return version, json.load(f)
 
 
-def versioned_gate_batch_writer(
-    sink_dir: str, model_dir: str, kept_builder
-):
-    """foreachBatch callback wrapping ANY gate family with the
-    rotation protocol: per batch, resolve CURRENT → (rebuild the kept
-    builder iff the version changed) → gate → stamp ``model_version``
-    on the kept rows → exactly-once commit, all through the shared
-    ``_scored_gate_writer`` replay protocol.
-
-    ``kept_builder(manifest) -> kept_of_batch`` builds the frozen
-    gate from a published manifest (its model-state validation probes
-    run once per VERSION); the returned kept_of_batch follows the
-    ``_scored_gate_writer`` contract (bare frame or (frame, aux))."""
-    cache: dict = {"version": None, "kept": None}
-
-    def kept_of_batch(batch_df: DataFrame):
-        version, manifest = read_current_gate_model(model_dir)
-        if version != cache["version"]:
-            cache["kept"] = kept_builder(manifest)
-            cache["version"] = version
-        out = cache["kept"](batch_df)
-        kept, aux = out if isinstance(out, tuple) else (out, ())
-        return kept.withColumn("model_version", F.lit(version)), aux
-
-    return _scored_gate_writer(sink_dir, kept_of_batch)
-
-
-#: Required keys of a J11 classifier-gate manifest (the versioned
-#: JSON twin of start_curation_gate_stream's argument list).
+#: Required keys of a classifier-gate manifest (the versioned JSON
+#: twin of classifier_gate's argument list).
 CLASSIFIER_GATE_MANIFEST_KEYS = (
     "weights", "bias", "threshold", "n_buckets", "n_gram",
 )
@@ -1492,88 +1135,10 @@ def classifier_gate_manifest(
     }
 
 
-def _classifier_kept_of_manifest(
-    *, text_col: str = "text", id_col: str = "doc_id"
-):
-    """kept_builder for ``versioned_gate_batch_writer``: validate a
-    published classifier-gate manifest and build the frozen J11 gate
-    from it (threshold resolved through the shared calibrated-handoff
-    path)."""
-
-    def build(manifest: dict):
-        from drive_bc_datapipeline_spark.operators.classifier import (
-            _check_n_gram,
-        )
-
-        missing = [
-            k for k in CLASSIFIER_GATE_MANIFEST_KEYS if k not in manifest
-        ]
-        if missing:
-            raise ValueError(
-                f"gate manifest is missing {missing}: publish it with "
-                "classifier_gate_manifest"
-            )
-        # validate the feature order at BUILD time (once per version),
-        # not at the first micro-batch (review catch)
-        _check_n_gram(manifest["n_gram"])
-        cal_table = manifest.get("cal_table")
-        threshold = _resolve_gate_threshold(
-            manifest["threshold"], cal_table, manifest.get("curve_bins")
-        )
-        return _classifier_kept(
-            {int(b): float(w) for b, w in manifest["weights"].items()},
-            manifest["bias"],
-            threshold,
-            n_buckets=manifest["n_buckets"],
-            text_col=text_col,
-            id_col=id_col,
-            n_gram=manifest["n_gram"],
-        )
-
-    return build
-
-
-def start_versioned_curation_gate_stream(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    model_dir: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    schema: str = DOC_STREAM_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """J14: the J11 classifier gate under the rotation protocol — the
-    model comes from ``model_dir``'s CURRENT manifest instead of
-    arguments, re-resolved at every micro-batch boundary, and every
-    kept row carries ``model_version``. A re-fit batch job publishes
-    v2 with ``publish_gate_model`` and the in-flight stream swaps
-    over without a restart. Fails at start when nothing is published
-    (a gate with no model has no cut to apply)."""
-    read_current_gate_model(model_dir)  # fail-fast before the stream
-    return (
-        _doc_stream_reader(spark, source_dir, schema, max_files_per_trigger)
-        .writeStream.foreachBatch(
-            versioned_gate_batch_writer(
-                sink_dir,
-                model_dir,
-                _classifier_kept_of_manifest(
-                    text_col=text_col, id_col=id_col
-                ),
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-#: Required keys of a J12 CCNet-gate manifest (the versioned twin of
-#: start_ccnet_gate_stream's argument list; LM relations travel as
-#: parquet PATHS — vocabulary-bounded tables, written by the
-#: publisher, re-read once per version by the builder).
+#: Required keys of a CCNet-gate manifest (the versioned twin of
+#: ccnet_gate's argument list; LM relations travel as parquet PATHS —
+#: vocabulary-bounded tables, written by the publisher, re-read once
+#: per version when the gate is built).
 CCNET_GATE_MANIFEST_KEYS = (
     "thresholds", "q", "alpha", "lam", "lm_order", "lm_path",
 )
@@ -1601,12 +1166,10 @@ def publish_ccnet_gate_model(
     ``q``/``alpha``/``lam`` come from the batch prefilter's manifest;
     ``lm_order`` is derived from the supplied tables (the
     _validate_lm_order contract, so manifest and tables cannot
-    disagree at birth). ``rules_config`` (r17): the batch
-    prefilter's stage-0 rule screen, recorded so a rotated stream
-    applies THE SAME screen (``None`` = the batch ran without
-    rules; ``{}`` = rules on at the Gopher defaults)."""
-    import os
-
+    disagree at birth). ``rules_config``: the batch prefilter's
+    stage-0 rule screen, recorded so a rotated stream applies THE
+    SAME screen (``None`` = the batch ran without rules; ``{}`` =
+    rules on at the Gopher defaults)."""
     _check_ccnet_gate_inputs(thresholds, bigram, trigram, fourgram,
                              fivegram)
     version = _next_gate_version(model_dir)
@@ -1667,104 +1230,6 @@ def _write_ccnet_tables(
     return manifest
 
 
-def _ccnet_kept_of_manifest(
-    spark: SparkSession,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-):
-    """kept_builder for ``versioned_gate_batch_writer``: validate a
-    published CCNet-gate manifest, re-read its vocabulary-bounded LM
-    tables (once per VERSION — the builder runs on version change
-    only), and build the frozen J12 cut through the shared
-    ``_ccnet_kept`` body (its model probes also run here, once)."""
-
-    def build(manifest: dict):
-        missing = [
-            k for k in CCNET_GATE_MANIFEST_KEYS if k not in manifest
-        ]
-        if missing:
-            raise ValueError(
-                f"gate manifest is missing {missing}: publish it with "
-                "publish_ccnet_gate_model"
-            )
-        lm = spark.read.parquet(manifest["lm_path"])
-        bigram, trigram, fourgram, fivegram = (
-            spark.read.parquet(manifest[f"{name}_path"])
-            if manifest.get(f"{name}_path")
-            else None
-            for name in ("bigram", "trigram", "fourgram", "fivegram")
-        )
-        # manifest order vs stored tables cannot mismatch (publish
-        # derives one from the other), but a hand-rolled manifest can
-        _validate_lm_order(
-            manifest["lm_order"], bigram, trigram, fourgram, fivegram
-        )
-        kept = _ccnet_kept(
-            lm,
-            {s: float(t) for s, t in manifest["thresholds"].items()},
-            manifest["q"],
-            bigram=bigram,
-            trigram=trigram,
-            fourgram=fourgram,
-            fivegram=fivegram,
-            alpha=manifest["alpha"],
-            lam=manifest["lam"],
-            text_col=text_col,
-            id_col=id_col,
-            source_col=source_col,
-        )
-        rules_config = manifest.get("rules_config")
-        if rules_config is None:
-            return kept
-        rules_kept = _rules_kept(text_col, rules_config)
-        return lambda df: kept(rules_kept(df))
-
-    return build
-
-
-def start_versioned_ccnet_gate_stream(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    model_dir: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    schema: str = DOC_STREAM_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """J12 under the rotation protocol: the frozen CCNet cut comes
-    from ``model_dir``'s CURRENT manifest (LM tables re-read and
-    re-probed once per version), re-resolved at every micro-batch
-    boundary; every kept row carries ``model_version`` alongside the
-    n_toks/avg_nll audit trail. A re-fit batch prefilter publishes
-    the new tables + thresholds with ``publish_ccnet_gate_model`` and
-    the in-flight stream swaps over without a restart."""
-    read_current_gate_model(model_dir)  # fail-fast before the stream
-    return (
-        _doc_stream_reader(spark, source_dir, schema, max_files_per_trigger)
-        .writeStream.foreachBatch(
-            versioned_gate_batch_writer(
-                sink_dir,
-                model_dir,
-                _ccnet_kept_of_manifest(
-                    spark,
-                    text_col=text_col,
-                    id_col=id_col,
-                    source_col=source_col,
-                ),
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def publish_staged_gate_model(
     model_dir: str,
     *,
@@ -1787,7 +1252,7 @@ def publish_staged_gate_model(
     rules_config: dict | None = None,
 ) -> int:
     """Publish BOTH halves of the staged gate (CCNet prefilter +
-    classifier) as ONE versioned model, so a J13-shaped sink rotates
+    classifier) as ONE versioned model, so a staged sink rotates
     atomically — publishing the halves separately would let a stream
     resolve a new prefilter against an old classifier mid-swap. The
     LM tables land under the version dir before the manifest swap
@@ -1795,14 +1260,13 @@ def publish_staged_gate_model(
     travels through ``classifier_gate_manifest`` (same calibrated
     pair-or-nothing rule).
 
-    ``rules_config`` (r17): the batch job's stage-0 rule screen,
-    recorded in the manifest so a rotated stream applies THE SAME
-    screen — a staged job run with ``rules=True`` whose thresholds
-    and weights were fit on rule-survivors would otherwise publish a
-    gate that keeps rule-failing docs the batch cut dropped (the
-    _validate_lm_order divergence class, r16 ADVICE). ``None`` =
-    the batch job ran without rules; ``{}`` = rules on at the
-    published Gopher defaults."""
+    ``rules_config``: the batch job's stage-0 rule screen, recorded in
+    the manifest so a rotated stream applies THE SAME screen — a
+    staged job run with ``rules=True`` whose thresholds and weights
+    were fit on rule-survivors would otherwise publish a gate that
+    keeps rule-failing docs the batch cut dropped. ``None`` = the
+    batch job ran without rules; ``{}`` = rules on at the published
+    Gopher defaults."""
     _check_ccnet_gate_inputs(thresholds, bigram, trigram, fourgram,
                              fivegram)
     version = _next_gate_version(model_dir)
@@ -1825,78 +1289,104 @@ def publish_staged_gate_model(
     return _publish_gate_version(model_dir, version, manifest)
 
 
-def _staged_kept_of_manifest(
-    spark: SparkSession,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-):
-    """kept_builder for the versioned staged gate: both halves build
-    through their own manifest builders (model probes once per
-    version) and compose through the ONE staged per-batch shape."""
-    ccnet_build = _ccnet_kept_of_manifest(
-        spark, text_col=text_col, id_col=id_col, source_col=source_col
-    )
-    classifier_build = _classifier_kept_of_manifest(
-        text_col=text_col, id_col=id_col
-    )
-
-    def build(manifest: dict):
-        missing = [k for k in ("ccnet", "classifier") if k not in manifest]
-        if missing:
-            raise ValueError(
-                f"staged gate manifest is missing {missing}: publish "
-                "it with publish_staged_gate_model"
-            )
-        rules_config = manifest.get("rules_config")
-        return _staged_kept_of_batch(
-            ccnet_build(manifest["ccnet"]),
-            classifier_build(manifest["classifier"]),
-            rules_kept=(
-                _rules_kept(text_col, rules_config)
-                if rules_config is not None
-                else None
-            ),
+def _gate_of_manifest(spark: SparkSession, manifest: dict):
+    """Build the frozen gate a published manifest describes,
+    dispatching on its ``"gate"`` family. ``versioned_gate`` calls this
+    once per VERSION, so the model's validation probes (and a CCNet
+    model's table reads) run once per version, not per batch. A staged
+    manifest builds its two halves through this same dispatch, its
+    rule screen riding on the CCNet half."""
+    family = manifest.get("gate")
+    required = {
+        "classifier": (CLASSIFIER_GATE_MANIFEST_KEYS,
+                       "gate manifest", "classifier_gate_manifest"),
+        "ccnet": (CCNET_GATE_MANIFEST_KEYS,
+                  "gate manifest", "publish_ccnet_gate_model"),
+        "staged": (("ccnet", "classifier"),
+                   "staged gate manifest", "publish_staged_gate_model"),
+    }
+    if family not in required:
+        raise ValueError(
+            f"gate manifest family {family!r} is not one of "
+            f"{sorted(required)}: publish it with one of the gate "
+            "publishers"
         )
-
-    return build
-
-
-def start_versioned_staged_gate_stream(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    model_dir: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    schema: str = DOC_STREAM_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """J13 under the rotation protocol: the full staged cut (CCNet
-    prefilter → classifier gate) from ``model_dir``'s CURRENT
-    manifest, both halves swapping TOGETHER at a micro-batch
-    boundary; kept rows carry all three audit trails
-    (n_toks/avg_nll, score, model_version)."""
-    read_current_gate_model(model_dir)  # fail-fast before the stream
-    return (
-        _doc_stream_reader(spark, source_dir, schema, max_files_per_trigger)
-        .writeStream.foreachBatch(
-            versioned_gate_batch_writer(
-                sink_dir,
-                model_dir,
-                _staged_kept_of_manifest(
-                    spark,
-                    text_col=text_col,
-                    id_col=id_col,
-                    source_col=source_col,
-                ),
-            )
+    keys, what, publisher = required[family]
+    missing = [k for k in keys if k not in manifest]
+    if missing:
+        raise ValueError(
+            f"{what} is missing {missing}: publish it with {publisher}"
         )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    if family == "classifier":
+        return classifier_gate(
+            {int(b): float(w) for b, w in manifest["weights"].items()},
+            manifest["bias"],
+            manifest["threshold"],
+            n_buckets=manifest["n_buckets"],
+            n_gram=manifest["n_gram"],
+            cal_table=manifest.get("cal_table"),
+            curve_bins=manifest.get("curve_bins"),
+        )
+    if family == "staged":
+        return staged_gate(
+            _gate_of_manifest(spark, {
+                **manifest["ccnet"],
+                "rules_config": manifest.get("rules_config"),
+            }),
+            _gate_of_manifest(spark, manifest["classifier"]),
+        )
+    higher = {
+        name: spark.read.parquet(manifest[f"{name}_path"])
+        if manifest.get(f"{name}_path")
+        else None
+        for name in ("bigram", "trigram", "fourgram", "fivegram")
+    }
+    return ccnet_gate(
+        spark.read.parquet(manifest["lm_path"]),
+        {s: float(t) for s, t in manifest["thresholds"].items()},
+        manifest["q"],
+        **higher,
+        alpha=manifest["alpha"],
+        lam=manifest["lam"],
+        # publish derives lm_order from the stored tables, but a
+        # hand-rolled manifest can disagree with them
+        lm_order=manifest["lm_order"],
+        rules_config=manifest.get("rules_config"),
     )
+
+
+def versioned_gate(spark: SparkSession, model_dir: str):
+    """J14: the gate ``model_dir``'s CURRENT manifest describes,
+    re-resolved at every micro-batch boundary; every kept row carries
+    ``model_version``. A re-fit batch job publishes the next version
+    (``publish_gate_model``, ``publish_ccnet_gate_model`` or
+    ``publish_staged_gate_model``) and the in-flight stream swaps over
+    without a restart, the gate rebuilt once per version.
+
+    CURRENT is read once here, so building the gate fails when nothing
+    is published (a gate with no model has no cut to apply), and that
+    first manifest fixes the stream's gate family: a later version of
+    another family raises instead of changing what the sink's rows
+    mean."""
+    _version, first = read_current_gate_model(model_dir)
+    family = first.get("gate")
+    built: dict = {"version": None, "gate": None}
+
+    def kept_of_batch(batch_df: DataFrame):
+        version, manifest = read_current_gate_model(model_dir)
+        if version != built["version"]:
+            if manifest.get("gate") != family:
+                raise ValueError(
+                    f"gate model v{version} under {model_dir!r} is a "
+                    f"{manifest.get('gate')!r} gate but this stream "
+                    f"started on a {family!r} gate: a stream keeps "
+                    "one gate family — start a new stream (new sink) "
+                    "for the other family"
+                )
+            built["gate"] = _gate_of_manifest(spark, manifest)
+            built["version"] = version
+        out = built["gate"](batch_df)
+        kept, aux = out if isinstance(out, tuple) else (out, ())
+        return kept.withColumn("model_version", F.lit(version)), aux
+
+    return kept_of_batch

@@ -709,9 +709,9 @@ def test_ccnet_prefilter_with_rule_screen(spark, tmp_path):
     _v, manifest = sp.read_current_gate_model(model_dir)
     assert manifest["rules_config"] == cfg
     sink = str(tmp_path / "ccr_sink")
-    sp.versioned_gate_batch_writer(
-        sink, model_dir, sp._ccnet_kept_of_manifest(spark)
-    )(docs, 0)
+    sp.gate_batch_writer(sink, sp.versioned_gate(spark, model_dir))(
+        docs, 0
+    )
     got = sorted(
         r["doc_id"] for r in sp.read_committed(spark, sink).collect()
     )

@@ -392,9 +392,9 @@ def test_curation_gate_stream_matches_batch(spark, tmp_path):
     w = _gate_model(spark)
     src = _write_doc_source(tmp_path, spark)
     sink = str(tmp_path / "gate_sink")
-    sp.start_curation_gate_stream(
+    sp.start_gate_stream(
         spark, src, sink, str(tmp_path / "ck1"),
-        weights=w, bias=0.0, threshold=0.6, n_buckets=64,
+        sp.classifier_gate(w, 0.0, 0.6, n_buckets=64),
         max_files_per_trigger=1,  # force multiple micro-batches
     ).awaitTermination(120)
 
@@ -419,9 +419,9 @@ def test_curation_gate_stream_matches_batch(spark, tmp_path):
 
     # full replay with a fresh checkpoint (every batch id re-delivers)
     # changes nothing — exactly once end to end
-    sp.start_curation_gate_stream(
+    sp.start_gate_stream(
         spark, src, sink, str(tmp_path / "ck2"),
-        weights=w, bias=0.0, threshold=0.6, n_buckets=64,
+        sp.classifier_gate(w, 0.0, 0.6, n_buckets=64),
         max_files_per_trigger=1,
     ).awaitTermination(120)
     again = sorted(
@@ -439,8 +439,8 @@ def test_curation_gate_crash_replay_protocol(spark, tmp_path):
 
     w = _gate_model(spark)
     sink = str(tmp_path / "gate_sink")
-    write_batch = sp.curation_gate_batch_writer(
-        sink, w, 0.0, 0.6, n_buckets=64
+    write_batch = sp.gate_batch_writer(
+        sink, sp.classifier_gate(w, 0.0, 0.6, n_buckets=64)
     )
     df = spark.createDataFrame(DOCS, sp.DOC_STREAM_SCHEMA)
 
@@ -522,9 +522,9 @@ def test_curation_gate_stream_calibrated_handoff(spark, tmp_path):
 
     src = _write_doc_source(tmp_path, spark)
     sink = str(tmp_path / "cal_sink")
-    sp.start_curation_gate_stream(
+    sp.start_gate_stream(
         spark, src, sink, str(tmp_path / "ck_cal"),
-        weights=w, bias=b, threshold=raw_t, n_buckets=64,
+        sp.classifier_gate(w, b, raw_t, n_buckets=64),
         max_files_per_trigger=1,
     ).awaitTermination(120)
     got = sorted(
@@ -550,10 +550,11 @@ def test_curation_gate_stream_calibrated_handoff(spark, tmp_path):
     # table and the stream performs the inversion itself; kept set
     # identical to the hand-inverted run above
     sink2 = str(tmp_path / "cal_sink2")
-    sp.start_curation_gate_stream(
+    sp.start_gate_stream(
         spark, src, sink2, str(tmp_path / "ck_cal2"),
-        weights=w, bias=b, threshold=t_cal,
-        cal_table=table, curve_bins=n_bins, n_buckets=64,
+        sp.classifier_gate(
+            w, b, t_cal, cal_table=table, curve_bins=n_bins, n_buckets=64,
+        ),
         max_files_per_trigger=1,
     ).awaitTermination(120)
     got2 = sorted(
@@ -571,25 +572,25 @@ def test_curation_gate_stream_calibrated_handoff(spark, tmp_path):
 
     assert any(row[0] >= n_bins // 2 for row in table)  # guard fires
     with _pytest.raises(ValueError, match="same n_bins"):
-        sp.start_curation_gate_stream(
+        sp.start_gate_stream(
             spark, src, str(tmp_path / "bad"), str(tmp_path / "ck_bad"),
-            weights=w, bias=b, threshold=t_cal,
-            cal_table=table, curve_bins=n_bins // 2, n_buckets=64,
+            sp.classifier_gate(
+                w, b, t_cal,
+                cal_table=table, curve_bins=n_bins // 2, n_buckets=64,
+            ),
         )
     # ...and the undetectable direction (a defaulted/omitted
     # curve_bins larger than the fit would silently rescale the cut)
     # is closed by refusing a half-supplied pair outright
     with _pytest.raises(ValueError, match="without curve_bins"):
-        sp.start_curation_gate_stream(
+        sp.start_gate_stream(
             spark, src, str(tmp_path / "bad2"), str(tmp_path / "ck_b2"),
-            weights=w, bias=b, threshold=t_cal,
-            cal_table=table, n_buckets=64,
+            sp.classifier_gate(w, b, t_cal, cal_table=table, n_buckets=64),
         )
     with _pytest.raises(ValueError, match="without cal_table"):
-        sp.start_curation_gate_stream(
+        sp.start_gate_stream(
             spark, src, str(tmp_path / "bad3"), str(tmp_path / "ck_b3"),
-            weights=w, bias=b, threshold=raw_t,
-            curve_bins=n_bins, n_buckets=64,
+            sp.classifier_gate(w, b, raw_t, curve_bins=n_bins, n_buckets=64),
         )
 
 
@@ -639,9 +640,9 @@ def test_ccnet_gate_stream_matches_batch(spark, tmp_path):
     docs.repartition(3).write.parquet(src)
     lm = unigram_lm_table(ref, alpha=m["alpha"])
     sink = str(tmp_path / "ccnet_sink")
-    sp.start_ccnet_gate_stream(
+    sp.start_gate_stream(
         spark, src, sink, str(tmp_path / "ck_ccnet"),
-        lm=lm, thresholds=m["thresholds"], q=m["q"],
+        sp.ccnet_gate(lm, m["thresholds"], m["q"]),
         max_files_per_trigger=1,  # force multiple micro-batches
     ).awaitTermination(120)
     got = sorted(
@@ -675,7 +676,9 @@ def test_ccnet_gate_writer_replay_and_guards(spark, tmp_path):
     # thresholds high enough to keep the reference-like docs
     thresholds = {"web": 10.0, "book": 10.0}
     sink = str(tmp_path / "w_sink")
-    write_batch = sp.ccnet_gate_batch_writer(sink, lm, thresholds, 0.5)
+    write_batch = sp.gate_batch_writer(
+        sink, sp.ccnet_gate(lm, thresholds, 0.5)
+    )
 
     write_batch(docs, 0)
     n0 = sp.read_committed(spark, sink).count()
@@ -697,9 +700,9 @@ def test_ccnet_gate_writer_replay_and_guards(spark, tmp_path):
 
     # empty thresholds refused before any stream starts
     with pytest.raises(ValueError, match="empty thresholds"):
-        sp.start_ccnet_gate_stream(
+        sp.start_gate_stream(
             spark, str(tmp_path / "x"), str(tmp_path / "y"),
-            str(tmp_path / "z"), lm=lm, thresholds={}, q=0.5,
+            str(tmp_path / "z"), sp.ccnet_gate(lm, {}, 0.5),
         )
 
 
@@ -736,9 +739,12 @@ def test_ccnet_gate_writer_bigram_arm(spark, tmp_path):
     lm = unigram_lm_table(ref, alpha=m["alpha"])
     bg = bigram_lm_table(ref)
     sink = str(tmp_path / "bg_sink")
-    write_batch = sp.ccnet_gate_batch_writer(
-        sink, lm, m["thresholds"], m["q"],
-        bigram=bg, alpha=m["alpha"], lam=m["lam"],
+    write_batch = sp.gate_batch_writer(
+        sink,
+        sp.ccnet_gate(
+            lm, m["thresholds"], m["q"],
+            bigram=bg, alpha=m["alpha"], lam=m["lam"],
+        ),
     )
     write_batch(docs, 0)
     assert sorted(
@@ -772,8 +778,9 @@ def test_ccnet_gate_writer_probes_model_once(spark, tmp_path, monkeypatch):
         )[1],
     )
     docs = spark.createDataFrame(CCNET_DOCS, sp.DOC_STREAM_SCHEMA)
-    write_batch = sp.ccnet_gate_batch_writer(
-        str(tmp_path / "p_sink"), lm, {"web": 10.0, "book": 10.0}, 0.5
+    write_batch = sp.gate_batch_writer(
+        str(tmp_path / "p_sink"),
+        sp.ccnet_gate(lm, {"web": 10.0, "book": 10.0}, 0.5),
     )
     assert calls == {"oov": 1, "stats": 0}  # probed at build
     write_batch(docs, 0)
@@ -856,12 +863,15 @@ def test_staged_gate_stream_matches_batch_prefix(spark, tmp_path):
     src_dir = str(tmp_path / "src")
     docs.repartition(3).write.parquet(src_dir)
     sink = str(tmp_path / "sink")
-    sp.start_staged_gate_stream(
+    ccnet = sp.ccnet_gate(
+        lm, m["prefilter"]["thresholds"], m["prefilter"]["q"]
+    )
+    sp.start_gate_stream(
         spark, src_dir, sink, str(tmp_path / "ck"),
-        lm=lm, thresholds=m["prefilter"]["thresholds"],
-        q=m["prefilter"]["q"],
-        weights=w, bias=b, threshold=mw["threshold"],
-        n_buckets=64, max_files_per_trigger=1,
+        sp.staged_gate(
+            ccnet, sp.classifier_gate(w, b, mw["threshold"], n_buckets=64)
+        ),
+        max_files_per_trigger=1,
     ).awaitTermination(120)
     got = sorted(
         r["doc_id"] for r in sp.read_committed(spark, sink).collect()
@@ -898,12 +908,16 @@ def test_staged_gate_stream_matches_batch_prefix(spark, tmp_path):
     )
     raw_t = calibrated_threshold_to_raw(cal_table, t_cal, n_bins=n_bins)
     cal_sink = str(tmp_path / "cal_sink")
-    sp.start_staged_gate_stream(
+    sp.start_gate_stream(
         spark, src_dir, cal_sink, str(tmp_path / "cal_ck"),
-        lm=lm, thresholds=m["prefilter"]["thresholds"],
-        q=m["prefilter"]["q"], weights=w, bias=b,
-        threshold=t_cal, cal_table=cal_table, curve_bins=n_bins,
-        n_buckets=64, max_files_per_trigger=1,
+        sp.staged_gate(
+            ccnet,
+            sp.classifier_gate(
+                w, b, t_cal, cal_table=cal_table, curve_bins=n_bins,
+                n_buckets=64,
+            ),
+        ),
+        max_files_per_trigger=1,
     ).awaitTermination(120)
     got_cal = sorted(
         r["doc_id"]
@@ -922,18 +936,24 @@ def test_staged_gate_stream_matches_batch_prefix(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="without cal_table"):
-        sp.start_staged_gate_stream(
+        sp.start_gate_stream(
             spark, src_dir, str(tmp_path / "s2"), str(tmp_path / "c2"),
-            lm=lm, thresholds=m["prefilter"]["thresholds"],
-            q=m["prefilter"]["q"], weights=w, bias=b,
-            threshold=mw["threshold"], curve_bins=100, n_buckets=64,
+            sp.staged_gate(
+                ccnet,
+                sp.classifier_gate(
+                    w, b, mw["threshold"], curve_bins=100, n_buckets=64
+                ),
+            ),
         )
     with _pytest.raises(ValueError, match="without curve_bins"):
-        sp.start_staged_gate_stream(
+        sp.start_gate_stream(
             spark, src_dir, str(tmp_path / "s3"), str(tmp_path / "c3"),
-            lm=lm, thresholds=m["prefilter"]["thresholds"],
-            q=m["prefilter"]["q"], weights=w, bias=b,
-            threshold=t_cal, cal_table=cal_table, n_buckets=64,
+            sp.staged_gate(
+                ccnet,
+                sp.classifier_gate(
+                    w, b, t_cal, cal_table=cal_table, n_buckets=64
+                ),
+            ),
         )
 
 
@@ -969,8 +989,12 @@ def test_staged_gate_writer_replay_protocol(spark, tmp_path):
         sp.DOC_STREAM_SCHEMA,
     )
     sink = str(tmp_path / "rp_sink")
-    write_batch = sp.staged_gate_batch_writer(
-        sink, lm, {"web": 50.0}, 0.9, w, b, 0.6, n_buckets=64
+    write_batch = sp.gate_batch_writer(
+        sink,
+        sp.staged_gate(
+            sp.ccnet_gate(lm, {"web": 50.0}, 0.9),
+            sp.classifier_gate(w, b, 0.6, n_buckets=64),
+        ),
     )
     write_batch(docs, 0)
     n0 = sp.read_committed(spark, sink).count()
@@ -1009,18 +1033,19 @@ def test_gate_stream_lm_order_guard(spark, tmp_path):
     w, b = train_hashed_linear(spark, seeds, n_buckets=64, n_rounds=5)
 
     def j12(**kw):
-        return sp.start_ccnet_gate_stream(
+        return sp.start_gate_stream(
             spark, str(tmp_path / "s"), str(tmp_path / "o"),
-            str(tmp_path / "c"), lm=lm, thresholds={"web": 50.0},
-            q=0.9, **kw,
+            str(tmp_path / "c"), sp.ccnet_gate(lm, {"web": 50.0}, 0.9, **kw),
         )
 
     def j13(**kw):
-        return sp.start_staged_gate_stream(
+        return sp.start_gate_stream(
             spark, str(tmp_path / "s"), str(tmp_path / "o2"),
-            str(tmp_path / "c2"), lm=lm, thresholds={"web": 50.0},
-            q=0.9, weights=w, bias=b, threshold=0.6, n_buckets=64,
-            **kw,
+            str(tmp_path / "c2"),
+            sp.staged_gate(
+                sp.ccnet_gate(lm, {"web": 50.0}, 0.9, **kw),
+                sp.classifier_gate(w, b, 0.6, n_buckets=64),
+            ),
         )
 
     for start in (j12, j13):
@@ -1062,8 +1087,12 @@ def test_staged_gate_writer_releases_prefiltered_storage(spark, tmp_path):
         sp.DOC_STREAM_SCHEMA,
     )
     sink = str(tmp_path / "rel_sink")
-    write_batch = sp.staged_gate_batch_writer(
-        sink, lm, {"web": 50.0}, 0.9, w, b, 0.6, n_buckets=64
+    write_batch = sp.gate_batch_writer(
+        sink,
+        sp.staged_gate(
+            sp.ccnet_gate(lm, {"web": 50.0}, 0.9),
+            sp.classifier_gate(w, b, 0.6, n_buckets=64),
+        ),
     )
     def pinned_ids():
         m = spark.sparkContext._jsc.getPersistentRDDs()
@@ -1116,8 +1145,8 @@ def test_curation_gate_writer_n_gram_arm(spark, tmp_path):
     )
     assert batch_kept == [100, 101, 102, 103]
     sink = str(tmp_path / "ng_sink")
-    write_batch = sp.curation_gate_batch_writer(
-        sink, w, b, 0.5, n_buckets=256, n_gram=2
+    write_batch = sp.gate_batch_writer(
+        sink, sp.classifier_gate(w, b, 0.5, n_buckets=256, n_gram=2)
     )
     write_batch(docs, 0)
     got = sorted(
@@ -1165,8 +1194,8 @@ def test_gate_model_swap_at_batch_boundary(spark, tmp_path):
     )
     assert v1 == 1
     sink = str(tmp_path / "vsink")
-    write_batch = sp.versioned_gate_batch_writer(
-        sink, model_dir, sp._classifier_kept_of_manifest()
+    write_batch = sp.gate_batch_writer(
+        sink, sp.versioned_gate(spark, model_dir)
     )
     write_batch(docs, 0)
     rows0 = sp.read_committed(spark, sink).collect()
@@ -1217,18 +1246,21 @@ def test_gate_model_version_resolved_once_per_batch(spark, tmp_path, monkeypatch
         reads["n"] += 1
         return real_read(d)
 
-    monkeypatch.setattr(sp, "read_current_gate_model", counting_read)
     builds = {"n": 0}
-    real_builder = sp._classifier_kept_of_manifest()
+    real_builder = sp._gate_of_manifest
 
-    def counting_builder(manifest):
+    def counting_builder(spark_, manifest):
         builds["n"] += 1
-        return real_builder(manifest)
+        return real_builder(spark_, manifest)
 
     sink = str(tmp_path / "vsink2")
-    write_batch = sp.versioned_gate_batch_writer(
-        sink, model_dir, counting_builder
+    # built before the read is counted: building reads CURRENT once
+    # (fail-fast), the per-batch reads are what this test pins
+    write_batch = sp.gate_batch_writer(
+        sink, sp.versioned_gate(spark, model_dir)
     )
+    monkeypatch.setattr(sp, "read_current_gate_model", counting_read)
+    monkeypatch.setattr(sp, "_gate_of_manifest", counting_builder)
     write_batch(docs, 0)
     write_batch(docs, 1)
     assert reads["n"] == 2 and builds["n"] == 1  # 2 batches, 1 version
@@ -1251,9 +1283,9 @@ def test_gate_model_publish_and_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="publish"):
         sp.read_current_gate_model(model_dir)
     with pytest.raises(ValueError, match="publish"):
-        sp.start_versioned_curation_gate_stream(
+        sp.start_gate_stream(
             spark, str(tmp_path / "s"), str(tmp_path / "o"),
-            str(tmp_path / "c"), model_dir,
+            str(tmp_path / "c"), sp.versioned_gate(spark, model_dir),
         )
     # the calibrated pair travels whole or not at all
     with pytest.raises(ValueError, match="pair"):
@@ -1261,10 +1293,9 @@ def test_gate_model_publish_and_guards(spark, tmp_path):
     # a hand-rolled manifest missing keys fails by name at build
     v = sp.publish_gate_model(model_dir, {"gate": "classifier"})
     assert v == 1
-    build = sp._classifier_kept_of_manifest()
     _version, manifest = sp.read_current_gate_model(model_dir)
     with pytest.raises(ValueError, match="missing"):
-        build(manifest)
+        sp._gate_of_manifest(spark, manifest)
     # weights round-trip through JSON string keys intact
     sp.publish_gate_model(
         model_dir, sp.classifier_gate_manifest(w, b, 0.6, n_buckets=64)
@@ -1285,8 +1316,9 @@ def test_versioned_gate_stream_end_to_end(spark, tmp_path):
     src = str(tmp_path / "vsrc")
     docs.write.parquet(src)
     sink = str(tmp_path / "vsink3")
-    sp.start_versioned_curation_gate_stream(
-        spark, src, sink, str(tmp_path / "vck"), model_dir,
+    sp.start_gate_stream(
+        spark, src, sink, str(tmp_path / "vck"),
+        sp.versioned_gate(spark, model_dir),
     ).awaitTermination(120)
     rows = sp.read_committed(spark, sink).collect()
     assert sorted(r["doc_id"] for r in rows) == [0, 1, 2, 3]
@@ -1306,10 +1338,9 @@ def test_gate_manifest_validates_n_gram_at_build(spark, tmp_path):
     bad = sp.classifier_gate_manifest(w, b, 0.6, n_buckets=64)
     bad["n_gram"] = 3
     sp.publish_gate_model(model_dir, bad)
-    build = sp._classifier_kept_of_manifest()
     _v, manifest = sp.read_current_gate_model(model_dir)
     with pytest.raises(ValueError, match="n_gram"):
-        build(manifest)
+        sp._gate_of_manifest(spark, manifest)
 
 
 def test_ccnet_gate_writer_trigram_arm(spark, tmp_path):
@@ -1347,9 +1378,12 @@ def test_ccnet_gate_writer_trigram_arm(spark, tmp_path):
     bg = bigram_lm_table(ref)
     tg = trigram_lm_table(ref)
     sink = str(tmp_path / "tg_sink")
-    write_batch = sp.ccnet_gate_batch_writer(
-        sink, lm, m["thresholds"], m["q"],
-        bigram=bg, trigram=tg, alpha=m["alpha"], lam=m["lam"],
+    write_batch = sp.gate_batch_writer(
+        sink,
+        sp.ccnet_gate(
+            lm, m["thresholds"], m["q"],
+            bigram=bg, trigram=tg, alpha=m["alpha"], lam=m["lam"],
+        ),
     )
     write_batch(docs, 0)
     assert sorted(
@@ -1358,10 +1392,10 @@ def test_ccnet_gate_writer_trigram_arm(spark, tmp_path):
 
     # order mismatch guards, both directions, through the starters
     def j12(**kw):
-        return sp.start_ccnet_gate_stream(
+        return sp.start_gate_stream(
             spark, str(tmp_path / "s"), str(tmp_path / "o"),
-            str(tmp_path / "c"), lm=lm, thresholds=m["thresholds"],
-            q=m["q"], **kw,
+            str(tmp_path / "c"),
+            sp.ccnet_gate(lm, m["thresholds"], m["q"], **kw),
         )
 
     with pytest.raises(ValueError, match="only order-2"):
@@ -1370,11 +1404,9 @@ def test_ccnet_gate_writer_trigram_arm(spark, tmp_path):
         j12(lm_order=2, bigram=bg, trigram=tg)
     with pytest.raises(ValueError, match="without its bigram"):
         j12(lm_order=3, trigram=tg)
-    # the kept builder itself refuses a chain missing its middle
+    # the gate itself refuses a chain missing its middle
     with pytest.raises(ValueError, match="without its bigram"):
-        sp.ccnet_gate_batch_writer(
-            str(tmp_path / "x"), lm, m["thresholds"], m["q"], trigram=tg
-        )
+        sp.ccnet_gate(lm, m["thresholds"], m["q"], trigram=tg)
 
 
 @pytest.mark.slow
@@ -1445,9 +1477,12 @@ def test_staged_gate_writer_trigram_arm(spark, tmp_path):
 
     thresholds = {r["source"]: r["threshold"] for r in rows}
     sink = str(tmp_path / "stg_sink")
-    write_batch = sp.staged_gate_batch_writer(
-        sink, lm, thresholds, 0.4, w, b, 0.6,
-        bigram=bg, trigram=tg, n_buckets=64,
+    write_batch = sp.gate_batch_writer(
+        sink,
+        sp.staged_gate(
+            sp.ccnet_gate(lm, thresholds, 0.4, bigram=bg, trigram=tg),
+            sp.classifier_gate(w, b, 0.6, n_buckets=64),
+        ),
     )
     write_batch(docs, 0)
     got = sorted(
@@ -1492,8 +1527,8 @@ def test_versioned_ccnet_gate_rotation(spark, tmp_path):
     )
     assert v1 == 1
     sink = str(tmp_path / "ccnet_vsink")
-    write_batch = sp.versioned_gate_batch_writer(
-        sink, model_dir, sp._ccnet_kept_of_manifest(spark)
+    write_batch = sp.gate_batch_writer(
+        sink, sp.versioned_gate(spark, model_dir)
     )
     write_batch(docs, 0)
     rows = sp.read_committed(spark, sink).collect()
@@ -1547,9 +1582,9 @@ def test_versioned_ccnet_gate_guards_and_stream(spark, tmp_path):
             model_dir, lm=lm, thresholds={}, q=0.5
         )
     with pytest.raises(ValueError, match="publish"):
-        sp.start_versioned_ccnet_gate_stream(
+        sp.start_gate_stream(
             spark, str(tmp_path / "s"), str(tmp_path / "o"),
-            str(tmp_path / "c"), model_dir,
+            str(tmp_path / "c"), sp.versioned_gate(spark, model_dir),
         )
     # a hand-rolled manifest whose order disagrees with its stored
     # tables fails through the shared order check at build
@@ -1558,11 +1593,10 @@ def test_versioned_ccnet_gate_guards_and_stream(spark, tmp_path):
     )
     _v, manifest = sp.read_current_gate_model(model_dir)
     manifest["lm_order"] = 2  # claims order 2, stores order 1
-    build = sp._ccnet_kept_of_manifest(spark)
     with pytest.raises(ValueError, match="only order-1 tables"):
-        build(manifest)
+        sp._gate_of_manifest(spark, manifest)
     with pytest.raises(ValueError, match="missing"):
-        build({"gate": "ccnet"})
+        sp._gate_of_manifest(spark, {"gate": "ccnet"})
 
     # end-to-end: the real stream drains under CURRENT and stamps rows
     docs = spark.createDataFrame(
@@ -1572,8 +1606,9 @@ def test_versioned_ccnet_gate_guards_and_stream(spark, tmp_path):
     src = str(tmp_path / "vsrc")
     docs.write.parquet(src)
     sink = str(tmp_path / "vsink")
-    sp.start_versioned_ccnet_gate_stream(
-        spark, src, sink, str(tmp_path / "vck"), model_dir,
+    sp.start_gate_stream(
+        spark, src, sink, str(tmp_path / "vck"),
+        sp.versioned_gate(spark, model_dir),
     ).awaitTermination(120)
     rows = sp.read_committed(spark, sink).collect()
     assert len(rows) == 4
@@ -1611,8 +1646,8 @@ def test_ccnet_prefilter_publishes_gate_model(spark, tmp_path):
     assert manifest["lm_order"] == 3 and manifest["trigram_path"]
 
     sink = str(tmp_path / "pub_sink")
-    write_batch = sp.versioned_gate_batch_writer(
-        sink, model_dir, sp._ccnet_kept_of_manifest(spark)
+    write_batch = sp.gate_batch_writer(
+        sink, sp.versioned_gate(spark, model_dir)
     )
     write_batch(docs, 0)
     got = sorted(
@@ -1665,8 +1700,8 @@ def test_versioned_staged_gate_rotation(spark, tmp_path):
     )
     assert v1 == 1
     sink = str(tmp_path / "staged_vsink")
-    write_batch = sp.versioned_gate_batch_writer(
-        sink, model_dir, sp._staged_kept_of_manifest(spark)
+    write_batch = sp.gate_batch_writer(
+        sink, sp.versioned_gate(spark, model_dir)
     )
     write_batch(docs, 0)
     rows = sp.read_committed(spark, sink).collect()
@@ -1695,16 +1730,16 @@ def test_versioned_staged_gate_rotation(spark, tmp_path):
     ) == [0, 1, 2, 10, 11, 12]
 
     # guards: a half-missing manifest fails by name
-    build = sp._staged_kept_of_manifest(spark)
     with pytest.raises(ValueError, match="missing"):
-        build({"gate": "staged", "ccnet": {}})
+        sp._gate_of_manifest(spark, {"gate": "staged", "ccnet": {}})
 
     # end-to-end stream plumbing under CURRENT
     src = str(tmp_path / "ssrc")
     docs.write.parquet(src)
     sink2 = str(tmp_path / "staged_vsink2")
-    sp.start_versioned_staged_gate_stream(
-        spark, src, sink2, str(tmp_path / "sck"), model_dir,
+    sp.start_gate_stream(
+        spark, src, sink2, str(tmp_path / "sck"),
+        sp.versioned_gate(spark, model_dir),
     ).awaitTermination(120)
     got = sp.read_committed(spark, sink2).collect()
     assert sorted(r["doc_id"] for r in got) == [0, 1, 2]
@@ -1750,8 +1785,8 @@ def test_curation_pipeline_publishes_gate_model(spark, tmp_path):
         sp.DOC_STREAM_SCHEMA,
     )
     sink = str(tmp_path / "cur_vsink")
-    write_batch = sp.versioned_gate_batch_writer(
-        sink, model_dir, sp._classifier_kept_of_manifest()
+    write_batch = sp.gate_batch_writer(
+        sink, sp.versioned_gate(spark, model_dir)
     )
     write_batch(sdocs, 0)
     got = sorted(
@@ -1804,8 +1839,8 @@ def test_staged_curation_publishes_combined_model(spark, tmp_path):
         sp.DOC_STREAM_SCHEMA,
     )
     sink = str(tmp_path / "stg_vsink")
-    write_batch = sp.versioned_gate_batch_writer(
-        sink, model_dir, sp._staged_kept_of_manifest(spark)
+    write_batch = sp.gate_batch_writer(
+        sink, sp.versioned_gate(spark, model_dir)
     )
     write_batch(sdocs, 0)
     rows = sp.read_committed(spark, sink).collect()
@@ -1863,8 +1898,8 @@ def test_staged_gate_rules_config_published_and_applied(spark, tmp_path):
     )
     assert v1 == 1
     sink = str(tmp_path / "rules_vsink")
-    write_batch = sp.versioned_gate_batch_writer(
-        sink, model_dir, sp._staged_kept_of_manifest(spark)
+    write_batch = sp.gate_batch_writer(
+        sink, sp.versioned_gate(spark, model_dir)
     )
     write_batch(docs, 0)
     rows = sp.read_committed(spark, sink).collect()
@@ -1889,9 +1924,12 @@ def test_staged_gate_rules_config_published_and_applied(spark, tmp_path):
 
     # the plain (argument-driven) J13 writer takes the same knob
     sink2 = str(tmp_path / "rules_psink")
-    sp.staged_gate_batch_writer(
-        sink2, lm, m1["thresholds"], m1["q"], w, b, 0.5,
-        n_buckets=64, rules_config=cfg,
+    sp.gate_batch_writer(
+        sink2,
+        sp.staged_gate(
+            sp.ccnet_gate(lm, m1["thresholds"], m1["q"], rules_config=cfg),
+            sp.classifier_gate(w, b, 0.5, n_buckets=64),
+        ),
     )(docs, 0)
     got = sorted(
         r["doc_id"]
@@ -1914,8 +1952,8 @@ def test_staged_gate_rules_config_published_and_applied(spark, tmp_path):
     _v, man2 = sp.read_current_gate_model(model_dir2)
     assert man2["rules_config"] == cfg
     sink3 = str(tmp_path / "rules_vsink3")
-    sp.versioned_gate_batch_writer(
-        sink3, model_dir2, sp._staged_kept_of_manifest(spark)
+    sp.gate_batch_writer(
+        sink3, sp.versioned_gate(spark, model_dir2)
     )(docs, 0)
     got3 = sorted(
         r["doc_id"]
@@ -1962,8 +2000,8 @@ def test_ccnet_gate_order45_arms(spark, tmp_path):
     assert manifest["lm_order"] == 4
     assert manifest["fourgram_path"] and manifest["fivegram_path"] is None
     sink = str(tmp_path / "o4_sink")
-    sp.versioned_gate_batch_writer(
-        sink, model_dir, sp._ccnet_kept_of_manifest(spark)
+    sp.gate_batch_writer(
+        sink, sp.versioned_gate(spark, model_dir)
     )(docs, 0)
     kept = sorted(
         r["doc_id"] for r in sp.read_committed(spark, sink).collect()
@@ -1986,3 +2024,66 @@ def test_ccnet_gate_order45_arms(spark, tmp_path):
             str(tmp_path / "gap"), lm=ug, thresholds={"web": 1.0},
             q=0.5, bigram=t2, fourgram=t4,
         )
+
+
+def test_versioned_gate_drives_every_family(spark, tmp_path):
+    """One batch of each gate family through
+    ``gate_batch_writer(sink, versioned_gate(spark, model_dir))``: a
+    classifier, a CCNet and a staged model, each published by its own
+    publisher, keep their own cut and stamp ``model_version``. A model
+    of another family published into a running classifier model_dir
+    raises, naming both families, and commits nothing."""
+    import os
+
+    from drive_bc_datapipeline_spark.operators.lm_score import (
+        unigram_lm_table,
+    )
+
+    w = _gate_model(spark)
+    # reference vocabulary: docs 1-3 score in-vocab (avg_nll 2.61),
+    # docs 4-6 carry 2-3 OOV tokens (avg_nll >= 4.2) — 3.5 cuts between
+    ref = spark.createDataFrame(
+        [(i, "good story here prose junk noise") for i in range(4)],
+        "doc_id long, text string",
+    )
+    lm = unigram_lm_table(ref)
+    thresholds = {"web": 3.5, "book": 3.5}
+    docs = spark.createDataFrame(DOCS, sp.DOC_STREAM_SCHEMA)
+    publishers = {
+        "classifier": lambda d: sp.publish_gate_model(
+            d, sp.classifier_gate_manifest(w, 0.0, 0.6, n_buckets=64)
+        ),
+        "ccnet": lambda d: sp.publish_ccnet_gate_model(
+            d, lm=lm, thresholds=thresholds, q=0.5
+        ),
+        "staged": lambda d: sp.publish_staged_gate_model(
+            d, lm=lm, thresholds=thresholds, q=0.5,
+            weights=w, bias=0.0, threshold=0.6, n_buckets=64,
+        ),
+    }
+    # the classifier keeps the good-dominated docs, the CCNet cut the
+    # in-vocab docs, the staged gate the docs both keep
+    want = {"classifier": [1, 3, 6], "ccnet": [1, 2, 3], "staged": [1, 3]}
+    writers = {}
+    for family, publish in publishers.items():
+        model_dir = str(tmp_path / f"{family}_models")
+        assert publish(model_dir) == 1
+        sink = str(tmp_path / f"{family}_sink")
+        writers[family] = sp.gate_batch_writer(
+            sink, sp.versioned_gate(spark, model_dir)
+        )
+        writers[family](docs, 0)
+        rows = sp.read_committed(spark, sink).collect()
+        assert sorted(r["doc_id"] for r in rows) == want[family]
+        assert all(r["model_version"] == 1 for r in rows)
+
+    # v2 of the running classifier stream is a CCNet model
+    assert publishers["ccnet"](str(tmp_path / "classifier_models")) == 2
+    with pytest.raises(
+        ValueError, match="'ccnet' gate but this stream started on a "
+        "'classifier' gate"
+    ):
+        writers["classifier"](docs, 1)
+    sink = str(tmp_path / "classifier_sink")
+    assert not os.path.exists(sp.commit_marker_path(sink, 1))
+    assert sp.read_committed(spark, sink).count() == 3
