@@ -25,9 +25,10 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented capability from SURVEY.md §2.
 
-    Key order is GATE_PRIORITY-first (plans/registry.py): the driver's
-    correctness gate reads the first 50 keys, so never-yet-verified
-    queries are pinned into that window.
+    Key order is ``registry.ordered_queries()``: never-gated debuts,
+    then active ``GATE_PIN`` re-verifications, then the rest
+    stalest-first — the driver's correctness gate reads the first 50
+    keys, so new and re-planned queries land in that window.
     """
     return registry.ordered_queries()
 

@@ -12,10 +12,27 @@ Scale notes: results stream straight from each query's plan into the
 parquet writer — nothing is collected; each output directory is an
 independent job so a failure resumes per-query (rerun overwrites
 atomically via overwrite mode).
+
+The curation jobs share one contract:
+
+- ``build_curation_frames`` declares every stage-2 setting (classifier
+  gate + DSIR + sharding) and its default exactly once;
+  ``run_curation_pipeline`` and ``run_staged_curation`` forward theirs
+  as keyword arguments, and the curation manifest records the
+  ``"settings"`` the frames were built with.
+- The CCNet LM travels as ONE list, ``[unigram, order2, ...]``
+  (``len == lm_order``), from ``_fit_reference_lm_tables`` through
+  the scorers, the streaming ``ccnet_gate`` and both publishers.
+- Inputs use the operators' column names: documents ``doc_id``/
+  ``text`` (plus ``source`` for the CCNet stage), seeds add ``label``.
+- The stage-0 rule screen, the CCNet knob guards and the stage-0
+  handoff check each have one copy (``_apply_rule_screen``,
+  ``_check_ccnet_args``, ``_check_handoff``).
 """
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import time
@@ -104,6 +121,25 @@ def run_pipeline(
     return manifest
 
 
+def _read_fresh_events(
+    spark: SparkSession, source_path: str, state_path: str
+):
+    """``(fresh, watermark_us)``: the events of ``source_path`` with ts
+    strictly beyond the high-watermark stored at ``state_path`` (-1
+    before the first run), rows without an id or ts dropped — THE one
+    copy of the watermark read both incremental jobs start from."""
+    from drive_bc_datapipeline_spark.tables import read_events
+
+    wm_us = -1
+    if os.path.exists(state_path):
+        with open(state_path) as f:
+            wm_us = json.load(f)["watermark_us"]
+    fresh = read_events(spark, source_path).filter(
+        F.unix_micros("ts") > wm_us
+    ).dropna(subset=["event_id", "ts"])
+    return fresh, wm_us
+
+
 def run_incremental_events(
     spark: SparkSession,
     source_path: str,
@@ -120,19 +156,7 @@ def run_incremental_events(
     prunes to the new date partitions; everything before the watermark
     is never re-read (predicate pushdown on the partition/sort column).
     """
-    from pyspark.sql import functions as F
-
-    wm_us = -1
-    if os.path.exists(state_path):
-        with open(state_path) as f:
-            wm_us = json.load(f)["watermark_us"]
-
-    from drive_bc_datapipeline_spark.tables import read_events
-
-    raw = read_events(spark, source_path)
-    fresh = raw.filter(F.unix_micros("ts") > wm_us).dropna(
-        subset=["event_id", "ts"]
-    )
+    fresh, wm_us = _read_fresh_events(spark, source_path, state_path)
     batch = fresh.withColumn("event_date", F.to_date("ts")).withColumn(
         "hour", F.hour("ts").cast("int")
     )
@@ -168,20 +192,9 @@ def run_incremental_rollup(
     exact quantiles) need sketch state instead — see hll_weekly_rollup
     (B25) / bitmap_distinct_users (B26) for the mergeable forms.
     """
-    from pyspark.sql import functions as F
-
     from drive_bc_datapipeline_spark.sources.io import upsert_partitioned
-    from drive_bc_datapipeline_spark.tables import read_events
 
-    wm_us = -1
-    if os.path.exists(state_path):
-        with open(state_path) as f:
-            wm_us = json.load(f)["watermark_us"]
-
-    raw = read_events(spark, source_path)
-    fresh = raw.filter(F.unix_micros("ts") > wm_us).dropna(
-        subset=["event_id", "ts"]
-    )
+    fresh, wm_us = _read_fresh_events(spark, source_path, state_path)
     delta = fresh.groupBy(
         "event_type", F.to_date("ts").cast("string").alias("day")
     ).agg(
@@ -264,16 +277,14 @@ def _precision_at_cut(curve_rows: list, t: float) -> float | None:
     return float(min(keep, key=lambda r: r["threshold"])["precision"])
 
 
-def _apply_rule_screen(docs, *, text_col, rules, rules_config):
-    """Stage 0 of any curation-shaped job (r17, verdict Next #6 —
-    THE one copy, shared by the standalone curation job, the CCNet
-    prefilter, and the staged composition): the H51 Gopher/C4/Dolma
-    rule screen as a lazy codegen'd predicate plus its one-row
-    funnel. Returns ``(survivors, funnel_dict | None)`` — the
-    survivors frame stays LAZY (the rules push into the consumer's
-    own corpus scans; nothing is materialized) and carries the input
-    schema exactly (the appended flag set is dropped by
-    set-difference — the r16 leak class)."""
+def _apply_rule_screen(docs, *, rules: bool, rules_config: dict | None):
+    """Stage 0 of any curation-shaped job (THE one copy, shared by the
+    standalone curation job, the CCNet prefilter, and the staged
+    composition): the H51 Gopher/C4/Dolma rule screen
+    (``quality_rule_screen``) plus its one-row funnel. Returns
+    ``(survivors, funnel_dict | None)`` — the survivors frame stays
+    LAZY (the rules push into the consumer's own corpus scans; nothing
+    is materialized) and carries the input schema exactly."""
     if rules_config is not None and not rules:
         raise ValueError(
             "rules_config without rules=True: the config would be "
@@ -282,16 +293,38 @@ def _apply_rule_screen(docs, *, text_col, rules, rules_config):
     if not rules:
         return docs, None
     from drive_bc_datapipeline_spark.operators.quality_rules import (
-        quality_rule_flags,
-        quality_rule_funnel,
+        quality_rule_screen,
     )
 
-    flagged = quality_rule_flags(
-        docs, text_col=text_col, **(rules_config or {})
-    )
-    funnel = quality_rule_funnel(flagged).collect()[0].asDict()
-    added = [c for c in flagged.columns if c not in docs.columns]
-    return flagged.filter(F.col("rules_ok")).drop(*added), funnel
+    survivors, funnel = quality_rule_screen(docs, **(rules_config or {}))
+    return survivors, funnel.collect()[0].asDict()
+
+
+def _check_handoff(
+    funnel: dict | None, rules_config: dict | None, observed: int, by: str
+) -> dict:
+    """Reconcile the stage-0 handoff and return the manifest's rule
+    fields — ONE copy for the three curation jobs. With the rule
+    screen on (``funnel`` not None) the next stage (``by``) must have
+    observed exactly the docs the funnel passed, and the corpus count
+    is the funnel's n_total (the next stage only ever saw the
+    survivors)."""
+    if funnel is None:
+        return {
+            "n_docs": observed, "n_kept_rules": None, "rules": False,
+            "rules_funnel": None, "rules_config": None,
+        }
+    if observed != funnel["n_pass_all"]:
+        raise ValueError(
+            f"stage handoff diverged: the rule screen passed "
+            f"{funnel['n_pass_all']} docs but the {by} observed "
+            f"{observed} — the lazy rules_ok predicate did not "
+            "reproduce the funnel's cut"
+        )
+    return {
+        "n_docs": funnel["n_total"], "n_kept_rules": funnel["n_pass_all"],
+        "rules": True, "rules_funnel": funnel, "rules_config": rules_config,
+    }
 
 
 def build_curation_frames(
@@ -301,9 +334,6 @@ def build_curation_frames(
     target,
     *,
     k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    label_col: str = "label",
     n_buckets: int = 4096,
     n_rounds: int = 30,
     lr: float = 0.5,
@@ -377,7 +407,18 @@ def build_curation_frames(
     ``seed + 3`` (intra-shard position — ``seeded_shuffle`` itself
     spans two consecutive seeds); the validation split consumes
     ``seed + 4``.
+
+    This signature is THE one declaration of the stage-2 settings and
+    their defaults: ``run_curation_pipeline`` and ``run_staged_curation``
+    forward theirs here, and the returned ``"settings"`` (every keyword
+    argument but the ``seeds_val`` frame) is what the curation manifest
+    records. Documents carry ``doc_id``/``text`` (plus ``source`` for
+    the CCNet stage) and seeds ``doc_id``/``label``/``text``.
     """
+    settings = {
+        name: value for name, value in locals().items()
+        if name not in ("spark", "docs", "seeds", "target", "seeds_val")
+    }
     from drive_bc_datapipeline_spark.operators.classifier import (
         apply_isotonic_calibration,
         classifier_pr_curve,
@@ -404,21 +445,21 @@ def build_curation_frames(
         # per scan — no new jobs, no Python.
         from drive_bc_datapipeline_spark.operators.pii import scrub_pii
 
-        docs = scrub_pii(docs, text_col=text_col)
-        seeds = scrub_pii(seeds, text_col=text_col)
+        docs = scrub_pii(docs)
+        seeds = scrub_pii(seeds)
         if seeds_val is not None:
             # the held-out seeds must live in the same scrubbed
             # feature space the gate scores
-            seeds_val = scrub_pii(seeds_val, text_col=text_col)
+            seeds_val = scrub_pii(seeds_val)
         # the DSIR target must live in the SAME scrubbed feature
         # space as the kept corpus it is matched against
-        target = scrub_pii(target, text_col=text_col)
+        target = scrub_pii(target)
 
     # stage 0 AFTER the scrub (the staged-job ordering: rules read
     # the text the gate will score); corpus-only — seeds/target are
     # label/distribution inputs, not the corpus being screened
     docs, rules_funnel = _apply_rule_screen(
-        docs, text_col=text_col, rules=rules, rules_config=rules_config
+        docs, rules=rules, rules_config=rules_config
     )
 
     _check_heldout_args(val_frac, seeds_val)
@@ -433,26 +474,19 @@ def build_curation_frames(
             # deterministic doc-level split on the seed+4 stream; pmod so
             # xxhash64's negative half doesn't silently empty the val side
             is_val = F.pmod(
-                F.xxhash64(F.col(id_col), F.lit(seed + 4)), F.lit(1_000_000)
+                F.xxhash64(F.col("doc_id"), F.lit(seed + 4)), F.lit(1_000_000)
             ) < int(val_frac * 1_000_000)
             seeds_val = seeds.filter(is_val)
             seeds_train = seeds.filter(~is_val)
 
         w, b = train_hashed_linear(
-            spark,
-            seeds_train,
-            label_col=label_col,
-            text_col=text_col,
-            id_col=id_col,
-            n_buckets=n_buckets,
-            n_rounds=n_rounds,
-            lr=lr,
-            n_gram=n_gram,
+            spark, seeds_train,
+            n_buckets=n_buckets, n_rounds=n_rounds, lr=lr, n_gram=n_gram,
         )
         seed_scored = score_hashed_linear(
-            spark, seeds_train, w, text_col=text_col, id_col=id_col,
-            n_buckets=n_buckets, bias=b, n_gram=n_gram,
-        ).join(seeds_train.select(id_col, label_col), id_col)
+            spark, seeds_train, w, n_buckets=n_buckets, bias=b,
+            n_gram=n_gram,
+        ).join(seeds_train.select("doc_id", "label"), "doc_id")
 
         gate_col = "score"
         cal_table: list | None = None
@@ -461,7 +495,7 @@ def build_curation_frames(
             # E11: fit on the seed scores with the E10 bin convention so
             # the calibrated threshold maps exactly through the step fn
             cal_table = isotonic_calibration_table(
-                seed_scored, label_col=label_col, n_bins=curve_bins
+                seed_scored, n_bins=curve_bins
             )
             seed_scored = apply_isotonic_calibration(
                 seed_scored, cal_table, n_bins=curve_bins
@@ -469,26 +503,24 @@ def build_curation_frames(
             gate_col = "calibrated"
             # E12: audit the calibrated probabilities (seed-sized scan)
             cal_audit = expected_calibration_error(
-                seed_scored, label_col=label_col, score_col=gate_col
+                seed_scored, score_col=gate_col
             )
 
         curve_train = classifier_pr_curve(
-            seed_scored, label_col=label_col, score_col=gate_col,
-            n_bins=curve_bins,
+            seed_scored, score_col=gate_col, n_bins=curve_bins,
         ).collect()
         held_out = seeds_val is not None
         if held_out:
             val_scored = score_hashed_linear(
-                spark, seeds_val, w, text_col=text_col, id_col=id_col,
-                n_buckets=n_buckets, bias=b, n_gram=n_gram,
-            ).join(seeds_val.select(id_col, label_col), id_col)
+                spark, seeds_val, w, n_buckets=n_buckets, bias=b,
+                n_gram=n_gram,
+            ).join(seeds_val.select("doc_id", "label"), "doc_id")
             if calibrate:
                 val_scored = apply_isotonic_calibration(
                     val_scored, cal_table, n_bins=curve_bins
                 )
             curve_sel = classifier_pr_curve(
-                val_scored, label_col=label_col, score_col=gate_col,
-                n_bins=curve_bins,
+                val_scored, score_col=gate_col, n_bins=curve_bins,
             ).collect()
             if not curve_sel:
                 raise ValueError(
@@ -512,8 +544,7 @@ def build_curation_frames(
         precision_train = _precision_at_cut(curve_train, threshold)
 
         scored = score_hashed_linear(
-            spark, docs, w, text_col=text_col, id_col=id_col,
-            n_buckets=n_buckets, bias=b, n_gram=n_gram,
+            spark, docs, w, n_buckets=n_buckets, bias=b, n_gram=n_gram,
         )
         if calibrate:
             scored = apply_isotonic_calibration(
@@ -528,29 +559,24 @@ def build_curation_frames(
                 F.coalesce(F.sum(gate.cast("long")), F.lit(0)).alias("n_kept"),
             )
             .filter(gate)
-            .select(id_col)
+            .select("doc_id")
             .localCheckpoint(eager=True)  # THE one corpus-scoring job
         )
-        kept = docs.join(kept_ids, id_col)
+        kept = docs.join(kept_ids, "doc_id")
 
         table, default = dsir_log_ratio(
-            dsir_bucket_counts(
-                target, text_col=text_col, n_buckets=dsir_buckets
-            ),
-            dsir_bucket_counts(
-                kept, text_col=text_col, n_buckets=dsir_buckets
-            ),
+            dsir_bucket_counts(target, n_buckets=dsir_buckets),
+            dsir_bucket_counts(kept, n_buckets=dsir_buckets),
             n_buckets=dsir_buckets,
         )
         weights = dsir_importance_weights(
-            spark, kept, table, default,
-            text_col=text_col, id_col=id_col, n_buckets=dsir_buckets,
+            spark, kept, table, default, n_buckets=dsir_buckets,
         )
-        sample = dsir_resample(weights, k, id_col=id_col, seed=seed)
+        sample = dsir_resample(weights, k, seed=seed)
 
         selected = seeded_shuffle(
-            docs.join(sample.select(id_col), id_col),
-            id_col,
+            docs.join(sample.select("doc_id"), "doc_id"),
+            "doc_id",
             seed=seed + 2,  # independent of the Gumbel stream at `seed`
             n_shards=n_shards,
         )
@@ -580,6 +606,7 @@ def build_curation_frames(
             "cal_table": cal_table,
             "cal_audit": cal_audit,
             "rules_funnel": rules_funnel,
+            "settings": settings,
         }
     finally:
         for f in labels:
@@ -593,33 +620,18 @@ def run_curation_pipeline(
     target,
     out_dir: str,
     *,
-    k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    label_col: str = "label",
-    n_buckets: int = 4096,
-    n_rounds: int = 30,
-    lr: float = 0.5,
-    n_gram: int = 1,
-    min_precision: float = 0.9,
-    curve_bins: int = 1000,
-    dsir_buckets: int = 4096,
-    seed: int = 0,
-    n_shards: int = 16,
-    calibrate: bool = False,
-    scrub: bool = False,
-    val_frac: float | None = None,
-    seeds_val=None,
-    rules: bool = False,
-    rules_config: dict | None = None,
     publish_model_dir: str | None = None,
+    **settings,
 ) -> dict:
     """The full curation recipe as ONE runnable job (the K7 runner's
     operational sibling for the E9/E10/E11/E7 + H47 + L13 chain the
     composition test pins): ``build_curation_frames`` (which see, for
     the scoring-once, calibration, in-sample-threshold, and seed-
     stream contracts) + the shard-partitioned ``out_dir/selected/``
-    write + a manifest JSON.
+    write + a manifest JSON. ``settings`` are ``build_curation_frames``'
+    keyword arguments (``k`` and the stage-2 knobs), declared and
+    defaulted there once; the manifest records the values that run
+    used.
 
     Everything downstream of the driver-sized model state streams
     plan→writer (nothing corpus-scale is collected; the three counts
@@ -627,53 +639,32 @@ def run_curation_pipeline(
     carries the decisions (threshold, counts, seed, and — when
     ``calibrate`` — the isotonic table with its ECE/MCE/Brier audit)
     so a rerun is auditable — and byte-identical apart from timings,
-    which the test pins.
+    which the test pins. ``publish_model_dir`` publishes the trained
+    gate as the next classifier-gate version there.
     """
     t0 = time.time()
-    frames = build_curation_frames(
-        spark, docs, seeds, target,
-        k=k, text_col=text_col, id_col=id_col, label_col=label_col,
-        n_buckets=n_buckets, n_rounds=n_rounds, lr=lr, n_gram=n_gram,
-        min_precision=min_precision, curve_bins=curve_bins,
-        dsir_buckets=dsir_buckets, seed=seed, n_shards=n_shards,
-        calibrate=calibrate, scrub=scrub,
-        val_frac=val_frac, seeds_val=seeds_val,
-        rules=rules, rules_config=rules_config,
-    )
+    frames = build_curation_frames(spark, docs, seeds, target, **settings)
+    run = frames["settings"]
     out_path = os.path.join(out_dir, "selected")
     obs = Observation("rows_selected")
     (
         frames["selected"].observe(obs, F.count(F.lit(1)).alias("rows"))
-        .repartition(n_shards, "shard")
+        .repartition(run["n_shards"], "shard")
         .sortWithinPartitions("shard", "pos_key")
         .write.mode("overwrite")
         .partitionBy("shard")
         .parquet(out_path)
     )
     gate_counts = frames["gate_obs"].get
-    rules_funnel = frames["rules_funnel"]
-    if rules and int(gate_counts["n_docs"]) != rules_funnel["n_pass_all"]:
-        raise ValueError(
-            f"stage handoff diverged: the rule screen passed "
-            f"{rules_funnel['n_pass_all']} docs but the gate observed "
-            f"{int(gate_counts['n_docs'])} — the lazy rules_ok "
-            "predicate did not reproduce the funnel's cut"
-        )
     manifest = {
-        # with the rule screen on, the corpus count is the funnel's
-        # n_total (the gate only ever saw the survivors)
-        "n_docs": (
-            rules_funnel["n_total"] if rules
-            else int(gate_counts["n_docs"])
+        **_check_handoff(
+            frames["rules_funnel"], run["rules_config"],
+            int(gate_counts["n_docs"]), "gate",
         ),
-        "n_kept_rules": rules_funnel["n_pass_all"] if rules else None,
-        "rules": rules,
-        "rules_funnel": rules_funnel,
-        "rules_config": rules_config if rules else None,
         "n_kept": int(gate_counts["n_kept"]),
         "n_selected": obs.get["rows"],
         "threshold": frames["threshold"],
-        "min_precision": min_precision,
+        "min_precision": run["min_precision"],
         # how the threshold was chosen: "in-sample-seeds" (curve on
         # the training seeds — optimistic) or "held-out" (curve on a
         # validation split the model never trained on). Both
@@ -682,27 +673,27 @@ def run_curation_pipeline(
         "threshold_selection": frames["threshold_selection"],
         "precision_train": frames["precision_train"],
         "precision_val": frames["precision_val"],
-        "val_frac": val_frac,
-        "calibrated": calibrate,
-        "pii_scrubbed": scrub,
-        "k": k,
-        "seed": seed,
-        "n_shards": n_shards,
-        "n_buckets": n_buckets,
+        "val_frac": run["val_frac"],
+        "calibrated": run["calibrate"],
+        "pii_scrubbed": run["scrub"],
+        "k": run["k"],
+        "seed": run["seed"],
+        "n_shards": run["n_shards"],
+        "n_buckets": run["n_buckets"],
         # the gate's feature order: a scorer at the WRONG n_gram
         # silently reads a drifted feature space, so the manifest
         # carries it like curve_bins carries the bin convention
-        "n_gram": n_gram,
-        "dsir_buckets": dsir_buckets,
+        "n_gram": run["n_gram"],
+        "dsir_buckets": run["dsir_buckets"],
         # the bin convention: without it the calibration_table and
         # threshold cannot be interpreted or inverted downstream
         # (calibrated_threshold_to_raw at the wrong n_bins silently
         # halves or doubles the cut)
-        "curve_bins": curve_bins,
+        "curve_bins": run["curve_bins"],
         "path": out_path,
         "seconds": round(time.time() - t0, 3),
     }
-    if calibrate:
+    if run["calibrate"]:
         manifest["calibration_table"] = [
             list(row) for row in frames["cal_table"]
         ]
@@ -721,9 +712,9 @@ def run_curation_pipeline(
             classifier_gate_manifest(
                 frames["model_weights"], frames["model_bias"],
                 frames["threshold"],
-                n_buckets=n_buckets, n_gram=n_gram,
-                cal_table=frames["cal_table"] if calibrate else None,
-                curve_bins=curve_bins if calibrate else None,
+                n_buckets=run["n_buckets"], n_gram=run["n_gram"],
+                cal_table=frames["cal_table"],
+                curve_bins=run["curve_bins"] if run["calibrate"] else None,
             ),
         )
     with open(os.path.join(out_dir, "curation_manifest.json"), "w") as f:
@@ -738,25 +729,41 @@ def run_curation_pipeline(
     return manifest
 
 
+def _check_ccnet_args(lm_order: int, lam: float, alpha: float) -> None:
+    """The CCNet scorer-knob guards — ONE copy, run up front by the
+    prefilter and the staged job: the scorer re-checks lam/alpha, but
+    only AFTER the reference-scale LM fits have eagerly checkpointed,
+    so a bad knob must fail here, before any job runs."""
+    if lm_order not in (1, 2, 3, 4, 5):
+        raise ValueError(
+            f"lm_order={lm_order}: 1 (unigram, H49), 2 (bigram with "
+            "unigram backoff, H50), 3 (trigram backoff chain, H52), "
+            "or 4-5 (the generic chain; 5 = CCNet's KenLM order)"
+        )
+    if not 0.0 <= lam <= 1.0:
+        raise ValueError(f"lam={lam}: interpolation weight is in [0, 1]")
+    if alpha <= 0:
+        raise ValueError(f"alpha={alpha}: add-alpha smoothing needs > 0")
+
+
 def _fit_reference_lm_tables(
-    reference, *, lm_order: int, alpha: float, text_col: str
+    reference, *, lm_order: int, alpha: float
 ) -> list:
     """``[unigram, order2, ..., order_{lm_order}]`` fit on the
     reference — THE one copy of the CCNet model fit, shared by
     ``run_ccnet_prefilter`` and the staged job's publish path (which
     must publish EXACTLY the tables the cut used, so it fits once
-    here and injects them via ``tables=``). r17: the list shape
-    (``len == lm_order``) replaces the r16 (lm, bigram, trigram)
-    triple now that the chain is generic to order 5."""
+    here and injects them via ``tables=``). The list is the one shape
+    of the LM chain everywhere: the scorers, the streaming gate and
+    the publishers all take it (``len == lm_order``)."""
     from drive_bc_datapipeline_spark.operators.lm_score import (
         ngram_lm_table,
         unigram_lm_table,
     )
 
-    tables = [unigram_lm_table(reference, text_col=text_col, alpha=alpha)]
-    for k in range(2, lm_order + 1):
-        tables.append(ngram_lm_table(reference, k=k, text_col=text_col))
-    return tables
+    return [unigram_lm_table(reference, alpha=alpha)] + [
+        ngram_lm_table(reference, k=k) for k in range(2, lm_order + 1)
+    ]
 
 
 def run_ccnet_prefilter(
@@ -769,9 +776,6 @@ def run_ccnet_prefilter(
     alpha: float = 0.5,
     lm_order: int = 1,
     lam: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
     scrub: bool = False,
     rules: bool = False,
     rules_config: dict | None = None,
@@ -786,8 +790,8 @@ def run_ccnet_prefilter(
 
     ``lm_order`` picks the scorer: 1 = the smoothed unigram LM (H49);
     2-5 = the generic Jelinek-Mercer backoff chain at that order
-    (H50/H52; r17 generalizes to order 5 — CCNet's KenLM order) —
-    ``lam`` is the per-level interpolation weight at orders >= 2.
+    (H50/H52; order 5 is CCNet's KenLM order) — ``lam`` is the
+    per-level interpolation weight at orders >= 2.
     Each order catches one scramble class the order below is blind
     to (2: word order vs vocabulary; 3: triples vs bigram stats;
     4/5: one range further — all separations test-pinned on planted
@@ -830,57 +834,39 @@ def run_ccnet_prefilter(
         score_docs_under_ngram_chain,
     )
 
-    if lm_order not in (1, 2, 3, 4, 5):
-        raise ValueError(
-            f"lm_order={lm_order}: 1 (unigram, H49), 2 (bigram with "
-            "unigram backoff, H50), 3 (trigram backoff chain, H52), "
-            "or 4-5 (the generic chain; 5 = CCNet's KenLM order)"
-        )
-    # scorer knob guards up front (review catch): the scorer itself
-    # re-checks these, but only AFTER both reference-scale LM fits
-    # have eagerly checkpointed — fail before any job runs
-    if not 0.0 <= lam <= 1.0:
-        raise ValueError(f"lam={lam}: interpolation weight is in [0, 1]")
-    if alpha <= 0:
-        raise ValueError(f"alpha={alpha}: add-alpha smoothing needs > 0")
+    _check_ccnet_args(lm_order, lam, alpha)
     t0 = time.time()
     if scrub:
         from drive_bc_datapipeline_spark.operators.pii import scrub_pii
 
-        docs = scrub_pii(docs, text_col=text_col)
-        reference = scrub_pii(reference, text_col=text_col)
+        docs, reference = scrub_pii(docs), scrub_pii(reference)
 
     # stage 0 after the scrub (the staged-job ordering); lazy — the
     # rules_ok predicate pushes into the scoring job's own scan
     docs, rules_funnel = _apply_rule_screen(
-        docs, text_col=text_col, rules=rules, rules_config=rules_config
+        docs, rules=rules, rules_config=rules_config
     )
 
     if tables is None:
         tables = _fit_reference_lm_tables(
-            reference, lm_order=lm_order, alpha=alpha, text_col=text_col
+            reference, lm_order=lm_order, alpha=alpha
         )
-    supplied_order = len(tables)
-    if supplied_order != lm_order:
+    if len(tables) != lm_order:
         raise ValueError(
-            f"injected tables are order-{supplied_order} but "
+            f"injected tables are order-{len(tables)} but "
             f"lm_order={lm_order}: the cut would silently score the "
             "wrong order — fit them with _fit_reference_lm_tables at "
             "the job's own order"
         )
-    lm = tables[0]
     if lm_order >= 2:
         scores = score_docs_under_ngram_chain(
-            docs, tables, text_col=text_col, id_col=id_col,
-            alpha=alpha, lam=lam,
+            docs, tables, alpha=alpha, lam=lam
         )
     else:
-        scores = score_docs_under_lm(
-            docs, lm, text_col=text_col, id_col=id_col
-        )
+        scores = score_docs_under_lm(docs, tables[0])
     # full-coverage frame: token-less docs surface as NULL avg_nll so
     # ONE pass counts both populations before the explicit drop
-    cover = docs.select(id_col, source_col).join(scores, id_col, "left")
+    cover = docs.select("doc_id", "source").join(scores, "doc_id", "left")
     score_obs = Observation("ccnet_scores")
     scored = (
         cover.observe(
@@ -891,52 +877,34 @@ def run_ccnet_prefilter(
         .filter(F.col("avg_nll").isNotNull())
         .localCheckpoint(eager=True)  # THE one corpus-scoring job
     )
-    table = domain_threshold_table(
-        scored, (q,), source_col=source_col, score_col="avg_nll",
-        approx=True,
-    )
     # ONE execution of the fit aggregate: the collected rows feed both
     # the manifest and the filter (approx sketches need not reproduce
     # identical thresholds across executions — collecting twice could
     # make the manifest disagree with the cut actually applied).
-    threshold_rows = collect_domain_thresholds(table)
+    threshold_rows = collect_domain_thresholds(
+        domain_threshold_table(scored, (q,), approx=True)
+    )
     thresholds = {
         r["source"]: r["threshold"] for r in threshold_rows
     }
-    kept_scored = apply_domain_filter(
-        scored, threshold_rows, q,
-        source_col=source_col, score_col="avg_nll",
-    )
+    kept_scored = apply_domain_filter(scored, threshold_rows, q)
     kept = docs.join(
-        kept_scored.select(id_col, "n_toks", "avg_nll"), id_col
+        kept_scored.select("doc_id", "n_toks", "avg_nll"), "doc_id"
     )
     out_path = os.path.join(out_dir, "kept")
     keep_obs = Observation("ccnet_kept")
     (
         kept.observe(keep_obs, F.count(F.lit(1)).alias("rows"))
-        .repartition(source_col)
+        .repartition("source")
         .write.mode("overwrite")
-        .partitionBy(source_col)
+        .partitionBy("source")
         .parquet(out_path)
     )
     counts = score_obs.get
-    if rules and int(counts["n_docs"]) != rules_funnel["n_pass_all"]:
-        raise ValueError(
-            f"stage handoff diverged: the rule screen passed "
-            f"{rules_funnel['n_pass_all']} docs but the scorer "
-            f"observed {int(counts['n_docs'])} — the lazy rules_ok "
-            "predicate did not reproduce the funnel's cut"
-        )
     manifest = {
-        # with the rule screen on, the corpus count is the funnel's
-        # n_total (the scorer only ever saw the survivors)
-        "n_docs": (
-            rules_funnel["n_total"] if rules else int(counts["n_docs"])
+        **_check_handoff(
+            rules_funnel, rules_config, int(counts["n_docs"]), "scorer"
         ),
-        "n_kept_rules": rules_funnel["n_pass_all"] if rules else None,
-        "rules": rules,
-        "rules_funnel": rules_funnel,
-        "rules_config": rules_config if rules else None,
         "n_scored": int(counts["n_scored"]),
         "n_tokenless_dropped": int(counts["n_docs"] - counts["n_scored"]),
         "n_kept": int(keep_obs.get["rows"]),
@@ -956,11 +924,9 @@ def run_ccnet_prefilter(
             publish_ccnet_gate_model,
         )
 
-        bg, tg, g4, g5 = (tables[1:] + [None] * 4)[:4]
         manifest["published_version"] = publish_ccnet_gate_model(
-            publish_model_dir, lm=lm, thresholds=thresholds, q=q,
-            alpha=alpha, lam=lam, bigram=bg, trigram=tg,
-            fourgram=g4, fivegram=g5,
+            publish_model_dir, tables=tables, thresholds=thresholds,
+            q=q, alpha=alpha, lam=lam,
             # the screen is part of the published decision function
             # (the staged-gate r16 ADVICE class)
             rules_config=(rules_config or {}) if rules else None,
@@ -978,34 +944,18 @@ def run_staged_curation(
     target,
     out_dir: str,
     *,
-    k: int,
     # stage 1 — CCNet prefilter (H49/H50 → H48)
     q: float = 2.0 / 3.0,
     alpha: float = 0.5,
     lm_order: int = 1,
     lam: float = 0.7,
-    # stage 2 — classifier gate + DSIR (E9/E10/E11/E7 + H47 + L13)
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    label_col: str = "label",
-    n_buckets: int = 4096,
-    n_rounds: int = 30,
-    lr: float = 0.5,
-    n_gram: int = 1,
-    min_precision: float = 0.9,
-    curve_bins: int = 1000,
-    dsir_buckets: int = 4096,
-    seed: int = 0,
-    n_shards: int = 16,
-    calibrate: bool = False,
+    # scrub once here for both stages; stage 0 — the H51 rule screen
     scrub: bool = False,
-    val_frac: float | None = None,
-    seeds_val=None,
-    # stage 0 — Gopher/C4/Dolma rule screen (H51), optional
     rules: bool = False,
     rules_config: dict | None = None,
     publish_model_dir: str | None = None,
+    # stage 2 — classifier gate + DSIR: build_curation_frames' settings
+    **gate,
 ) -> dict:
     """The production curation shape as ONE staged job: an optional
     rule-based heuristic screen FIRST (``rules=True`` — the
@@ -1023,6 +973,15 @@ def run_staged_curation(
         out_dir/staged_manifest.json both manifests + reconciliation
                                      (+ the per-rule funnel when
                                      rules=True)
+
+    ``gate`` holds ``k`` and the stage-2 settings, forwarded to
+    ``build_curation_frames`` (which declares and defaults them): they
+    are bound against its signature BEFORE stage 1 runs, so an
+    unknown or missing setting raises ``TypeError`` and a held-out
+    argument error raises ``ValueError`` without costing a
+    corpus-scale prefilter pass. The published staged model reads its
+    classifier settings (``n_buckets``, ``n_gram``, ``curve_bins``,
+    the calibration table) from the curation manifest.
 
     Ordering matters for cost: the rule screen is a zero-shuffle
     codegen'd projection (its ``rules_ok`` predicate pushes into
@@ -1049,76 +1008,45 @@ def run_staged_curation(
     (partial write, schema drift) and the job fails rather than
     silently curating a different corpus.
     """
-    # stage-2 argument guards BEFORE stage 1 runs (review catch): a
-    # val_frac typo must not cost a full corpus-scale prefilter pass
-    _check_heldout_args(val_frac, seeds_val)
-    if lm_order not in (1, 2, 3, 4, 5):
-        raise ValueError(
-            f"lm_order={lm_order}: 1 (unigram, H49), 2 (bigram with "
-            "unigram backoff, H50), 3 (trigram backoff chain, H52), "
-            "or 4-5 (the generic chain; 5 = CCNet's KenLM order)"
-        )
-    if not 0.0 <= lam <= 1.0:
-        raise ValueError(f"lam={lam}: interpolation weight is in [0, 1]")
-    if alpha <= 0:
-        raise ValueError(f"alpha={alpha}: add-alpha smoothing needs > 0")
-    if rules_config is not None and not rules:
-        raise ValueError(
-            "rules_config without rules=True: the config would be "
-            "silently ignored — enable the rule screen or drop it"
-        )
+    stage2 = inspect.signature(build_curation_frames).bind(
+        spark, docs, seeds, target, **gate
+    ).arguments
+    _check_heldout_args(stage2.get("val_frac"), stage2.get("seeds_val"))
+    _check_ccnet_args(lm_order, lam, alpha)
     t0 = time.time()
     if scrub:
         from drive_bc_datapipeline_spark.operators.pii import scrub_pii
 
-        docs = scrub_pii(docs, text_col=text_col)
-        reference = scrub_pii(reference, text_col=text_col)
-        seeds = scrub_pii(seeds, text_col=text_col)
-        target = scrub_pii(target, text_col=text_col)
-        if seeds_val is not None:
-            seeds_val = scrub_pii(seeds_val, text_col=text_col)
+        docs, reference, seeds, target = (
+            scrub_pii(f) for f in (docs, reference, seeds, target)
+        )
+        if gate.get("seeds_val") is not None:
+            gate["seeds_val"] = scrub_pii(gate["seeds_val"])
 
+    # stage 0 through THE one helper (the funnel is one bounded
+    # single-row action, the survivors stay lazy)
+    docs, rules_funnel = _apply_rule_screen(
+        docs, rules=rules, rules_config=rules_config
+    )
     # fit the reference LM ONCE up front when the staged model will
     # be published: the published tables must be EXACTLY what the
     # cut used (the tables= injection seam), and both gate halves
     # must version TOGETHER (publish_staged_gate_model's contract)
     lm_tables = None
     if publish_model_dir is not None:
-        ref_for_fit = reference
         lm_tables = _fit_reference_lm_tables(
-            ref_for_fit, lm_order=lm_order, alpha=alpha,
-            text_col=text_col,
+            reference, lm_order=lm_order, alpha=alpha
         )
-    # stage 0 through THE one helper (r17; the funnel is one bounded
-    # single-row action, the survivors stay lazy, the active flag set
-    # is dropped by set-difference — the r16 leak class)
-    docs, rules_funnel = _apply_rule_screen(
-        docs, text_col=text_col, rules=rules, rules_config=rules_config
-    )
     m_pre = run_ccnet_prefilter(
         spark, docs, reference, os.path.join(out_dir, "prefilter"),
-        q=q, alpha=alpha, lm_order=lm_order, lam=lam,
-        text_col=text_col, id_col=id_col, source_col=source_col,
-        scrub=False,  # scrubbed once above
-        tables=lm_tables,
+        q=q, alpha=alpha, lm_order=lm_order, lam=lam, tables=lm_tables,
     )
-    if rules and m_pre["n_docs"] != rules_funnel["n_pass_all"]:
-        raise ValueError(
-            f"stage handoff diverged: the rule screen passed "
-            f"{rules_funnel['n_pass_all']} docs but the prefilter "
-            f"observed {m_pre['n_docs']} — the lazy rules_ok predicate "
-            "did not reproduce the funnel's cut"
-        )
-    kept_docs = spark.read.parquet(m_pre["path"])
+    screen = _check_handoff(
+        rules_funnel, rules_config, m_pre["n_docs"], "prefilter"
+    )
     m_cur = run_curation_pipeline(
-        spark, kept_docs, seeds, target,
-        os.path.join(out_dir, "curation"),
-        k=k, text_col=text_col, id_col=id_col, label_col=label_col,
-        n_buckets=n_buckets, n_rounds=n_rounds, lr=lr, n_gram=n_gram,
-        min_precision=min_precision, curve_bins=curve_bins,
-        dsir_buckets=dsir_buckets, seed=seed, n_shards=n_shards,
-        calibrate=calibrate, scrub=False,  # scrubbed once above
-        val_frac=val_frac, seeds_val=seeds_val,
+        spark, spark.read.parquet(m_pre["path"]), seeds, target,
+        os.path.join(out_dir, "curation"), **gate,
     )
     if m_cur["n_docs"] != m_pre["n_kept"]:
         raise ValueError(
@@ -1132,39 +1060,31 @@ def run_staged_curation(
             publish_staged_gate_model,
         )
 
-        lm = lm_tables[0]
-        bg, tg, g4, g5 = (lm_tables[1:] + [None] * 4)[:4]
+        calibrated = m_cur["calibrated"]
         published_version = publish_staged_gate_model(
             publish_model_dir,
-            lm=lm, thresholds=m_pre["thresholds"], q=m_pre["q"],
+            tables=lm_tables, thresholds=m_pre["thresholds"], q=m_pre["q"],
             weights=m_cur["model"]["weights"],
             bias=m_cur["model"]["bias"],
             threshold=m_cur["threshold"],
-            alpha=alpha, lam=lam, bigram=bg, trigram=tg,
-            fourgram=g4, fivegram=g5,
-            n_buckets=n_buckets, n_gram=n_gram,
+            alpha=alpha, lam=lam,
+            n_buckets=m_cur["n_buckets"], n_gram=m_cur["n_gram"],
             # the stage-0 screen is part of the published decision
             # function: without it a rotated stream would keep
             # rule-failing docs the batch cut dropped (r16 ADVICE)
             rules_config=(rules_config or {}) if rules else None,
             cal_table=(
                 [tuple(r) for r in m_cur["calibration_table"]]
-                if calibrate else None
+                if calibrated else None
             ),
-            curve_bins=curve_bins if calibrate else None,
+            curve_bins=m_cur["curve_bins"] if calibrated else None,
         )
     manifest = {
-        # with the rule screen on, the corpus count is the funnel's
-        # n_total (the prefilter only ever saw the survivors)
-        "n_docs": rules_funnel["n_total"] if rules else m_pre["n_docs"],
-        "n_kept_rules": rules_funnel["n_pass_all"] if rules else None,
+        **screen,
         "n_kept_prefilter": m_pre["n_kept"],
         "n_kept_gate": m_cur["n_kept"],
         "n_selected": m_cur["n_selected"],
         "pii_scrubbed": scrub,
-        "rules": rules,
-        "rules_funnel": rules_funnel,
-        "rules_config": rules_config if rules else None,
         "published_version": published_version,
         "prefilter": m_pre,
         # the curation manifest's in-memory-only model rides the

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drive_bc_datapipeline_spark.session import local_frame
+from drive_bc_datapipeline_spark.session import local_frame, scoped_conf
 
 
 def hash_bucket(col, n_buckets: int):
@@ -350,11 +350,8 @@ def train_hashed_linear(
         # re-optimization has nothing to improve there and its
         # per-query-stage scheduling adds ~25% to each of the n_rounds
         # sequential jobs (r18 A/B: 5 rounds 2.5s on / 2.0s off,
-        # interleaved twice). Scope the toggle to the round loop and
-        # restore unconditionally.
-        aqe_orig = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        try:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
+        # interleaved twice). Scope the toggle to the round loop.
+        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
             model: dict[int, float] = {-1: 0.0}  # -1 = bias
             for _round in range(n_rounds):
                 wdf = local_frame(
@@ -368,8 +365,6 @@ def train_hashed_linear(
                     w = model.get(b, 0.0)
                     reg = 0.0 if b == -1 else l2 * w  # bias unregularized
                     model[b] = w - lr * (float(row["g"]) / n + reg)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_orig)
     finally:
         # unpersist on EVERY exit (including the validation raises
         # above) so no invocation leaves CacheManager entries behind

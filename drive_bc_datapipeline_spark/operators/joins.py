@@ -27,6 +27,8 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from drive_bc_datapipeline_spark.session import scoped_conf
+
 
 def _row_salt(df: DataFrame, n_salts: int) -> Column:
     """Deterministic per-row salt in [0, n_salts).
@@ -186,25 +188,11 @@ def bloom_pruned_joins(
     session confs. The injected filter shows as ``bloom_filter_agg``/
     ``might_contain`` in the physical plan.
     """
-    keys = {
+    with scoped_conf(spark, {
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold":
             creation_side_threshold,
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold":
             application_side_threshold,
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-    }
-    prev: dict[str, str | None] = {}
-    for k, v in keys.items():
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-        spark.conf.set(k, v)
-    try:
+    }):
         yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

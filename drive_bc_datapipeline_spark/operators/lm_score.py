@@ -142,9 +142,9 @@ def ngram_lm_table(
     text_col: str = "text",
 ) -> DataFrame:
     """Fit the order-``k`` half of the target-conditioned backoff LM
-    on the reference corpus (r17 — ONE generic fit for every order,
-    the r16 bigram/trigram fits are thin wrappers): tuple counts plus
-    their context totals in ONE relation —
+    on the reference corpus (ONE generic fit for every order, ``k=2``
+    the bigram table, ``k=3`` the trigram): tuple counts plus their
+    context totals in ONE relation —
 
         (w1 .. wk,       n)  adjacent-k-tuple count c(w1 .. wk)
         (w1 .. NULL,     n)  context total c(w1 .. w_{k-1})
@@ -404,89 +404,3 @@ def score_docs_under_ngram_chain(
         )
     )
 
-
-# ---------------------------------------------------------------------------
-# Order-2/3 thin wrappers — the r16 public surface, preserved
-# verbatim in signature and semantics; their bodies ARE the generic
-# chain (the r16 verdict's near-copy deletion).
-# ---------------------------------------------------------------------------
-
-
-def bigram_lm_table(
-    ref: DataFrame,
-    *,
-    text_col: str = "text",
-) -> DataFrame:
-    """The order-2 ``ngram_lm_table``: pair counts (w1, w2, n) plus
-    context totals (w1, NULL, n) in one relation — see the generic
-    fit for the shape and guarantees."""
-    return ngram_lm_table(ref, k=2, text_col=text_col)
-
-
-def trigram_lm_table(
-    ref: DataFrame,
-    *,
-    text_col: str = "text",
-) -> DataFrame:
-    """The order-3 ``ngram_lm_table``: triple counts (w1, w2, w3, n)
-    plus context totals (w1, w2, NULL, n)."""
-    return ngram_lm_table(ref, k=3, text_col=text_col)
-
-
-def bigram_backoff_stats(
-    bigram: DataFrame, unigram: DataFrame
-) -> tuple[float, float]:
-    """(V, oov_logp) + the order-2 same-reference validation —
-    ``ngram_chain_stats`` over ``[unigram, bigram]``."""
-    return ngram_chain_stats([unigram, bigram])
-
-
-def trigram_backoff_stats(
-    trigram: DataFrame, bigram: DataFrame, unigram: DataFrame
-) -> tuple[float, float]:
-    """(V, oov_logp) + the order-3 same-reference validation chain —
-    ``ngram_chain_stats`` over ``[unigram, bigram, trigram]``."""
-    return ngram_chain_stats([unigram, bigram, trigram])
-
-
-def score_docs_under_bigram_lm(
-    docs: DataFrame,
-    bigram: DataFrame,
-    unigram: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 0.5,
-    lam: float = 0.7,
-    stats: tuple[float, float] | None = None,
-) -> DataFrame:
-    """The order-2 chain: ``score_docs_under_ngram_chain`` over
-    ``[unigram, bigram]`` — lower avg_nll = closer to the reference's
-    word ORDER, not just its vocabulary."""
-    return score_docs_under_ngram_chain(
-        docs, [unigram, bigram],
-        text_col=text_col, id_col=id_col, alpha=alpha, lam=lam,
-        stats=stats,
-    )
-
-
-def score_docs_under_trigram_lm(
-    docs: DataFrame,
-    trigram: DataFrame,
-    bigram: DataFrame,
-    unigram: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 0.5,
-    lam: float = 0.7,
-    stats: tuple[float, float] | None = None,
-) -> DataFrame:
-    """The order-3 chain: ``score_docs_under_ngram_chain`` over
-    ``[unigram, bigram, trigram]`` — separates corpora that preserve
-    bigram statistics but scramble triples (test-pinned)."""
-    return score_docs_under_ngram_chain(
-        docs, [unigram, bigram, trigram],
-        text_col=text_col, id_col=id_col, alpha=alpha, lam=lam,
-        stats=stats,
-    )

@@ -20,7 +20,8 @@ hot path, no shuffle, no UDFs:
 conjunction ``rules_ok``; ``quality_rule_funnel`` rolls the flags to
 the H13 one-row funnel so a run manifest can show WHICH rule drops
 what (a pass count per rule, not just the survivor count).
-``run_staged_curation(rules=True)`` wires this as stage 0.
+``quality_rule_screen`` is the two together as the stage-0 cut the
+curation jobs (``rules=True``) and the streaming CCNet gate apply.
 
 Edge semantics (mirrored exactly by the sequential reference in
 tests/test_quality_rules.py): tokens are the repo-wide non-empty
@@ -358,3 +359,20 @@ def quality_rule_funnel(flags: DataFrame) -> DataFrame:
         )
     )
     return flags.agg(*aggs)
+
+
+def quality_rule_screen(
+    df: DataFrame, **config
+) -> tuple[DataFrame, DataFrame]:
+    """``(survivors, funnel)``: the rows of ``df`` that pass every
+    active rule, with ``df``'s own schema (the appended flag set is
+    dropped by set-difference, so every active flag goes), and the
+    lazy one-row ``quality_rule_funnel`` of the same flags. THE one
+    copy of the stage-0 screen, shared by the batch curation jobs and
+    the streaming CCNet gate; ``config`` is ``quality_rule_flags``'
+    keyword arguments. Both frames stay lazy: the ``rules_ok``
+    predicate fuses into whatever scan the consumer runs."""
+    flagged = quality_rule_flags(df, **config)
+    added = [c for c in flagged.columns if c not in df.columns]
+    survivors = flagged.filter(F.col("rules_ok")).drop(*added)
+    return survivors, quality_rule_funnel(flagged)

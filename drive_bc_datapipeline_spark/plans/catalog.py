@@ -336,6 +336,7 @@ GROUP BY 1
 @query("bloom_pruned_join_gate", BLOOM_GATE_ORACLE)
 def bloom_pruned_join_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from drive_bc_datapipeline_spark.operators.joins import bloom_pruned_joins
+    from drive_bc_datapipeline_spark.session import scoped_conf
 
     l = t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
@@ -356,18 +357,14 @@ def bloom_pruned_join_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Broadcast would bypass the shuffle join the bloom filter targets;
     # disable it for this plan only, restore after materializing.
-    prev_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        with bloom_pruned_joins(spark):
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            if "bloom_filter_agg" not in plan or "might_contain" not in plan:
-                raise RuntimeError(
-                    "runtime bloom filter did not inject; plan head: "
-                    + plan[:500]
-                )
-            # Execute NOW (confs still widened) and pin the result; the
-            # driver's later collect reads the checkpointed rows.
-            return joined.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bcast)
+    no_bcast = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+    with scoped_conf(spark, no_bcast), bloom_pruned_joins(spark):
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        if "bloom_filter_agg" not in plan or "might_contain" not in plan:
+            raise RuntimeError(
+                "runtime bloom filter did not inject; plan head: "
+                + plan[:500]
+            )
+        # Execute NOW (confs still widened) and pin the result; the
+        # driver's later collect reads the checkpointed rows.
+        return joined.localCheckpoint(eager=True)

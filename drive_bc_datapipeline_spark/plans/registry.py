@@ -63,161 +63,11 @@ GATE_WINDOW = 50
 
 #: key -> earliest round whose green row satisfies the pin. Add an
 #: entry when a query's PLAN changes materially (set it to the current
-#: round + 1, i.e. the next driver round); never remove entries by
-#: hand — expired pins are inert and document the re-verification.
+#: round + 1, i.e. the next driver round). Delete an entry once it has
+#: expired (``active_pins()`` no longer lists it): an expired pin is
+#: inert, and git history plus the CORRECTNESS_r*.json artifacts keep
+#: the record of its re-verification.
 GATE_PIN: dict[str, int] = {
-    # round-7 plan changes that must earn a fresh green row:
-    "dedup_ngram_jaccard": 7,  # verification replan (size-bound prefilter)
-    "mmr_diversified_topk": 7,  # empty-pool guard in the greedy loop
-    # round-7 memoized pair-input rewire (materialized intermediate):
-    "dedup_connected_components": 7,
-    "dedup_clusters_lsss": 7,
-    "dup_cluster_size_histogram": 7,
-    "dup_graph_triangles": 7,
-    "llm_data_prep_funnel": 7,
-    # round-7 pinned-subtree replans (FileScan-count cuts):
-    # (kcore_peeling and ann_pq_topk were round-7 pins too — their
-    # r17 optimization re-pins below supersede them; each key appears
-    # once per the duplicate-literal hygiene rule above):
-    "kmeans_embeddings": 7,
-    "ann_ivf_topk": 7,
-    "ann_ivf_recall_at_k": 7,
-    "apply_mixture_sampling": 7,
-    "chi2_type_by_dow": 7,
-    "mutual_info_type_hour": 7,
-    "max_concurrent_intervals": 7,
-    "value_outliers_mad": 7,
-    "bm25_search_topk": 7,
-    "decontaminate_eval": 7,
-    # round-7 hash-early replan; round-8 (h, length) collision guard on
-    # the self-join key — no r7 green row exists, so the bump to 8 is
-    # the same window slot, just documented precisely:
-    "cross_source_content_overlap": 8,
-    # round-7 re-scan-audit replans (pinned bounded frames / fan-out
-    # instead of per-consumer fact re-scans):
-    "incremental_dedup_status": 7,
-    "winnowing_fingerprint_pairs": 7,
-    "zipf_slope": 7,
-    "join_cardinality_estimate": 7,
-    "unigram_logprob_score": 7,
-    "dedup_simhash": 7,
-    # minhash_estimate_quality and dedup_minhash_lsh were pinned at 7
-    # here too (satisfied by their r8 green rows); a dict literal can't
-    # carry the same key twice, so those expired pins live in this
-    # comment and the keys appear once below with their r11 re-pins
-    # (r11 verdict hygiene item — the duplicate literals were F601-class
-    # noise, behavior unchanged since Python kept the later value):
-    # round-9 replan: fingerprint min folded in-row (array_min) —
-    # explode+groupBy removed, zero-shuffle projection (that pin,
-    # value 9, is superseded by the r17 spread re-pin below):
-    # round-10 replan: lexical candidate generation bounded (df screen
-    # + rarest-M query terms — Lucene MLT shape); scores change (qsz
-    # is now the capped set size), oracle updated symmetrically. That
-    # pin (value 10, satisfied by the r10 green row) is superseded by
-    # the r11 single-tokenize entry below — a dict literal can't carry
-    # the same key twice, so the expired pin lives in this comment:
-    # round-10 replan: driver-side iteration over the collected
-    # ≤|types|² edge matrix (enumerable-domain boundedness) replaces
-    # the distributed join-agg rounds; same arithmetic, same oracle.
-    # That pin (value 10, satisfied by its r10 green row) is
-    # superseded by the r19 local-relation entry below — a dict
-    # literal can't carry the same key twice.
-    # round-10 rewire: consumes F9's pairs through the session pair
-    # memo (materialized-view rule; rows identical, cold==warm-tested).
-    # Already in the r10 window (last green r5) — no extra slot:
-    "semantic_dedup_canonical": 10,
-    # round-10 replan: spread() widens the single-row-group scan before
-    # the CPU-heavy projections (rows identical; layout-only; no-op on
-    # multi-file corpora). A/B-kept only where it measured faster —
-    # regex-heavy pii scrub and the d²-fan-out PCA Gram — plus the F13
-    # shingle pin (flat, kept for consumer-stage layout); light
-    # tokenize+partial-agg keys were A/B-reverted (the exchange cost
-    # more than single-core tokenize). All in the r10 window — free:
-    "dedup_prefix_jaccard": 10,
-    # pii_scrub_stats and embedding_pca_projection were pinned at 10
-    # here too (satisfied by their r10 green rows); a dict literal
-    # can't carry the same key twice, so those expired pins live in
-    # this comment and the keys appear once below with their r14
-    # spread(by=) re-pins:
-    # round-11 replan: spread() widens the one-row-group scan ahead of
-    # the shingle explode (layout-only; rows identical; no-op on
-    # multi-file corpora). A/B-kept with tools/ab_spread.py
-    # (interleaved arms, min-of-3 at sf0.1): minhash_lsh 2.81->2.20s,
-    # estimate_quality 3.18->2.62s; a second A/B then switched both to
-    # hash-by-doc_id partitioning (2.20->1.61s, 2.62->1.45s — skips
-    # round-robin's pre-exchange local row sort; tables.spread
-    # docstring). The same treatment was A/B-REVERTED on
-    # dedup_ngram_jaccard, dedup_simhash and ann_pq_topk (slower).
-    # NOTE these two are r8-era (the r10 verdict mislabeled them
-    # in-window), so each pin spends an r11 slot:
-    "dedup_minhash_lsh": 11,
-    "minhash_estimate_quality": 11,
-    # round-11 replan: one tokenize pass — the pinned relation is the
-    # tf-annotated distinct-token table (groupBy count with map-side
-    # combine); BM25 consumes tf in-row (tf_col), the second documents
-    # text scan is gone. Result set bit-identical (exceptAll both ways
-    # = 0 at sf0.1); A/B interleaved min-of-3 in one session: 10.8s ->
-    # 3.9s. NOT in the r11 staleness window (last green r10) — this
-    # pin deliberately spends one window slot, the round's only such:
-    "hybrid_rrf_search_topk": 11,
-    # round-14 replan: the banked spread(by=) switches land — hash
-    # partitioning on the table's unique id replaces round-robin
-    # (skips the pre-exchange local row sort; A/B tracked in
-    # tables.spread: pii 0.84→0.52s, pca 1.24→1.13s at sf0.1). Both
-    # keys are r10-green and inside the r14 staleness window, so the
-    # pins are free (zero extra slots):
-    "pii_scrub_stats": 14,
-    # embedding_pca_projection was pinned at 14 here (satisfied by its
-    # r14 green row); a dict literal can't carry the same key twice, so
-    # that expired pin lives in this comment and the key appears once
-    # below with its r15 revert pin:
-    # round-15 replan: the pca spread(by="vec_id") switch REVERTED to
-    # round-robin — the r14-verdict-ordered interleaved idle A/B at the
-    # r15 HEAD (tools/ab_spread_by.py, min-of-3, load 0.75) read hash
-    # 1.094s vs rr 1.069s (a wash; the r14 banked prior was measured
-    # pre-switch), and the r14 tracked artifacts showed the switch
-    # regressing (1.25 driver / 1.38 idle vs the 0.98 r13 rr floor).
-    # pii_scrub_stats re-measured in the same A/B session: by= KEEPS
-    # (0.492 vs 0.558) — no change, its r14 pin stands. pca is
-    # r14-green, outside the r15 r11-era window, so this pin spends
-    # one r15 slot:
-    "embedding_pca_projection": 15,
-    # round-16 replan (the r15 verdict's Next #2): the multimodal
-    # decode cores are REAL now — I1b builds actual 24-bit BMPs from
-    # the text bytes and features the DECODED pixel array (new
-    # px_sum/top_left_r columns), I4 builds actual PCM WAVs and
-    # windows the DECODED samples (new sample_rate/n_samples
-    # columns); oracles updated to the same arithmetic. Both keys are
-    # r14-green, outside the r16 r12-era window, so each pin spends
-    # one r16 slot:
-    "multimodal_image_stub": 16,
-    "multimodal_audio_features_stub": 16,
-    # round-17 plan change (r16 verdict Next #4): the I2 resize key
-    # replans from length arithmetic to the REAL pixel path
-    # (decode → NN grid → re-encode → re-decode → feature; new
-    # px_sum/top_left_r columns, oracle restates the grid math from
-    # the text convention) — must earn a fresh green row:
-    "multimodal_resize_stub": 17,
-    # round-17 plan change: the I3 frame-sample key replans from the
-    # 1-KiB-slice stand-in to a REAL YUV4MPEG2 parse (new
-    # px_sum/y_sum columns; oracle restates the planar layout from
-    # the text convention) — must earn a fresh green row:
-    "multimodal_frame_sample_stub": 17,
-    # round-17 OPTIMIZATION replans (results oracle-identical, plans
-    # changed — each must earn a fresh green row):
-    # ADC LUT collapse: M chained broadcast joins -> ONE broadcast
-    # map-lookup join (snapshot regenerated):
-    "ann_pq_topk": 17,
-    # spread(by=doc_id) re-parallelization of the single-row-group
-    # local scan (profile: the whole key ran as one task):
-    "doc_fingerprint": 17,
-    # per-round localCheckpoint in the peel loop (plan was growing
-    # quadratically with rounds — ~110 exchanges for 3 rounds):
-    "kcore_peeling": 17,
-    # (r18 note: a dedup_ngram_jaccard verification replan was built,
-    # gate-pinned here at 18, then REVERTED after three tracked bench
-    # runs read it consistently slower — see the comment at the key's
-    # plan; no r18 pin ships because the shipped plan is the r17 one.)
     # round-19 replans: relations built from Python rows (prefix sums,
     # the bbox table, the PageRank result) are now JVM LocalRelations
     # (session.local_frame) instead of Python-RDD scans — the plans

@@ -12,7 +12,8 @@ long tail).
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Iterator, Mapping, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -117,3 +118,25 @@ def local_frame(
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
+
+
+@contextmanager
+def scoped_conf(
+    spark: SparkSession, confs: Mapping[str, str]
+) -> Iterator[None]:
+    """Set ``confs`` on the session for the ``with`` block only — THE one
+    copy of the save/set/restore pattern. On every exit, a raise
+    included, each key gets its previous value back, or is unset again
+    if the session had not set it, so later work in the session never
+    inherits a scoped change."""
+    prev = {key: spark.conf.get(key, None) for key in confs}
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)

@@ -28,6 +28,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from drive_bc_datapipeline_spark.session import scoped_conf
+
 
 def read_parquet(
     spark: SparkSession,
@@ -356,12 +358,9 @@ def upsert_partitioned(
     )
     n = latest.count()
     writer = latest.write.mode("overwrite").partitionBy(partition_col)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    dynamic = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    with scoped_conf(spark, dynamic):
         writer.parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return {"touched_partitions": len(touched), "rows_written": n}
 
 

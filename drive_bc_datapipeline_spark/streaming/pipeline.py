@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from drive_bc_datapipeline_spark.session import scoped_conf
+
 # Explicit schema-on-read for the raw event stream (etl-events.py:16-30
 # declared its Kinesis JSON schema the same way).
 RAW_EVENT_SCHEMA = StructType(
@@ -415,18 +417,14 @@ def start_tws_user_stats_stream(
             pass
 
     # transformWithState requires RocksDB; the provider conf is
-    # session-wide, so capture and restore it after start() (the query
-    # snapshots confs at start) — otherwise every later streaming query
-    # in the session silently inherits RocksDB (same pattern as
-    # upsert_partitioned's partitionOverwriteMode handling).
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    # session-wide, so scope it to start() (the query snapshots confs
+    # at start) — otherwise every later streaming query in the session
+    # silently inherits RocksDB.
+    with scoped_conf(spark, {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+    }):
         raw = read_event_stream(spark, source_dir).dropna(subset=["ts"])
         stats = raw.groupBy("user_id").transformWithStateInPandas(
             RunningStats(),
@@ -443,11 +441,6 @@ def start_tws_user_stats_stream(
         if available_now:
             writer = writer.trigger(availableNow=True)
         return writer.start()
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev_provider)
 
 
 def start_session_window_stream(
@@ -797,40 +790,14 @@ def classifier_gate(
     return kept
 
 
-def _higher_order_tables(bigram, trigram, fourgram, fivegram) -> list:
-    """The supplied chain above order 1, with the contiguity guard —
-    THE one copy: an order-m table without every lower order has no
-    backoff to interpolate onto, so a gap is a config error, not a
-    shorter chain."""
-    supplied = [bigram, trigram, fourgram, fivegram]
-    names = ("bigram", "trigram", "fourgram", "fivegram")
-    present = [t is not None for t in supplied]
-    if True in present:
-        last = len(present) - 1 - present[::-1].index(True)
-        missing = [names[i] for i in range(last) if not present[i]]
-        if missing:
-            raise ValueError(
-                f"a {names[last]} table without its "
-                f"{', '.join(missing)} backoff: the order-{last + 2} "
-                "chain interpolates level by level down to the "
-                "unigram — pass every lower-order table fit on the "
-                "same reference"
-            )
-        return supplied[: last + 1]
-    return []
-
-
-def _validate_lm_order(
-    lm_order: int | None, bigram, trigram=None, fourgram=None,
-    fivegram=None,
-) -> None:
+def _validate_lm_order(lm_order: int | None, tables: list) -> None:
     """THE one copy of the manifest-vs-model order check: thresholds
-    fit at lm_order=2 applied with ``bigram=None`` would silently score
-    order-1 and the streamed kept-set would diverge from the batch
-    cut. Pass the batch manifest's ``lm_order``; ``None`` skips the
-    check (a caller without a manifest already chose the scorer by
-    supplying the tables). The supplied tables must be EXACTLY the
-    manifest's order, in both directions, up to order 5."""
+    fit at lm_order=2 applied with only the unigram table would
+    silently score order-1 and the streamed kept-set would diverge
+    from the batch cut. Pass the batch manifest's ``lm_order``;
+    ``None`` skips the check (a caller without a manifest already
+    chose the scorer by supplying the tables). ``tables`` must be
+    EXACTLY the manifest's order, in both directions, up to order 5."""
     if lm_order is None:
         return
     if lm_order not in (1, 2, 3, 4, 5):
@@ -838,9 +805,7 @@ def _validate_lm_order(
             f"lm_order={lm_order}: the streaming gates score order 1 "
             "(unigram) through 5 (the generic backoff chain)"
         )
-    supplied = 1 + len(
-        _higher_order_tables(bigram, trigram, fourgram, fivegram)
-    )
+    supplied = len(tables)
     if supplied < lm_order:
         raise ValueError(
             f"lm_order={lm_order} per the manifest but only order-"
@@ -860,29 +825,47 @@ def _validate_lm_order(
         )
 
 
-def _check_ccnet_gate_inputs(
-    thresholds, bigram, trigram, fourgram=None, fivegram=None
-) -> None:
+#: the LM chain's orders by name: the chain guard's messages and the
+#: CCNet manifest's ``<name>_path`` keys
+LM_ORDER_NAMES = ("unigram", "bigram", "trigram", "fourgram", "fivegram")
+
+
+def _check_ccnet_gate_inputs(thresholds, tables: list) -> None:
     """THE one copy of the CCNet gate's structural guards, shared by
-    the gate and both CCNet publishers."""
+    the gate and both CCNet publishers: per-domain cuts to apply, and
+    ``tables = [unigram, order2, ...]`` up to order 5 with each table
+    at its own order. A table above its slot is a chain gap (an
+    order-m table without every lower order has no backoff to
+    interpolate onto), a config error rather than a shorter chain."""
     if not thresholds:
         raise ValueError(
             "empty thresholds: fit the batch prefilter first — a "
             "gate with no per-domain cuts would keep nothing it can "
             "explain"
         )
-    _higher_order_tables(bigram, trigram, fourgram, fivegram)
+    # (w1 .. wk, n) is order k; the unigram's (tok, logp) is order 1
+    orders = [len(table.columns) - 1 for table in tables]
+    if not 1 <= len(tables) <= 5 or max(orders) > 5:
+        raise ValueError(
+            f"LM tables of orders {orders}: pass [unigram, order2, ...] "
+            "up to order 5 (CCNet's KenLM order)"
+        )
+    for m, got in enumerate(orders, start=1):
+        if got > m:
+            raise ValueError(
+                f"a {LM_ORDER_NAMES[got - 1]} table without its "
+                f"{', '.join(LM_ORDER_NAMES[m - 1:got - 1])} backoff: "
+                f"the order-{got} chain interpolates level by level "
+                "down to the unigram — pass every lower-order table "
+                "fit on the same reference"
+            )
 
 
 def ccnet_gate(
-    lm,
+    tables: list,
     thresholds: dict[str, float],
     q: float,
     *,
-    bigram=None,
-    trigram=None,
-    fourgram=None,
-    fivegram=None,
     alpha: float = 0.5,
     lam: float = 0.7,
     lm_order: int | None = None,
@@ -891,12 +874,13 @@ def ccnet_gate(
     """J12: the frozen CCNet cut (H49/H50/H52 scoring → H48 per-domain
     threshold), optionally behind the H51 rule screen.
 
-    ``lm`` is the unigram_lm_table relation; ``bigram`` … ``fivegram``
-    select the generic backoff chain at their order (each requires
-    every lower order). ``thresholds``/``q`` are the batch prefilter
-    manifest's {source: threshold} dict and quantile, applied through
-    apply_domain_filter's pre-collected-rows path, so a document from a
-    domain the fit never saw fails fast exactly like the batch job.
+    ``tables`` is the LM chain ``[unigram, order2, ...]``: the
+    unigram_lm_table relation alone scores order 1, and each
+    ngram_lm_table after it raises the backoff chain's order by one.
+    ``thresholds``/``q`` are the batch prefilter manifest's {source:
+    threshold} dict and quantile, applied through apply_domain_filter's
+    pre-collected-rows path, so a document from a domain the fit never
+    saw fails fast exactly like the batch job.
     Pass the SAME alpha/lam the manifest records, and its ``lm_order``
     so a thresholds/model order mismatch raises instead of silently
     scoring the wrong order. Token-less docs drop (the H49 contract).
@@ -924,31 +908,23 @@ def ccnet_gate(
         unigram_oov_logp,
     )
     from drive_bc_datapipeline_spark.operators.quality_rules import (
-        quality_rule_flags,
+        quality_rule_screen,
     )
 
-    _validate_lm_order(lm_order, bigram, trigram, fourgram, fivegram)
-    _check_ccnet_gate_inputs(thresholds, bigram, trigram, fourgram,
-                             fivegram)
+    _check_ccnet_gate_inputs(thresholds, tables)
+    _validate_lm_order(lm_order, tables)
     threshold_rows = [
         {"source": s, "q": float(q), "threshold": float(t)}
         for s, t in sorted(thresholds.items())
     ]
-    tables = [lm] + _higher_order_tables(
-        bigram, trigram, fourgram, fivegram
-    )
     if len(tables) >= 2:
         frozen_stats = ngram_chain_stats(tables)
     else:
-        frozen_oov = unigram_oov_logp(lm)
+        frozen_oov = unigram_oov_logp(tables[0])
 
     def kept(df: DataFrame) -> DataFrame:
         if rules_config is not None:
-            flagged = quality_rule_flags(
-                df, text_col=DOC_TEXT, **rules_config
-            )
-            added = [c for c in flagged.columns if c not in df.columns]
-            df = flagged.filter(F.col("rules_ok")).drop(*added)
+            df, _funnel = quality_rule_screen(df, **rules_config)
         if len(tables) >= 2:
             scores = score_docs_under_ngram_chain(
                 df, tables,
@@ -957,7 +933,7 @@ def ccnet_gate(
             )
         else:
             scores = score_docs_under_lm(
-                df, lm, text_col=DOC_TEXT, id_col=DOC_ID,
+                df, tables[0], text_col=DOC_TEXT, id_col=DOC_ID,
                 oov_logp=frozen_oov,
             )
         return apply_domain_filter(
@@ -1147,36 +1123,30 @@ CCNET_GATE_MANIFEST_KEYS = (
 def publish_ccnet_gate_model(
     model_dir: str,
     *,
-    lm,
+    tables: list,
     thresholds: dict[str, float],
     q: float,
     alpha: float = 0.5,
     lam: float = 0.7,
-    bigram=None,
-    trigram=None,
-    fourgram=None,
-    fivegram=None,
     rules_config: dict | None = None,
 ) -> int:
     """Publish a CCNet gate model under the rotation protocol: the
-    vocabulary-bounded LM relations land as parquet under
-    ``model_dir/ccnet_v{N}/`` FIRST, then the manifest referencing
-    them swaps in atomically — an in-flight stream can never resolve
-    a version whose tables are still being written. ``thresholds``/
-    ``q``/``alpha``/``lam`` come from the batch prefilter's manifest;
-    ``lm_order`` is derived from the supplied tables (the
-    _validate_lm_order contract, so manifest and tables cannot
-    disagree at birth). ``rules_config``: the batch prefilter's
-    stage-0 rule screen, recorded so a rotated stream applies THE
-    SAME screen (``None`` = the batch ran without rules; ``{}`` =
-    rules on at the Gopher defaults)."""
-    _check_ccnet_gate_inputs(thresholds, bigram, trigram, fourgram,
-                             fivegram)
+    vocabulary-bounded LM relations (``tables = [unigram, order2,
+    ...]``) land as parquet under ``model_dir/ccnet_v{N}/`` FIRST,
+    then the manifest referencing them swaps in atomically — an
+    in-flight stream can never resolve a version whose tables are
+    still being written. ``thresholds``/``q``/``alpha``/``lam`` come
+    from the batch prefilter's manifest; ``lm_order`` is
+    ``len(tables)`` (the _validate_lm_order contract, so manifest and
+    tables cannot disagree at birth). ``rules_config``: the batch
+    prefilter's stage-0 rule screen, recorded so a rotated stream
+    applies THE SAME screen (``None`` = the batch ran without rules;
+    ``{}`` = rules on at the Gopher defaults)."""
+    _check_ccnet_gate_inputs(thresholds, tables)
     version = _next_gate_version(model_dir)
     manifest = _write_ccnet_tables(
-        model_dir, version, lm=lm, thresholds=thresholds, q=q,
-        alpha=alpha, lam=lam, bigram=bigram, trigram=trigram,
-        fourgram=fourgram, fivegram=fivegram,
+        model_dir, version, tables=tables, thresholds=thresholds, q=q,
+        alpha=alpha, lam=lam,
     )
     manifest["rules_config"] = (
         dict(rules_config) if rules_config is not None else None
@@ -1188,42 +1158,33 @@ def _write_ccnet_tables(
     model_dir: str,
     version: int,
     *,
-    lm,
+    tables: list,
     thresholds: dict[str, float],
     q: float,
     alpha: float,
     lam: float,
-    bigram=None,
-    trigram=None,
-    fourgram=None,
-    fivegram=None,
 ) -> dict:
     """Write the vocabulary-bounded LM tables under the version dir
     and return the CCNet manifest half referencing them — THE one
     copy shared by the plain and the staged publishers. Tables land
-    BEFORE the caller's manifest swap."""
+    BEFORE the caller's manifest swap; an order the chain does not
+    reach keeps its ``<name>_path`` key as None."""
     import os
 
     base = os.path.join(model_dir, f"ccnet_v{version}")
     lm_path = os.path.join(base, "lm")
-    lm.write.mode("overwrite").parquet(lm_path)
-    higher = _higher_order_tables(bigram, trigram, fourgram, fivegram)
+    tables[0].write.mode("overwrite").parquet(lm_path)
     manifest = {
         "gate": "ccnet",
         "thresholds": {s: float(t) for s, t in sorted(thresholds.items())},
         "q": float(q),
         "alpha": float(alpha),
         "lam": float(lam),
-        "lm_order": 1 + len(higher),
+        "lm_order": len(tables),
         "lm_path": lm_path,
-        "bigram_path": None,
-        "trigram_path": None,
-        "fourgram_path": None,
-        "fivegram_path": None,
+        **{f"{name}_path": None for name in LM_ORDER_NAMES[1:]},
     }
-    for name, tab in zip(
-        ("bigram", "trigram", "fourgram", "fivegram"), higher
-    ):
+    for name, tab in zip(LM_ORDER_NAMES[1:], tables[1:]):
         path = os.path.join(base, name)
         manifest[f"{name}_path"] = path
         tab.write.mode("overwrite").parquet(path)
@@ -1233,7 +1194,7 @@ def _write_ccnet_tables(
 def publish_staged_gate_model(
     model_dir: str,
     *,
-    lm,
+    tables: list,
     thresholds: dict[str, float],
     q: float,
     weights: dict[int, float],
@@ -1241,10 +1202,6 @@ def publish_staged_gate_model(
     threshold: float,
     alpha: float = 0.5,
     lam: float = 0.7,
-    bigram=None,
-    trigram=None,
-    fourgram=None,
-    fivegram=None,
     n_buckets: int = 4096,
     n_gram: int = 1,
     cal_table: list | None = None,
@@ -1255,10 +1212,11 @@ def publish_staged_gate_model(
     classifier) as ONE versioned model, so a staged sink rotates
     atomically — publishing the halves separately would let a stream
     resolve a new prefilter against an old classifier mid-swap. The
-    LM tables land under the version dir before the manifest swap
-    (the publish_ccnet_gate_model discipline); the classifier half
-    travels through ``classifier_gate_manifest`` (same calibrated
-    pair-or-nothing rule).
+    LM tables (``[unigram, order2, ...]``) land under the version dir
+    before the manifest swap (the publish_ccnet_gate_model
+    discipline); the classifier half travels through
+    ``classifier_gate_manifest`` (same calibrated pair-or-nothing
+    rule).
 
     ``rules_config``: the batch job's stage-0 rule screen, recorded in
     the manifest so a rotated stream applies THE SAME screen — a
@@ -1267,15 +1225,13 @@ def publish_staged_gate_model(
     keeps rule-failing docs the batch cut dropped. ``None`` = the
     batch job ran without rules; ``{}`` = rules on at the published
     Gopher defaults."""
-    _check_ccnet_gate_inputs(thresholds, bigram, trigram, fourgram,
-                             fivegram)
+    _check_ccnet_gate_inputs(thresholds, tables)
     version = _next_gate_version(model_dir)
     manifest = {
         "gate": "staged",
         "ccnet": _write_ccnet_tables(
-            model_dir, version, lm=lm, thresholds=thresholds, q=q,
-            alpha=alpha, lam=lam, bigram=bigram, trigram=trigram,
-            fourgram=fourgram, fivegram=fivegram,
+            model_dir, version, tables=tables, thresholds=thresholds,
+            q=q, alpha=alpha, lam=lam,
         ),
         "classifier": classifier_gate_manifest(
             weights, bias, threshold,
@@ -1335,17 +1291,13 @@ def _gate_of_manifest(spark: SparkSession, manifest: dict):
             }),
             _gate_of_manifest(spark, manifest["classifier"]),
         )
-    higher = {
-        name: spark.read.parquet(manifest[f"{name}_path"])
-        if manifest.get(f"{name}_path")
-        else None
-        for name in ("bigram", "trigram", "fourgram", "fivegram")
-    }
+    paths = [manifest["lm_path"]] + [
+        manifest.get(f"{name}_path") for name in LM_ORDER_NAMES[1:]
+    ]
     return ccnet_gate(
-        spark.read.parquet(manifest["lm_path"]),
+        [spark.read.parquet(path) for path in paths if path],
         {s: float(t) for s, t in manifest["thresholds"].items()},
         manifest["q"],
-        **higher,
         alpha=manifest["alpha"],
         lam=manifest["lam"],
         # publish derives lm_order from the stored tables, but a

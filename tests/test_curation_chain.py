@@ -767,7 +767,8 @@ def test_run_staged_curation_scrubs_once(spark, tmp_path):
 def test_staged_curation_validates_args_before_stage_one(spark, tmp_path):
     """Stage-2 argument errors must fail BEFORE the corpus-scale
     prefilter runs (review catch): no prefilter output may exist
-    after the raise."""
+    after the raise. An unknown stage-2 setting is a TypeError from
+    binding against build_curation_frames' signature."""
     import os
 
     import pytest
@@ -782,15 +783,17 @@ def test_staged_curation_validates_args_before_stage_one(spark, tmp_path):
         [(1, 1, "a b")], "doc_id long, label int, text string"
     )
     out = str(tmp_path / "early")
-    for kwargs, match in [
-        (dict(val_frac=1.5), "val_frac"),
-        (dict(val_frac=0.3, seeds_val=seeds), "not both"),
-        (dict(lam=1.5), "lam"),
-        (dict(lm_order=6), "lm_order"),  # 5 is valid as of r17
-        (dict(alpha=0.0), "alpha"),
-        (dict(rules_config={"min_words": 5}), "rules_config without"),
+    for kwargs, exc, match in [
+        (dict(val_frac=1.5), ValueError, "val_frac"),
+        (dict(val_frac=0.3, seeds_val=seeds), ValueError, "not both"),
+        (dict(lam=1.5), ValueError, "lam"),
+        (dict(lm_order=6), ValueError, "lm_order"),  # 5 is valid as of r17
+        (dict(alpha=0.0), ValueError, "alpha"),
+        (dict(rules_config={"min_words": 5}), ValueError,
+         "rules_config without"),
+        (dict(n_gramm=2), TypeError, "n_gramm"),
     ]:
-        with pytest.raises(ValueError, match=match):
+        with pytest.raises(exc, match=match):
             run_staged_curation(
                 spark, docs, tiny, seeds, tiny, out, k=1, **kwargs
             )

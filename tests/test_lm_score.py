@@ -365,11 +365,11 @@ def _seq_bigram_score(text: str, lam: float = 0.7) -> tuple[int, float]:
 @pytest.fixture()
 def bg_lm(spark):
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        bigram_lm_table,
+        ngram_lm_table,
     )
 
     ref = spark.createDataFrame(REF, "doc_id long, text string")
-    return bigram_lm_table(ref)
+    return ngram_lm_table(ref, k=2)
 
 
 def test_bigram_table_matches_sequential(spark, bg_lm):
@@ -385,7 +385,7 @@ def test_bigram_table_matches_sequential(spark, bg_lm):
 
 def test_bigram_scores_match_sequential(spark, lm, bg_lm):
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        score_docs_under_bigram_lm,
+        score_docs_under_ngram_chain,
     )
 
     docs = spark.createDataFrame(
@@ -393,7 +393,7 @@ def test_bigram_scores_match_sequential(spark, lm, bg_lm):
     )
     got = {
         r["doc_id"]: (r["n_toks"], r["avg_nll"])
-        for r in score_docs_under_bigram_lm(docs, bg_lm, lm).collect()
+        for r in score_docs_under_ngram_chain(docs, [lm, bg_lm]).collect()
     }
     for i, _src, text in DOCS:
         n, nll = _seq_bigram_score(text)
@@ -403,20 +403,20 @@ def test_bigram_scores_match_sequential(spark, lm, bg_lm):
 
 def test_bigram_guards(spark, lm, bg_lm):
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        score_docs_under_bigram_lm,
+        score_docs_under_ngram_chain,
     )
 
     docs = spark.createDataFrame(
         DOCS, "doc_id long, source string, text string"
     )
     with pytest.raises(ValueError, match="lam"):
-        score_docs_under_bigram_lm(docs, bg_lm, lm, lam=1.5)
+        score_docs_under_ngram_chain(docs, [lm, bg_lm], lam=1.5)
     with pytest.raises(ValueError, match="alpha"):
-        score_docs_under_bigram_lm(docs, bg_lm, lm, alpha=0.0)
+        score_docs_under_ngram_chain(docs, [lm, bg_lm], alpha=0.0)
     # a unigram relation without its OOV row cannot back off
     with pytest.raises(ValueError, match="OOV"):
-        score_docs_under_bigram_lm(
-            docs, bg_lm, lm.filter(F.col("tok").isNotNull())
+        score_docs_under_ngram_chain(
+            docs, [lm.filter(F.col("tok").isNotNull()), bg_lm],
         )
     # tables fit on DIFFERENT references fail the same-reference
     # guard: a bigram context outside the unigram vocabulary proves
@@ -430,7 +430,7 @@ def test_bigram_guards(spark, lm, bg_lm):
         alpha=ALPHA,
     )
     with pytest.raises(ValueError, match="different references"):
-        score_docs_under_bigram_lm(docs, bg_lm, other_ug)
+        score_docs_under_ngram_chain(docs, [other_ug, bg_lm])
 
 
 def test_bigram_cut_differs_on_word_order(spark):
@@ -444,8 +444,8 @@ def test_bigram_cut_differs_on_word_order(spark):
         domain_threshold_table,
     )
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        bigram_lm_table,
-        score_docs_under_bigram_lm,
+        ngram_lm_table,
+        score_docs_under_ngram_chain,
     )
 
     ref = spark.createDataFrame(
@@ -468,8 +468,8 @@ def test_bigram_cut_differs_on_word_order(spark):
     # unigram: order-blind — every doc scores identically
     assert ug_scores[0] == pytest.approx(ug_scores[100], abs=1e-12)
 
-    bg = bigram_lm_table(ref)
-    bg_scored = score_docs_under_bigram_lm(docs, bg, ug)
+    bg = ngram_lm_table(ref, k=2)
+    bg_scored = score_docs_under_ngram_chain(docs, [ug, bg])
     bg_scores = {
         r["doc_id"]: r["avg_nll"] for r in bg_scored.collect()
     }
@@ -502,13 +502,13 @@ def test_bigram_cut_differs_on_word_order(spark):
 
 def test_bigram_plan_shapes(spark, lm, bg_lm):
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        score_docs_under_bigram_lm,
+        score_docs_under_ngram_chain,
     )
 
     docs = spark.createDataFrame(
         DOCS, "doc_id long, source string, text string"
     )
-    scored = score_docs_under_bigram_lm(docs, bg_lm, lm)
+    scored = score_docs_under_ngram_chain(docs, [lm, bg_lm])
     plan = scored._jdf.queryExecution().executedPlan().toString()
     for bad in ("CartesianProduct", "BatchEvalPython", "ArrowEval"):
         assert bad not in plan, plan
@@ -544,7 +544,7 @@ def test_bigram_table_empty_reference_fails(spark):
     silently degrading lm_order=2 to order-blind scoring (review
     catch)."""
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        bigram_lm_table,
+        ngram_lm_table,
     )
 
     single = spark.createDataFrame(
@@ -552,7 +552,7 @@ def test_bigram_table_empty_reference_fails(spark):
         "doc_id long, text string",
     )
     with pytest.raises(ValueError, match="no document.*>= 2 tokens"):
-        bigram_lm_table(single)
+        ngram_lm_table(single, k=2)
 
 
 # ---------------------------------------------------------------------------
@@ -605,11 +605,11 @@ def _seq_trigram_score(text: str, lam: float = 0.7) -> tuple[int, float]:
 @pytest.fixture()
 def tg_lm(spark):
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        trigram_lm_table,
+        ngram_lm_table,
     )
 
     ref = spark.createDataFrame(REF, "doc_id long, text string")
-    return trigram_lm_table(ref)
+    return ngram_lm_table(ref, k=3)
 
 
 def test_trigram_table_matches_sequential(spark, tg_lm):
@@ -629,7 +629,7 @@ def test_trigram_table_matches_sequential(spark, tg_lm):
 
 def test_trigram_scores_match_sequential(spark, lm, bg_lm, tg_lm):
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        score_docs_under_trigram_lm,
+        score_docs_under_ngram_chain,
     )
 
     docs = spark.createDataFrame(
@@ -637,7 +637,9 @@ def test_trigram_scores_match_sequential(spark, lm, bg_lm, tg_lm):
     )
     got = {
         r["doc_id"]: (r["n_toks"], r["avg_nll"])
-        for r in score_docs_under_trigram_lm(docs, tg_lm, bg_lm, lm).collect()
+        for r in score_docs_under_ngram_chain(
+            docs, [lm, bg_lm, tg_lm],
+        ).collect()
     }
     for i, _src, text in DOCS:
         n, nll = _seq_trigram_score(text)
@@ -646,8 +648,8 @@ def test_trigram_scores_match_sequential(spark, lm, bg_lm, tg_lm):
     # lam=0 degrades exactly to the unigram scorer (the chain's base)
     got0 = {
         r["doc_id"]: r["avg_nll"]
-        for r in score_docs_under_trigram_lm(
-            docs, tg_lm, bg_lm, lm, lam=0.0
+        for r in score_docs_under_ngram_chain(
+            docs, [lm, bg_lm, tg_lm], lam=0.0,
         ).collect()
     }
     for i, _src, text in DOCS:
@@ -657,32 +659,33 @@ def test_trigram_scores_match_sequential(spark, lm, bg_lm, tg_lm):
 
 def test_trigram_guards(spark, lm, bg_lm, tg_lm):
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        score_docs_under_trigram_lm,
-        trigram_lm_table,
+        ngram_lm_table,
+        score_docs_under_ngram_chain,
     )
 
     docs = spark.createDataFrame(
         DOCS, "doc_id long, source string, text string"
     )
     with pytest.raises(ValueError, match="lam"):
-        score_docs_under_trigram_lm(docs, tg_lm, bg_lm, lm, lam=-0.1)
+        score_docs_under_ngram_chain(docs, [lm, bg_lm, tg_lm], lam=-0.1)
     with pytest.raises(ValueError, match="alpha"):
-        score_docs_under_trigram_lm(docs, tg_lm, bg_lm, lm, alpha=0.0)
+        score_docs_under_ngram_chain(docs, [lm, bg_lm, tg_lm], alpha=0.0)
     with pytest.raises(ValueError, match="OOV"):
-        score_docs_under_trigram_lm(
-            docs, tg_lm, bg_lm, lm.filter(F.col("tok").isNotNull())
+        score_docs_under_ngram_chain(
+            docs, [lm.filter(F.col("tok").isNotNull()), bg_lm, tg_lm],
         )
     # trigram and bigram tables fit on different references: a
     # trigram context that is not a bigram pair proves the mismatch
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        bigram_lm_table,
+        ngram_lm_table,
     )
 
-    other_bg = bigram_lm_table(
+    other_bg = ngram_lm_table(
         spark.createDataFrame(
             [(1, "completely different vocabulary right here")],
             "doc_id long, text string",
-        )
+        ),
+        k=2,
     )
     other_ug = unigram_lm_table(
         spark.createDataFrame(
@@ -692,14 +695,15 @@ def test_trigram_guards(spark, lm, bg_lm, tg_lm):
         alpha=ALPHA,
     )
     with pytest.raises(ValueError, match="different references"):
-        score_docs_under_trigram_lm(docs, tg_lm, other_bg, other_ug)
+        score_docs_under_ngram_chain(docs, [other_ug, other_bg, tg_lm])
     # a reference with no 3-token document cannot claim order 3
     with pytest.raises(ValueError, match=">= 3"):
-        trigram_lm_table(
+        ngram_lm_table(
             spark.createDataFrame(
                 [(1, "two words"), (2, "also short")],
                 "doc_id long, text string",
-            )
+            ),
+            k=3,
         )
 
 
@@ -714,10 +718,8 @@ def test_trigram_separates_bigram_preserving_reorder(spark):
         domain_threshold_table,
     )
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        bigram_lm_table,
-        score_docs_under_bigram_lm,
-        score_docs_under_trigram_lm,
-        trigram_lm_table,
+        ngram_lm_table,
+        score_docs_under_ngram_chain,
     )
 
     good = "a a b a b b"   # bigrams: aa ab ba ab bb, triples incl bab
@@ -734,18 +736,18 @@ def test_trigram_separates_bigram_preserving_reorder(spark):
         "doc_id long, source string, text string",
     )
     ug = unigram_lm_table(ref, alpha=ALPHA)
-    bg = bigram_lm_table(ref)
-    tg = trigram_lm_table(ref)
+    bg = ngram_lm_table(ref, k=2)
+    tg = ngram_lm_table(ref, k=3)
 
     # order 2 is blind to the reorder: identical scores
     bg_scores = {
         r["doc_id"]: r["avg_nll"]
-        for r in score_docs_under_bigram_lm(docs, bg, ug).collect()
+        for r in score_docs_under_ngram_chain(docs, [ug, bg]).collect()
     }
     assert bg_scores[0] == pytest.approx(bg_scores[100], abs=1e-12)
 
     # order 3 separates
-    tg_scored = score_docs_under_trigram_lm(docs, tg, bg, ug)
+    tg_scored = score_docs_under_ngram_chain(docs, [ug, bg, tg])
     tg_scores = {r["doc_id"]: r["avg_nll"] for r in tg_scored.collect()}
     assert tg_scores[0] < tg_scores[100] - 0.05
 
@@ -760,13 +762,13 @@ def test_trigram_separates_bigram_preserving_reorder(spark):
 
 def test_trigram_plan_shapes(spark, lm, bg_lm, tg_lm):
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        score_docs_under_trigram_lm,
+        score_docs_under_ngram_chain,
     )
 
     docs = spark.createDataFrame(
         DOCS, "doc_id long, source string, text string"
     )
-    scored = score_docs_under_trigram_lm(docs, tg_lm, bg_lm, lm)
+    scored = score_docs_under_ngram_chain(docs, [lm, bg_lm, tg_lm])
     plan = scored._jdf.queryExecution().executedPlan().toString()
     for bad in ("CartesianProduct", "BatchEvalPython", "ArrowEval"):
         assert bad not in plan, plan
@@ -920,50 +922,6 @@ def test_ngram_chain_scores_match_sequential(spark, lm):
         for i, _src, text in DOCS:
             _, ug_nll = _seq_score(text)
             assert got0[i] == pytest.approx(ug_nll, abs=1e-9), (k, i)
-
-
-@pytest.mark.slow
-def test_wrappers_delegate_to_the_chain(spark, lm, bg_lm, tg_lm):
-    """The order-2/3 scorers are THIN wrappers over the generic chain
-    (the r16 near-copies are deleted): bit-identical outputs."""
-    from drive_bc_datapipeline_spark.operators.lm_score import (
-        score_docs_under_bigram_lm,
-        score_docs_under_ngram_chain,
-        score_docs_under_trigram_lm,
-    )
-
-    docs = spark.createDataFrame(
-        DOCS, "doc_id long, source string, text string"
-    )
-    via_wrap2 = {
-        r["doc_id"]: r["avg_nll"]
-        for r in score_docs_under_bigram_lm(docs, bg_lm, lm).collect()
-    }
-    via_chain2 = {
-        r["doc_id"]: r["avg_nll"]
-        for r in score_docs_under_ngram_chain(
-            docs, [lm, bg_lm]
-        ).collect()
-    }
-    # same plan; re-execution may drift 1 ulp in the groupBy sum
-    # order (the r15 apply_domain_filter lesson), so compare at the
-    # repo-wide score tolerance, not bit-for-bit
-    for i in via_wrap2:
-        assert via_wrap2[i] == pytest.approx(via_chain2[i], rel=1e-12)
-    via_wrap3 = {
-        r["doc_id"]: r["avg_nll"]
-        for r in score_docs_under_trigram_lm(
-            docs, tg_lm, bg_lm, lm
-        ).collect()
-    }
-    via_chain3 = {
-        r["doc_id"]: r["avg_nll"]
-        for r in score_docs_under_ngram_chain(
-            docs, [lm, bg_lm, tg_lm]
-        ).collect()
-    }
-    for i in via_wrap3:
-        assert via_wrap3[i] == pytest.approx(via_chain3[i], rel=1e-12)
 
 
 @pytest.mark.slow
@@ -1155,9 +1113,7 @@ def test_ccnet_job_order_4_and_5_arms(spark, tmp_path):
     assert kept5 == [1]
 
     # injected tables at the wrong order fail by count
-    tables3 = _fit_reference_lm_tables(
-        ref, lm_order=3, alpha=0.5, text_col="text"
-    )
+    tables3 = _fit_reference_lm_tables(ref, lm_order=3, alpha=0.5)
     with pytest.raises(ValueError, match="order-3"):
         run_ccnet_prefilter(
             spark, docs, ref, str(tmp_path / "bad"), lm_order=4,

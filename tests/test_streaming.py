@@ -642,7 +642,7 @@ def test_ccnet_gate_stream_matches_batch(spark, tmp_path):
     sink = str(tmp_path / "ccnet_sink")
     sp.start_gate_stream(
         spark, src, sink, str(tmp_path / "ck_ccnet"),
-        sp.ccnet_gate(lm, m["thresholds"], m["q"]),
+        sp.ccnet_gate([lm], m["thresholds"], m["q"]),
         max_files_per_trigger=1,  # force multiple micro-batches
     ).awaitTermination(120)
     got = sorted(
@@ -677,7 +677,7 @@ def test_ccnet_gate_writer_replay_and_guards(spark, tmp_path):
     thresholds = {"web": 10.0, "book": 10.0}
     sink = str(tmp_path / "w_sink")
     write_batch = sp.gate_batch_writer(
-        sink, sp.ccnet_gate(lm, thresholds, 0.5)
+        sink, sp.ccnet_gate([lm], thresholds, 0.5)
     )
 
     write_batch(docs, 0)
@@ -702,7 +702,7 @@ def test_ccnet_gate_writer_replay_and_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="empty thresholds"):
         sp.start_gate_stream(
             spark, str(tmp_path / "x"), str(tmp_path / "y"),
-            str(tmp_path / "z"), sp.ccnet_gate(lm, {}, 0.5),
+            str(tmp_path / "z"), sp.ccnet_gate([lm], {}, 0.5),
         )
 
 
@@ -712,7 +712,7 @@ def test_ccnet_gate_writer_bigram_arm(spark, tmp_path):
     given one, and the kept set matches the batch lm_order=2 job."""
     from drive_bc_datapipeline_spark.jobs import run_ccnet_prefilter
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        bigram_lm_table,
+        ngram_lm_table,
         unigram_lm_table,
     )
 
@@ -737,13 +737,13 @@ def test_ccnet_gate_writer_bigram_arm(spark, tmp_path):
     assert batch_kept == [0, 1, 2]  # the order-sensitive cut
 
     lm = unigram_lm_table(ref, alpha=m["alpha"])
-    bg = bigram_lm_table(ref)
+    bg = ngram_lm_table(ref, k=2)
     sink = str(tmp_path / "bg_sink")
     write_batch = sp.gate_batch_writer(
         sink,
         sp.ccnet_gate(
-            lm, m["thresholds"], m["q"],
-            bigram=bg, alpha=m["alpha"], lam=m["lam"],
+            [lm, bg], m["thresholds"], m["q"],
+            alpha=m["alpha"], lam=m["lam"],
         ),
     )
     write_batch(docs, 0)
@@ -766,21 +766,21 @@ def test_ccnet_gate_writer_probes_model_once(spark, tmp_path, monkeypatch):
     )
     lm = unigram_lm_table(ref)
     calls = {"oov": 0, "stats": 0}
-    real_oov, real_stats = lmm.unigram_oov_logp, lmm.bigram_backoff_stats
+    real_oov, real_stats = lmm.unigram_oov_logp, lmm.ngram_chain_stats
     monkeypatch.setattr(
         lmm, "unigram_oov_logp",
         lambda t: (calls.__setitem__("oov", calls["oov"] + 1), real_oov(t))[1],
     )
     monkeypatch.setattr(
-        lmm, "bigram_backoff_stats",
-        lambda b, u: (
-            calls.__setitem__("stats", calls["stats"] + 1), real_stats(b, u)
+        lmm, "ngram_chain_stats",
+        lambda tables: (
+            calls.__setitem__("stats", calls["stats"] + 1), real_stats(tables)
         )[1],
     )
     docs = spark.createDataFrame(CCNET_DOCS, sp.DOC_STREAM_SCHEMA)
     write_batch = sp.gate_batch_writer(
         str(tmp_path / "p_sink"),
-        sp.ccnet_gate(lm, {"web": 10.0, "book": 10.0}, 0.5),
+        sp.ccnet_gate([lm], {"web": 10.0, "book": 10.0}, 0.5),
     )
     assert calls == {"oov": 1, "stats": 0}  # probed at build
     write_batch(docs, 0)
@@ -864,7 +864,7 @@ def test_staged_gate_stream_matches_batch_prefix(spark, tmp_path):
     docs.repartition(3).write.parquet(src_dir)
     sink = str(tmp_path / "sink")
     ccnet = sp.ccnet_gate(
-        lm, m["prefilter"]["thresholds"], m["prefilter"]["q"]
+        [lm], m["prefilter"]["thresholds"], m["prefilter"]["q"]
     )
     sp.start_gate_stream(
         spark, src_dir, sink, str(tmp_path / "ck"),
@@ -992,7 +992,7 @@ def test_staged_gate_writer_replay_protocol(spark, tmp_path):
     write_batch = sp.gate_batch_writer(
         sink,
         sp.staged_gate(
-            sp.ccnet_gate(lm, {"web": 50.0}, 0.9),
+            sp.ccnet_gate([lm], {"web": 50.0}, 0.9),
             sp.classifier_gate(w, b, 0.6, n_buckets=64),
         ),
     )
@@ -1015,7 +1015,7 @@ def test_gate_stream_lm_order_guard(spark, tmp_path):
         train_hashed_linear,
     )
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        bigram_lm_table,
+        ngram_lm_table,
         unigram_lm_table,
     )
 
@@ -1024,7 +1024,7 @@ def test_gate_stream_lm_order_guard(spark, tmp_path):
         "doc_id long, text string",
     )
     lm = unigram_lm_table(ref)
-    bg = bigram_lm_table(ref)
+    bg = ngram_lm_table(ref, k=2)
     seeds = spark.createDataFrame(
         [(100 + i, 1, "the quick good %d" % i) for i in range(6)]
         + [(200 + i, 0, "zz junk bad %d" % i) for i in range(6)],
@@ -1032,29 +1032,30 @@ def test_gate_stream_lm_order_guard(spark, tmp_path):
     )
     w, b = train_hashed_linear(spark, seeds, n_buckets=64, n_rounds=5)
 
-    def j12(**kw):
+    def j12(tables, **kw):
         return sp.start_gate_stream(
             spark, str(tmp_path / "s"), str(tmp_path / "o"),
-            str(tmp_path / "c"), sp.ccnet_gate(lm, {"web": 50.0}, 0.9, **kw),
+            str(tmp_path / "c"),
+            sp.ccnet_gate(tables, {"web": 50.0}, 0.9, **kw),
         )
 
-    def j13(**kw):
+    def j13(tables, **kw):
         return sp.start_gate_stream(
             spark, str(tmp_path / "s"), str(tmp_path / "o2"),
             str(tmp_path / "c2"),
             sp.staged_gate(
-                sp.ccnet_gate(lm, {"web": 50.0}, 0.9, **kw),
+                sp.ccnet_gate(tables, {"web": 50.0}, 0.9, **kw),
                 sp.classifier_gate(w, b, 0.6, n_buckets=64),
             ),
         )
 
     for start in (j12, j13):
         with pytest.raises(ValueError, match="only order-1 tables"):
-            start(lm_order=2)
+            start([lm], lm_order=2)
         with pytest.raises(ValueError, match="order-2 tables were supplied"):
-            start(lm_order=1, bigram=bg)
+            start([lm, bg], lm_order=1)
         with pytest.raises(ValueError, match="order 1"):
-            start(lm_order=7)
+            start([lm], lm_order=7)
 
 
 @pytest.mark.slow
@@ -1090,7 +1091,7 @@ def test_staged_gate_writer_releases_prefiltered_storage(spark, tmp_path):
     write_batch = sp.gate_batch_writer(
         sink,
         sp.staged_gate(
-            sp.ccnet_gate(lm, {"web": 50.0}, 0.9),
+            sp.ccnet_gate([lm], {"web": 50.0}, 0.9),
             sp.classifier_gate(w, b, 0.6, n_buckets=64),
         ),
     )
@@ -1350,8 +1351,7 @@ def test_ccnet_gate_writer_trigram_arm(spark, tmp_path):
     only order 3 can cut."""
     from drive_bc_datapipeline_spark.jobs import run_ccnet_prefilter
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        bigram_lm_table,
-        trigram_lm_table,
+        ngram_lm_table,
         unigram_lm_table,
     )
 
@@ -1375,14 +1375,14 @@ def test_ccnet_gate_writer_trigram_arm(spark, tmp_path):
     assert batch_kept == [0, 1, 2]  # only order 3 separates these
 
     lm = unigram_lm_table(ref, alpha=m["alpha"])
-    bg = bigram_lm_table(ref)
-    tg = trigram_lm_table(ref)
+    bg = ngram_lm_table(ref, k=2)
+    tg = ngram_lm_table(ref, k=3)
     sink = str(tmp_path / "tg_sink")
     write_batch = sp.gate_batch_writer(
         sink,
         sp.ccnet_gate(
-            lm, m["thresholds"], m["q"],
-            bigram=bg, trigram=tg, alpha=m["alpha"], lam=m["lam"],
+            [lm, bg, tg], m["thresholds"], m["q"],
+            alpha=m["alpha"], lam=m["lam"],
         ),
     )
     write_batch(docs, 0)
@@ -1391,22 +1391,22 @@ def test_ccnet_gate_writer_trigram_arm(spark, tmp_path):
     ) == batch_kept
 
     # order mismatch guards, both directions, through the starters
-    def j12(**kw):
+    def j12(tables, **kw):
         return sp.start_gate_stream(
             spark, str(tmp_path / "s"), str(tmp_path / "o"),
             str(tmp_path / "c"),
-            sp.ccnet_gate(lm, m["thresholds"], m["q"], **kw),
+            sp.ccnet_gate(tables, m["thresholds"], m["q"], **kw),
         )
 
     with pytest.raises(ValueError, match="only order-2"):
-        j12(lm_order=3, bigram=bg)
+        j12([lm, bg], lm_order=3)
     with pytest.raises(ValueError, match="order-3 tables were supplied"):
-        j12(lm_order=2, bigram=bg, trigram=tg)
+        j12([lm, bg, tg], lm_order=2)
     with pytest.raises(ValueError, match="without its bigram"):
-        j12(lm_order=3, trigram=tg)
+        j12([lm, tg], lm_order=3)
     # the gate itself refuses a chain missing its middle
     with pytest.raises(ValueError, match="without its bigram"):
-        sp.ccnet_gate(lm, m["thresholds"], m["q"], trigram=tg)
+        sp.ccnet_gate([lm, tg], m["thresholds"], m["q"])
 
 
 @pytest.mark.slow
@@ -1419,8 +1419,7 @@ def test_staged_gate_writer_trigram_arm(spark, tmp_path):
         train_hashed_linear,
     )
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        bigram_lm_table,
-        trigram_lm_table,
+        ngram_lm_table,
         unigram_lm_table,
     )
 
@@ -1443,8 +1442,8 @@ def test_staged_gate_writer_trigram_arm(spark, tmp_path):
         sp.DOC_STREAM_SCHEMA,
     )
     lm = unigram_lm_table(ref)
-    bg = bigram_lm_table(ref)
-    tg = trigram_lm_table(ref)
+    bg = ngram_lm_table(ref, k=2)
+    tg = ngram_lm_table(ref, k=3)
     # batch equivalent: order-3 domain cut at q=0.5 keeps the good
     # half; classifier gate then keeps reference-vocabulary docs
     from drive_bc_datapipeline_spark.operators.domain_filter import (
@@ -1453,11 +1452,11 @@ def test_staged_gate_writer_trigram_arm(spark, tmp_path):
         domain_threshold_table,
     )
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        score_docs_under_trigram_lm,
+        score_docs_under_ngram_chain,
     )
 
     scored = docs.join(
-        score_docs_under_trigram_lm(docs, tg, bg, lm), "doc_id"
+        score_docs_under_ngram_chain(docs, [lm, bg, tg]), "doc_id"
     )
     # q=0.4: the threshold interpolates BETWEEN the good and bad
     # score plateaus (at q=0.5 it lands exactly ON the bad plateau
@@ -1480,7 +1479,7 @@ def test_staged_gate_writer_trigram_arm(spark, tmp_path):
     write_batch = sp.gate_batch_writer(
         sink,
         sp.staged_gate(
-            sp.ccnet_gate(lm, thresholds, 0.4, bigram=bg, trigram=tg),
+            sp.ccnet_gate([lm, bg, tg], thresholds, 0.4),
             sp.classifier_gate(w, b, 0.6, n_buckets=64),
         ),
     )
@@ -1498,8 +1497,7 @@ def test_versioned_ccnet_gate_rotation(spark, tmp_path):
     failing, and every row names the model that passed it."""
     from drive_bc_datapipeline_spark.jobs import run_ccnet_prefilter
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        bigram_lm_table,
-        trigram_lm_table,
+        ngram_lm_table,
         unigram_lm_table,
     )
 
@@ -1522,7 +1520,7 @@ def test_versioned_ccnet_gate_rotation(spark, tmp_path):
         spark, docs, ref, str(tmp_path / "b1"), q=0.5, lm_order=1
     )
     v1 = sp.publish_ccnet_gate_model(
-        model_dir, lm=lm, thresholds=m1["thresholds"], q=m1["q"],
+        model_dir, tables=[lm], thresholds=m1["thresholds"], q=m1["q"],
         alpha=m1["alpha"],
     )
     assert v1 == 1
@@ -1542,9 +1540,10 @@ def test_versioned_ccnet_gate_rotation(spark, tmp_path):
         lam=0.7,
     )
     v2 = sp.publish_ccnet_gate_model(
-        model_dir, lm=lm, thresholds=m3["thresholds"], q=m3["q"],
+        model_dir,
+        tables=[lm, ngram_lm_table(ref, k=2), ngram_lm_table(ref, k=3)],
+        thresholds=m3["thresholds"], q=m3["q"],
         alpha=m3["alpha"], lam=m3["lam"],
-        bigram=bigram_lm_table(ref), trigram=trigram_lm_table(ref),
     )
     assert v2 == 2
     write_batch(docs, 1)  # the swap lands at THIS batch boundary
@@ -1563,7 +1562,7 @@ def test_versioned_ccnet_gate_rotation(spark, tmp_path):
 
 def test_versioned_ccnet_gate_guards_and_stream(spark, tmp_path):
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        trigram_lm_table,
+        ngram_lm_table,
         unigram_lm_table,
     )
 
@@ -1574,12 +1573,12 @@ def test_versioned_ccnet_gate_guards_and_stream(spark, tmp_path):
     model_dir = str(tmp_path / "m")
     with pytest.raises(ValueError, match="without its bigram"):
         sp.publish_ccnet_gate_model(
-            model_dir, lm=lm, thresholds={"web": 9.0}, q=0.5,
-            trigram=trigram_lm_table(ref),
+            model_dir, tables=[lm, ngram_lm_table(ref, k=3)],
+            thresholds={"web": 9.0}, q=0.5,
         )
     with pytest.raises(ValueError, match="empty thresholds"):
         sp.publish_ccnet_gate_model(
-            model_dir, lm=lm, thresholds={}, q=0.5
+            model_dir, tables=[lm], thresholds={}, q=0.5
         )
     with pytest.raises(ValueError, match="publish"):
         sp.start_gate_stream(
@@ -1589,7 +1588,7 @@ def test_versioned_ccnet_gate_guards_and_stream(spark, tmp_path):
     # a hand-rolled manifest whose order disagrees with its stored
     # tables fails through the shared order check at build
     sp.publish_ccnet_gate_model(
-        model_dir, lm=lm, thresholds={"web": 9.0}, q=0.5
+        model_dir, tables=[lm], thresholds={"web": 9.0}, q=0.5
     )
     _v, manifest = sp.read_current_gate_model(model_dir)
     manifest["lm_order"] = 2  # claims order 2, stores order 1
@@ -1667,8 +1666,7 @@ def test_versioned_staged_gate_rotation(spark, tmp_path):
         train_hashed_linear,
     )
     from drive_bc_datapipeline_spark.operators.lm_score import (
-        bigram_lm_table,
-        trigram_lm_table,
+        ngram_lm_table,
         unigram_lm_table,
     )
 
@@ -1695,7 +1693,7 @@ def test_versioned_staged_gate_rotation(spark, tmp_path):
         spark, docs, ref, str(tmp_path / "sb1"), q=0.5, lm_order=1
     )
     v1 = sp.publish_staged_gate_model(
-        model_dir, lm=lm, thresholds=m1["thresholds"], q=m1["q"],
+        model_dir, tables=[lm], thresholds=m1["thresholds"], q=m1["q"],
         weights=w, bias=b, threshold=0.6, n_buckets=64,
     )
     assert v1 == 1
@@ -1715,9 +1713,10 @@ def test_versioned_staged_gate_rotation(spark, tmp_path):
         spark, docs, ref, str(tmp_path / "sb3"), q=0.4, lm_order=3
     )
     v2 = sp.publish_staged_gate_model(
-        model_dir, lm=lm, thresholds=m3["thresholds"], q=m3["q"],
+        model_dir,
+        tables=[lm, ngram_lm_table(ref, k=2), ngram_lm_table(ref, k=3)],
+        thresholds=m3["thresholds"], q=m3["q"],
         weights=w, bias=b, threshold=0.6, n_buckets=64,
-        bigram=bigram_lm_table(ref), trigram=trigram_lm_table(ref),
     )
     assert v2 == 2
     write_batch(docs, 1)
@@ -1893,7 +1892,7 @@ def test_staged_gate_rules_config_published_and_applied(spark, tmp_path):
     )
     model_dir = str(tmp_path / "rules_models")
     v1 = sp.publish_staged_gate_model(
-        model_dir, lm=lm, thresholds=m1["thresholds"], q=m1["q"],
+        model_dir, tables=[lm], thresholds=m1["thresholds"], q=m1["q"],
         weights=w, bias=b, threshold=0.5, n_buckets=64,
     )
     assert v1 == 1
@@ -1907,7 +1906,7 @@ def test_staged_gate_rules_config_published_and_applied(spark, tmp_path):
     assert sorted(r["doc_id"] for r in rows) == [0, 1, 2, 20, 21]
 
     v2 = sp.publish_staged_gate_model(
-        model_dir, lm=lm, thresholds=m1["thresholds"], q=m1["q"],
+        model_dir, tables=[lm], thresholds=m1["thresholds"], q=m1["q"],
         weights=w, bias=b, threshold=0.5, n_buckets=64,
         rules_config=cfg,
     )
@@ -1927,7 +1926,7 @@ def test_staged_gate_rules_config_published_and_applied(spark, tmp_path):
     sp.gate_batch_writer(
         sink2,
         sp.staged_gate(
-            sp.ccnet_gate(lm, m1["thresholds"], m1["q"], rules_config=cfg),
+            sp.ccnet_gate([lm], m1["thresholds"], m1["q"], rules_config=cfg),
             sp.classifier_gate(w, b, 0.5, n_buckets=64),
         ),
     )(docs, 0)
@@ -1992,8 +1991,8 @@ def test_ccnet_gate_order45_arms(spark, tmp_path):
     )
     model_dir = str(tmp_path / "o4_models")
     v1 = sp.publish_ccnet_gate_model(
-        model_dir, lm=ug, thresholds=m4["thresholds"], q=m4["q"],
-        bigram=t2, trigram=t3, fourgram=t4,
+        model_dir, tables=[ug, t2, t3, t4],
+        thresholds=m4["thresholds"], q=m4["q"],
     )
     assert v1 == 1
     _v, manifest = sp.read_current_gate_model(model_dir)
@@ -2010,19 +2009,24 @@ def test_ccnet_gate_order45_arms(spark, tmp_path):
 
     # both mismatch directions at the new orders
     with pytest.raises(ValueError, match="only order-3 tables"):
-        sp._validate_lm_order(4, t2, t3)
+        sp._validate_lm_order(4, [ug, t2, t3])
     with pytest.raises(ValueError, match="order-4 tables were supplied"):
-        sp._validate_lm_order(3, t2, t3, t4)
+        sp._validate_lm_order(3, [ug, t2, t3, t4])
     with pytest.raises(ValueError, match="lm_order=6"):
-        sp._validate_lm_order(6, t2, t3, t4)
-    sp._validate_lm_order(4, t2, t3, t4)
+        sp._validate_lm_order(6, [ug, t2, t3, t4])
+    sp._validate_lm_order(4, [ug, t2, t3, t4])
     # chain gaps fail by name, everywhere the tables enter
     with pytest.raises(ValueError, match="fourgram table without its"):
-        sp._check_ccnet_gate_inputs({"web": 1.0}, t2, None, t4)
+        sp._check_ccnet_gate_inputs({"web": 1.0}, [ug, t2, t4])
+    # the chain holds one to five tables, none above order 5
+    t6 = ngram_lm_table(ref, k=6)
+    for tables in ([], [ug, t2, t3, t4, t4, t4], [ug, t2, t3, t4, t6]):
+        with pytest.raises(ValueError, match="up to order 5"):
+            sp._check_ccnet_gate_inputs({"web": 1.0}, tables)
     with pytest.raises(ValueError, match="trigram"):
         sp.publish_ccnet_gate_model(
-            str(tmp_path / "gap"), lm=ug, thresholds={"web": 1.0},
-            q=0.5, bigram=t2, fourgram=t4,
+            str(tmp_path / "gap"), tables=[ug, t2, t4],
+            thresholds={"web": 1.0}, q=0.5,
         )
 
 
@@ -2054,10 +2058,10 @@ def test_versioned_gate_drives_every_family(spark, tmp_path):
             d, sp.classifier_gate_manifest(w, 0.0, 0.6, n_buckets=64)
         ),
         "ccnet": lambda d: sp.publish_ccnet_gate_model(
-            d, lm=lm, thresholds=thresholds, q=0.5
+            d, tables=[lm], thresholds=thresholds, q=0.5
         ),
         "staged": lambda d: sp.publish_staged_gate_model(
-            d, lm=lm, thresholds=thresholds, q=0.5,
+            d, tables=[lm], thresholds=thresholds, q=0.5,
             weights=w, bias=0.0, threshold=0.6, n_buckets=64,
         ),
     }
