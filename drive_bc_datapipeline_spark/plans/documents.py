@@ -124,15 +124,21 @@ JACCARD_MIN = 0.2
 # for a shared expensive intermediate. Keyed by applicationId so a new
 # session never sees a stale frame; pinned via localCheckpoint (blocks
 # are session-lifetime, the frames are |verified pairs| rows — tiny).
+# A process runs one SparkContext at a time, so entries of any other
+# application are dead and are dropped before the next build: the memo
+# never holds more than one session's frames.
 # The dedup_* query keys themselves do NOT consult the memo: their
 # bench/gate timings always measure the full pipeline.
 _PAIR_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _memo_pairs(spark, sf_dir, key, build):
-    k = (spark.sparkContext.applicationId, sf_dir, key)
+    app = spark.sparkContext.applicationId
+    k = (app, sf_dir, key)
     df = _PAIR_MEMO.get(k)
     if df is None:
+        for stale in [m for m in _PAIR_MEMO if m[0] != app]:
+            del _PAIR_MEMO[stale]
         df = build().localCheckpoint(eager=True)
         _PAIR_MEMO[k] = df
     return df
@@ -659,10 +665,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # returned frame is GC'd; cache() pins a CacheManager entry for the
     # rest of the session (one leak per invocation).
     # spread: parallelize the shingle explode + 16 min-hash slices off
-    # the one-row-group scan (no-op on multi-file corpora). r11 A/B
-    # (tools/ab_spread.py, interleaved arms, min-of-3 at sf0.1):
-    # 2.20s on vs 2.81s off — kept; hash-by-doc_id beat round-robin
-    # 2.09→1.61s (skips the pre-round-robin local row sort).
+    # the one-row-group scan (no-op on multi-file corpora); hash by
+    # doc_id skips round-robin's local row sort. A/B: SURVEY.md item 13 (r11).
     shingles = word_ngrams(
         spread(d, by="doc_id"), MH_N, distinct=False
     ).localCheckpoint(eager=True)
@@ -1469,11 +1473,8 @@ JOIN sizes sb ON sb.doc_id = e.doc_id_b
 def minhash_estimate_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     # localCheckpoint, not cache() — same GC-freed-blocks rationale as
-    # dedup_minhash_lsh above; spread for the same one-row-group
-    # shingle parallelism. r11 A/B (tools/ab_spread.py, interleaved
-    # arms, min-of-3 at sf0.1): 2.62s on vs 3.18s off — kept;
-    # hash-by-doc_id beat round-robin 2.14→1.45s (no pre-round-robin
-    # local row sort).
+    # dedup_minhash_lsh above; spread by doc_id for the same
+    # one-row-group shingle parallelism. A/B: SURVEY.md item 13 (r11).
     shingles = word_ngrams(
         spread(d, by="doc_id"), MH_N, distinct=False
     ).localCheckpoint(eager=True)

@@ -1091,14 +1091,10 @@ FROM proj GROUP BY label
 def embedding_pca_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread (r10): the single-row-group scan would run the d²-fan-out
     # pair-product explode on one core; no-op on multi-file data.
-    # by="vec_id" tried r14 (banked r11 prior 1.24→1.13s) and REVERTED
-    # r15: the tracked interleaved idle A/B at the r15 HEAD
-    # (tools/ab_spread_by.py, min-of-3, load 0.75) read hash 1.094s vs
-    # round-robin 1.069s — a wash, and the r14 driver/idle artifacts
-    # (1.25/1.38s vs the 0.98s r13 round-robin floor) showed the
-    # switch regressing. Embedding rows are narrow fixed-width arrays,
-    # so round-robin's pre-exchange local sort is cheap here — unlike
-    # the wide-text keys where by= wins (tables.spread docstring).
+    # Round-robin, not by="vec_id": embedding rows are narrow
+    # fixed-width arrays, so round-robin's pre-exchange local sort is
+    # cheap here — unlike the wide-text keys where by= wins
+    # (tables.spread docstring). A/B: SURVEY.md item 17 (r15).
     e = spread(t(spark, sf_dir, "embeddings"))
     quant = e.select(
         "vec_id",
@@ -2392,10 +2388,9 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd  # noqa: F401 — mapInPandas worker dependency
 
     e = t(spark, sf_dir, "embeddings")
-    # No spread on the qrel scan: A/B-measured SLOWER (r11,
-    # tools/ab_spread.py — 3.6s off vs 5.2s on at sf0.1). The explode
-    # is integer projection (cheap per row), and the Lloyd cost sits in
-    # the post-checkpoint shuffles, which re-balance on their own.
+    # No spread on the qrel scan: the explode is integer projection
+    # (cheap per row), and the Lloyd cost sits in the post-checkpoint
+    # shuffles, which re-balance on their own. A/B: SURVEY.md item 13 (r11).
     qrel = _pq_qrel(e)
     c1 = _pq_train(qrel)
     codes = _pq_assign_codes(qrel, c1)

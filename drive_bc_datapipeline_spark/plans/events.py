@@ -3663,7 +3663,6 @@ def streaming_etl_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{root}/src",
         f"{root}/sink",
         f"{root}/ckpt",
-        available_now=True,
         timestamp_format=_STREAM_TS_FMT,
     )
     q.awaitTermination(300)
@@ -3730,7 +3729,6 @@ def streaming_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_name=qname,
         gap=f"{SESSION_GAP_MIN} minutes",
         watermark="24 hours",
-        available_now=True,
         timestamp_format=_STREAM_TS_FMT,
     )
     q.awaitTermination(300)
@@ -3783,7 +3781,6 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{root}/src",
         f"{root}/ckpt",
         query_name=qname,
-        available_now=True,
         timestamp_format=_STREAM_TS_FMT,
     )
     q.awaitTermination(300)
@@ -3837,7 +3834,6 @@ def streaming_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim,
         f"{root}/ckpt",
         query_name=qname,
-        available_now=True,
         timestamp_format=_STREAM_TS_FMT,
     )
     q.awaitTermination(300)

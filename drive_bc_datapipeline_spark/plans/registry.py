@@ -23,6 +23,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from drive_bc_datapipeline_spark.tables import load_table
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -73,7 +75,7 @@ GATE_PIN: dict[str, int] = {
     # (session.local_frame) instead of Python-RDD scans — the plans
     # read LocalTableScan where they read Scan ExistingRDD; results
     # unchanged. Found by diffing every key's formatted plan before
-    # and after (tools/dump_round_plans.py); no other key moved.
+    # and after (`tools/measure.py dump`); no other key moved.
     "exact_auc_purchase": 19,
     "geo_bbox_contains": 19,
     "pagerank_type_graph": 19,
@@ -269,12 +271,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # identity check guards against id() reuse after a session GC
         if hit is not None and hit[0] is spark:
             return hit[1]
-    if name == "events":
-        from drive_bc_datapipeline_spark.tables import read_events
-
-        df = read_events(spark, path)
-    else:
-        df = spark.read.parquet(path)
+    df = load_table(spark, sf_dir, name)
     if key is not None:
         while len(_TCACHE) >= _TCACHE_MAX:
             _TCACHE.pop(next(iter(_TCACHE)))

@@ -44,37 +44,11 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # AQE coalescing floor: left at the Spark default (1 MB),
-        # env-overridable for A/B only. The r17 2x2 process A/B
-        # (tools/ab_conf.py, 36-key subset, idle box) read the 64k
-        # floor as a wash on the total (59.3/61.4 vs 58.8 for the
-        # default-floor+SHJ arm) while consistently hurting the
-        # iterative per-round-checkpoint keys (kcore_peeling 1.73 ->
-        # 2.46/2.52 in both 64k arms): sub-MB post-shuffle partitions
-        # buy parallelism on a few CPU-bound aggregations but pay
-        # per-task scheduling on every one of an iterative plan's
-        # shuffles. At 100 TB partitions are sized by
-        # advisoryPartitionSizeInBytes and a sub-MB floor is pure
-        # overhead, so the local default staying = cluster default is
-        # also the honest scale story.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
-        )
-        # Let the planner pick shuffled-hash over sort-merge when its
-        # size conditions hold (guide §3.1, §9) — skips the
-        # per-partition sorts; sort-merge remains the fallback when
-        # the build side estimate is large. r17 2x2 process A/B
-        # (idle, 36 keys, min-of-2-steady per key): default-floor+SHJ
-        # 58.75s vs all-default 66.35s (-11%), with the join-heavy
-        # TPC-H keys (q2/q5/q7/q8/q9/q21) and the candidate-join dedup
-        # keys all improving and no key consistently worse across both
-        # SHJ arms. Env-overridable so the two strategies can be A/B'd
-        # process-vs-process (tools/ab_conf.py).
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # AQE coalescing floor at the Spark default (1 MB), and
+        # shuffled-hash joins preferred over sort-merge where their size
+        # conditions hold. A/B history: OPTIMIZATION_r17.md §5.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # Arrow for the few Pandas-UDF operators (multimodal, tile-DBSCAN).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Broadcast threshold: dims at analytics SF are tiny; at 100 TB

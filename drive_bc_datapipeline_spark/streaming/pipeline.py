@@ -106,7 +106,6 @@ def start_etl_stream(
     source_dir: str,
     sink_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     timestamp_format: str | None = None,
 ) -> StreamingQuery:
     """J1: stream → clean → foreachBatch skip-empty parquet append,
@@ -129,9 +128,7 @@ def start_etl_stream(
     writer = cleaned.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def start_windowed_counts_stream(
@@ -140,7 +137,6 @@ def start_windowed_counts_stream(
     checkpoint_dir: str,
     query_name: str = "hourly_counts",
     watermark: str = "2 hours",
-    available_now: bool = True,
     timestamp_format: str | None = None,
 ) -> StreamingQuery:
     """J2: watermark + tumbling 1-hour window count per event_type.
@@ -169,9 +165,7 @@ def start_windowed_counts_stream(
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def start_stateful_user_stats_stream(
@@ -179,7 +173,6 @@ def start_stateful_user_stats_stream(
     source_dir: str,
     checkpoint_dir: str,
     query_name: str = "user_stats",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Custom stateful operator via ``applyInPandasWithState``: running
     per-user (n_events, total_value, last_ts) maintained in the state
@@ -245,9 +238,7 @@ def start_stateful_user_stats_stream(
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def start_stream_stream_join(
@@ -256,7 +247,6 @@ def start_stream_stream_join(
     checkpoint_dir: str,
     query_name: str = "click_purchase_join",
     max_gap_minutes: int = 60,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """J6: watermarked stream-stream inner join — each purchase joined
     to the same user's clicks in the preceding ``max_gap_minutes``.
@@ -301,9 +291,7 @@ def start_stream_stream_join(
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def start_enriched_stream(
@@ -312,7 +300,6 @@ def start_enriched_stream(
     dim_df: DataFrame,
     checkpoint_dir: str,
     query_name: str = "enriched",
-    available_now: bool = True,
     timestamp_format: str | None = None,
 ) -> StreamingQuery:
     """J7: stream-static enrichment — each micro-batch joins the
@@ -333,9 +320,7 @@ def start_enriched_stream(
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def start_tws_user_stats_stream(
@@ -343,7 +328,6 @@ def start_tws_user_stats_stream(
     source_dir: str,
     checkpoint_dir: str,
     query_name: str = "tws_stats",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """J8: custom stateful operator on the transformWithState API —
     the Spark 4 successor of ``applyInPandasWithState`` (J4): typed
@@ -438,9 +422,7 @@ def start_tws_user_stats_stream(
             .queryName(query_name)
             .option("checkpointLocation", checkpoint_dir)
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return writer.trigger(availableNow=True).start()
 
 
 def start_session_window_stream(
@@ -450,7 +432,6 @@ def start_session_window_stream(
     query_name: str = "session_stats",
     gap: str = "30 minutes",
     watermark: str = "2 hours",
-    available_now: bool = True,
     timestamp_format: str | None = None,
 ) -> StreamingQuery:
     """J9: streaming session-window aggregation — the native
@@ -490,9 +471,7 @@ def start_session_window_stream(
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 # ---------------------------------------------------------------------------

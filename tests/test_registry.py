@@ -185,3 +185,25 @@ def test_tcache_is_bounded(spark, tmp_path, monkeypatch):
     assert len(registry._TCACHE) <= 4
     # an evicted entry re-loads on demand (fresh object, correct rows)
     assert registry.t(spark, sf_dir, "part").count() == n_writes
+
+
+def test_pair_memo_drops_entries_of_other_applications(spark, monkeypatch):
+    """A process runs one SparkContext at a time, so a memo entry keyed
+    by another applicationId is dead: the next build drops it, and the
+    live entry is reused without building again."""
+    from drive_bc_datapipeline_spark.plans import documents
+
+    memo = {("stale-app", "sf", "k"): object()}
+    monkeypatch.setattr(documents, "_PAIR_MEMO", memo)
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(3)
+
+    df = documents._memo_pairs(spark, "sf", "k", build)
+    live = (spark.sparkContext.applicationId, "sf", "k")
+    assert list(memo) == [live]
+    assert df.count() == 3
+    assert documents._memo_pairs(spark, "sf", "k", build) is df
+    assert builds == [1]

@@ -31,3 +31,14 @@ def test_scoped_conf_restores_set_and_unset_keys(spark):
         assert spark.conf.get(PRESENT) == "before"
     finally:
         spark.conf.unset(PRESENT)
+
+
+def test_get_spark_ships_the_join_and_coalescing_confs(spark):
+    """The session prefers shuffled-hash joins and keeps AQE's
+    coalescing floor at the Spark default; both are fixed in get_spark,
+    with no env override."""
+    assert spark.conf.get("spark.sql.join.preferSortMergeJoin") == "false"
+    assert (
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+        == "1m"
+    )

@@ -47,7 +47,7 @@ def test_etl_stream_foreachbatch(spark, tmp_path):
     src = _write_source(tmp_path)
     sink = str(tmp_path / "sink")
     q = sp.start_etl_stream(
-        spark, src, sink, str(tmp_path / "ckpt"), available_now=True
+        spark, src, sink, str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
 
@@ -65,7 +65,6 @@ def test_windowed_counts_stream_matches_batch(spark, tmp_path):
     src = _write_source(tmp_path)
     q = sp.start_windowed_counts_stream(
         spark, src, str(tmp_path / "ckpt2"), query_name="t_hourly",
-        available_now=True,
     )
     q.awaitTermination(120)
     streamed = {
@@ -117,7 +116,6 @@ def test_stateful_user_stats_matches_batch(spark, tmp_path):
     src = _write_source(tmp_path)
     q = sp.start_stateful_user_stats_stream(
         spark, src, str(tmp_path / "ckpt4"), query_name="t_stats",
-        available_now=True,
     )
     q.awaitTermination(120)
     # update mode may emit a row per micro-batch per key; last emission
@@ -169,7 +167,6 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
 
     q = sp.start_stream_stream_join(
         spark, str(src), str(tmp_path / "ssj_ckpt"), query_name="t_ssj",
-        available_now=True,
     )
     q.awaitTermination(120)
     got = {
@@ -187,7 +184,6 @@ def test_stream_static_enrichment(spark, tmp_path):
     )
     q = sp.start_enriched_stream(
         spark, src, dim, str(tmp_path / "ckpt5"), query_name="t_enrich",
-        available_now=True,
     )
     q.awaitTermination(120)
     rows = {r.event_id: r.tier for r in spark.sql(
@@ -206,7 +202,6 @@ def test_tws_user_stats_matches_batch(spark, tmp_path):
     src = _write_source(tmp_path)
     q = sp.start_tws_user_stats_stream(
         spark, src, str(tmp_path / "ckpt_tws"), query_name="t_tws",
-        available_now=True,
     )
     q.awaitTermination(120)
     streamed = {
@@ -248,7 +243,6 @@ def test_session_window_stream_matches_batch(spark, tmp_path):
     src = _write_source(tmp_path)
     q = sp.start_session_window_stream(
         spark, src, str(tmp_path / "ckpt9"), query_name="t_sessions",
-        available_now=True,
     )
     q.awaitTermination(120)
     streamed = {

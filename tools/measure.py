@@ -1,16 +1,68 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: run the audited queries at sf0.01 and dump
-their FINAL (post-AQE) physical plans with short annotations."""
+"""One measurement tool for the registry's query keys.
+
+    python tools/measure.py time KEY... [--passes N] [--out F]
+    python tools/measure.py ab --conf NAME=A,B KEY... [--passes N]
+    python tools/measure.py profile KEY...
+    python tools/measure.py dump ROUND [SUFFIX] [KEY...]
+    python tools/measure.py plans-md
+    python tools/measure.py verify [SF_DIR] [KEY...]
+
+Keys are checked against the registry before the JVM starts. Every
+subcommand runs on ``session.get_spark``, on ``local[<CPUs of this
+process>]`` unless ``SPARK_GRAFT_CPUS`` says otherwise. ``time``, ``ab``
+and ``profile`` first run bench.py's warm-up (a lineitem count plus the
+Python-worker prefork), and time a key with ``run_key``: build its plan
+under a Spark job group named after the key, then write it to the noop
+sink. ``--sf-dir`` defaults to ``SPARK_GRAFT_SF_DIR``, else the sf0.1
+test data.
+
+time      bench.py's protocol: one cold pass, N steady passes (default
+          2) with ``clearCache`` between passes, and the minimum per
+          key. One JSON line per key (``cold``, ``samples``, ``min``, and
+          ``jobs``: the Spark jobs of the key's group in its last run),
+          then the total and the load average at start and at end;
+          ``--out`` writes the same to a file.
+ab        A/B of one runtime SQL conf in one session. The arms run
+          interleaved, each inside ``session.scoped_conf``, their order
+          alternates each pass, and each arm reports its minimum. An arm
+          whose minimum is 10% below the other's wins ("A clearly" /
+          "B clearly"); anything closer is a "wash".
+profile   one cold and one steady pass, then the event-log readout
+          (perfbench/tracing.py) of each steady run: build and exec
+          seconds, each job's wall time, and per stage its tasks, summed
+          run time, longest task, shuffle-write bytes and input bytes.
+dump      ``explain('formatted')`` of each key (every key by default)
+          into plans/r<ROUND>/<key>_<SUFFIX>.txt (SUFFIX defaults to
+          "before"); diff two suffixes to find the keys whose plan moved.
+plans-md  regenerate PLANS.md: the final (post-AQE) plans of PICKS at
+          sf0.01 on ``local[8]`` with 16 shuffle partitions.
+verify    the Spark-vs-DuckDB check of every oracle key (default sf0.01)
+          with the comparison of tests/test_oracle_parity.py; exits 1 on
+          any mismatch or error.
+"""
 
 from __future__ import annotations
 
+import argparse
+import json
 import os
 import re
+import shutil
 import sys
+import tempfile
+import time
+import traceback
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-# runnable as `python tools/dump_plans.py` — the script dir (tools/) is
-# on sys.path but the repo root, which holds the package, is not
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from drive_bc_datapipeline_spark.plans import registry  # noqa: E402
+from drive_bc_datapipeline_spark.session import get_spark, scoped_conf  # noqa: E402
+from drive_bc_datapipeline_spark.tables import DEFAULT_SF_DIR  # noqa: E402
+from tests.conftest import SF_CORRECT  # noqa: E402
 
 PICKS = {
     "q1_pricing_summary": "Scan→filter→partial agg→exchange→final agg, all in whole-stage codegen. Filter and 7-column pruning reach the parquet scan.",
@@ -77,37 +129,281 @@ PICKS = {
     "substring_dup_mass_by_source": "ExactSubstr dedup: tokenized corpus pinned once; stride-1 window hashes -> duplicated-(hash, len) hash aggregate -> semi-join back -> doc-partitioned lag-window interval union -> |sources|-row rollup. Nothing corpus².",
 }
 
-HEADER = """# PLANS — physical-plan audit (generated from live `explain`)
+PLANS_HEADER = """# PLANS — physical-plan audit (generated from live `explain`)
 
 Evidence for the scale claims in SURVEY §6 / module docstrings: the
 actual executed plans at sf0.01 (local[8]; identical plan shapes at
 cluster scale — only partition counts change). Regenerate with
-`python tools/dump_plans.py`. Plan-property regressions are gated by
+`python tools/measure.py plans-md`. Plan-property regressions are gated by
 `tests/test_plan_properties.py`.
 """
 
 
-def main() -> None:
-    from drive_bc_datapipeline_spark.plans import registry
-    from drive_bc_datapipeline_spark.session import get_spark
+def check_keys(keys: list[str], known) -> None:
+    unknown = [k for k in keys if k not in known]
+    if unknown:
+        raise SystemExit(f"unknown keys: {unknown}")
 
-    registry.load_all_plans()
-    spark = get_spark("plans", master="local[8]", shuffle_partitions=16)
-    sf = "/root/testdata/sf0.01"
-    out = [HEADER]
+
+@contextmanager
+def session(app: str, sf_dir: str, warm: bool = True, **settings) -> Iterator:
+    """``get_spark`` (stopped on exit), after bench.py's warm-up when
+    ``warm``; the JVM starts here, after every argument check."""
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    spark = get_spark(app, **settings)
+    try:
+        spark.sparkContext.setLogLevel("ERROR")
+        if warm:
+            registry.t(spark, sf_dir, "lineitem").count()
+            par = spark.sparkContext.defaultParallelism
+            spark.range(par * 4).repartition(par).mapInPandas(
+                lambda it: it, "id long"
+            ).write.format("noop").mode("overwrite").save()
+        yield spark
+    finally:
+        spark.stop()
+
+
+def run_key(spark, key: str, sf_dir: str) -> tuple[float, float]:
+    """Build ``key``'s plan and write it to the noop sink, both under a
+    Spark job group named after the key; returns (build s, total s)."""
+    spark.sparkContext.setJobGroup(key, key)
+    t0 = time.time()
+    df = registry.QUERIES[key](spark, sf_dir)
+    build = time.time() - t0
+    df.write.format("noop").mode("overwrite").save()
+    return build, time.time() - t0
+
+
+def bench_passes(spark, keys: list[str], sf_dir: str, passes: int) -> Iterator:
+    """bench.py's protocol: one cold pass, then ``passes`` steady ones,
+    with ``clearCache`` after each. Yields (pass, key, start, build s,
+    total s) per run; pass 0 is the cold one."""
+    for p in range(passes + 1):
+        for key in keys:
+            t0 = time.time()
+            yield (p, key, t0, *run_key(spark, key, sf_dir))
+        spark.catalog.clearCache()
+
+
+def time_keys(spark, keys: list[str], sf_dir: str, passes: int) -> list[dict]:
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    runs: dict[str, list[float]] = {key: [] for key in keys}
+    seen: dict[str, set[int]] = {key: set() for key in keys}
+    jobs: dict[str, int] = {}
+    for _, key, _, _, total in bench_passes(spark, keys, sf_dir, passes):
+        runs[key].append(round(total, 3))
+        bus.waitUntilEmpty()  # the status store has seen every job of the run
+        ids = set(tracker.getJobIdsForGroup(key))
+        jobs[key], seen[key] = len(ids - seen[key]), ids
+    return [
+        {"key": k, "cold": r[0], "samples": r[1:], "min": min(r[1:]), "jobs": jobs[k]}
+        for k, r in runs.items()
+    ]
+
+
+def ab_keys(spark, conf: str, values, keys, sf_dir, passes) -> list[dict]:
+    arms = [(f"A={values[0]}", values[0]), (f"B={values[1]}", values[1])]
+    rows = []
+    for key in keys:
+        samples: dict[str, list[float]] = {label: [] for label, _ in arms}
+        for p in range(passes):
+            for label, value in arms if p % 2 == 0 else arms[::-1]:
+                with scoped_conf(spark, {conf: value}):
+                    samples[label].append(round(run_key(spark, key, sf_dir)[1], 3))
+        (a, ma), (b, mb) = ((label, min(s)) for label, s in samples.items())
+        verdict = "A clearly" if ma < mb * 0.9 else "B clearly" if mb < ma * 0.9 else "wash"
+        rows.append({"key": key, **samples, "min": {a: ma, b: mb}, "verdict": verdict})
+        print(json.dumps(rows[-1]), flush=True)
+    return rows
+
+
+def print_profile(steady, log: dict) -> None:
+    for key, t0, build, total in steady:
+        print(f"=== {key}: build {build:.3f}s exec {total - build:.3f}s")
+        for jid, job in sorted(log["jobs"].items()):
+            # jobs of this run: the key's group, submitted inside its window
+            if job["group"] != key or not t0 - 1e-3 <= job["submit"] <= t0 + total:
+                continue
+            wall = f"{job['end'] - job['submit']:.3f}s" if job["end"] else "unfinished"
+            print(f"  job {jid}: {wall}")
+            for sid in job["stages"]:
+                st = log["stages"].get(sid)  # None: the stage was skipped
+                if st:
+                    print(
+                        f"    stage {sid}: tasks {st['tasks']} run {st['run_s']:.2f}s "
+                        f"max_task {st['max_task_s']:.3f}s "
+                        f"shuffle_write {st['shuffle_write_bytes']}B "
+                        f"input {st['input_bytes']}B"
+                    )
+
+
+def dump_keys(spark, sf_dir: str, rnd: int, suffix: str, keys: list[str]) -> None:
+    out_dir = os.path.join(REPO, "plans", f"r{rnd}")
+    os.makedirs(out_dir, exist_ok=True)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    for key in keys:
+        t0 = time.time()
+        df = registry.QUERIES[key](spark, sf_dir)
+        build = time.time() - t0
+        path = os.path.join(out_dir, f"{key}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(f"-- {key} ({suffix}) sf_dir={sf_dir}\n")
+            fh.write(f"-- plan-build wall: {build:.3f}s\n")
+            fh.write(df._jdf.queryExecution().explainString(mode))
+        print(f"{key}: build {build:.3f}s -> {path}", file=sys.stderr)
+
+
+def plans_md(spark, sf_dir: str) -> None:
+    out = [PLANS_HEADER]
     for name, note in PICKS.items():
-        df = registry.QUERIES[name](spark, sf)
-        df.collect()  # AQE: final plan exists only after execution
+        df = registry.QUERIES[name](spark, sf_dir)
+        df.collect()  # AQE: the final plan exists only after execution
         plan = df._jdf.queryExecution().executedPlan().toString()
-        plan = re.sub(r"#\d+L?", "", plan)  # strip expr ids for readability
-        lines = plan.splitlines()
+        lines = re.sub(r"#\d+L?", "", plan).splitlines()  # drop expr ids
         if len(lines) > 40:
-            lines = lines[:40] + [f"... ({len(plan.splitlines()) - 40} more lines)"]
+            lines = lines[:40] + [f"... ({len(lines) - 40} more lines)"]
         out.append(f"## {name}\n\n{note}\n\n```\n" + "\n".join(lines) + "\n```\n")
-    with open("PLANS.md", "w") as f:
-        f.write("\n".join(out))
-    spark.stop()
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
+        fh.write("\n".join(out))
+
+
+def verify_keys(spark, sf_dir: str, keys: list[str]) -> int:
+    from tests.test_oracle_parity import duck_con, normalize
+
+    con = duck_con(sf_dir)
+    bad = 0
+    for name in keys:
+        try:
+            sdf = registry.QUERIES[name](spark, sf_dir)
+            s_cols, s_rows = sdf.columns, [tuple(r) for r in sdf.collect()]
+            rel = con.sql(registry.ORACLES[name])
+            d_cols, d_rows = rel.columns, rel.fetchall()
+            if sorted(s_cols) != sorted(d_cols):
+                err = f"cols {sorted(s_cols)} vs {sorted(d_cols)}"
+            elif len(s_rows) != len(d_rows):
+                err = f"rows {len(s_rows)} vs {len(d_rows)}"
+            else:
+                ns, nd = normalize(s_rows, s_cols), normalize(d_rows, d_cols)
+                mm = [(a, b) for a, b in zip(ns, nd) if a != b]
+                err = mm and f"{len(mm)} rows differ; first: {mm[0]}"
+            print(f"MISMATCH {name}: {err}" if err else f"OK {name} ({len(s_rows)} rows)")
+        except Exception:
+            err = traceback.format_exc(limit=3)
+            print(f"ERROR {name}: {err}")
+        bad += bool(err)
+    print(f"--- {len(keys) - bad}/{len(keys)} keys clean at {sf_dir}")
+    return bad
+
+
+def _passes(text: str) -> int:
+    if int(text) < 1:
+        raise argparse.ArgumentTypeError("needs at least one pass")
+    return int(text)
+
+
+def parser() -> argparse.ArgumentParser:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    sub = ap.add_subparsers(dest="cmd", required=True)
+    for cmd in ("time", "ab", "profile"):
+        p = sub.add_parser(cmd)
+        p.add_argument("keys", nargs="+")
+        p.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
+        if cmd != "profile":
+            p.add_argument("--passes", type=_passes, default=2 if cmd == "time" else 3)
+    sub.choices["time"].add_argument("--out")
+    sub.choices["ab"].add_argument("--conf", required=True, help="NAME=A,B")
+    p = sub.add_parser("dump")
+    p.add_argument("round", type=int)
+    p.add_argument("rest", nargs="*", metavar="[SUFFIX] [KEY...]")
+    p.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
+    sub.add_parser("plans-md")
+    sub.add_parser("verify").add_argument("rest", nargs="*", metavar="[SF_DIR] [KEY...]")
+    return ap
+
+
+def cmd_time(args) -> int:
+    load_start = round(os.getloadavg()[0], 2)
+    with session("measure-time", args.sf_dir) as spark:
+        rows = time_keys(spark, args.keys, args.sf_dir, args.passes)
+    for row in rows:
+        print(json.dumps(row))
+    summary = {
+        "total": round(sum(r["min"] for r in rows), 3),
+        "load_start": load_start,
+        "load_end": round(os.getloadavg()[0], 2),
+        "sf_dir": args.sf_dir,
+    }
+    print(json.dumps(summary))
+    if args.out:
+        with open(args.out, "w") as fh:
+            json.dump({**summary, "queries": {r["key"]: r for r in rows}}, fh, indent=1)
+    return 0
+
+
+def cmd_ab(args) -> int:
+    conf, _, values = args.conf.partition("=")
+    values = values.split(",")
+    if not conf or len(values) != 2:
+        raise SystemExit(f"--conf wants NAME=A,B, got {args.conf!r}")
+    with session("measure-ab", args.sf_dir) as spark:
+        ab_keys(spark, conf, values, args.keys, args.sf_dir, args.passes)
+    return 0
+
+
+def cmd_profile(args) -> int:
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    from tracing import event_log_conf, read_event_log
+
+    work = tempfile.mkdtemp(prefix="measure-profile-")
+    log_dir = os.path.join(work, "eventlog")
+    event_log_conf(os.path.join(work, "conf"), log_dir)
+    os.environ["SPARK_CONF_DIR"] = os.path.join(work, "conf")
+    with session("measure-profile", args.sf_dir) as spark:
+        steady = [
+            run[1:] for run in bench_passes(spark, args.keys, args.sf_dir, 1) if run[0]
+        ]
+    print_profile(steady, read_event_log(log_dir))
+    shutil.rmtree(work)
+    return 0
+
+
+def cmd_dump(args) -> int:
+    suffix, *keys = args.rest or ["before"]
+    check_keys(keys, registry.QUERIES)
+    # No warm-up: the dump's JVM work, and with it the expression ids in
+    # the plans, stays that of a plain session.
+    with session(f"dump_r{args.round}_plans", args.sf_dir, warm=False) as spark:
+        dump_keys(spark, args.sf_dir, args.round, suffix, keys or sorted(registry.QUERIES))
+    return 0
+
+
+def cmd_plans_md(args) -> int:
+    with session("plans", SF_CORRECT, False, master="local[8]", shuffle_partitions=16) as spark:
+        plans_md(spark, SF_CORRECT)
+    return 0
+
+
+def cmd_verify(args) -> int:
+    sf_dir, *keys = args.rest or [SF_CORRECT]
+    check_keys(keys, registry.ORACLES)
+    with session("measure-verify", sf_dir, warm=False) as spark:
+        return 1 if verify_keys(spark, sf_dir, keys or sorted(registry.ORACLES)) else 0
+
+
+COMMANDS = {
+    "time": cmd_time, "ab": cmd_ab, "profile": cmd_profile,
+    "dump": cmd_dump, "plans-md": cmd_plans_md, "verify": cmd_verify,
+}
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = parser().parse_args(argv)
+    registry.load_all_plans()
+    check_keys(getattr(args, "keys", []), registry.QUERIES)
+    return COMMANDS[args.cmd](args)
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
