@@ -37,11 +37,11 @@ import json
 import os
 import time
 
-from pyspark import StorageLevel
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from drive_bc_datapipeline_spark.plans import registry
+from drive_bc_datapipeline_spark.session import cached, pin
 
 # Sensible partition layout for the outputs big enough to care.
 PARTITION_BY: dict[str, list[str]] = {
@@ -251,19 +251,6 @@ def _check_heldout_args(val_frac: float | None, seeds_val) -> None:
         raise ValueError(f"val_frac must be in (0, 1), got {val_frac}")
 
 
-def _cache_uncached(*frames) -> list:
-    """``cache()`` each given frame that is not cached already and
-    return those, for the caller to ``unpersist()``: a frame the
-    caller cached itself stays cached after the release."""
-    own = [
-        f for f in frames
-        if f is not None and f.storageLevel == StorageLevel.NONE
-    ]
-    for f in own:
-        f.cache()
-    return own
-
-
 def _precision_at_cut(curve_rows: list, t: float) -> float | None:
     """Precision of the gate ``score >= t`` read off a collected PR
     curve: the curve is cumulative-from-the-top over OCCUPIED bins,
@@ -358,7 +345,7 @@ def build_curation_frames(
           → DSIR fit/weigh/resample (H47) → seeded_shuffle (L13)
 
     Scoring-once guarantee: the corpus is scored by exactly ONE Spark
-    job — the gate filter's ``localCheckpoint`` — and every downstream
+    job — the gate filter's pin — and every downstream
     consumer (DSIR bucket counts, importance weights, the selected
     write) reads the materialized kept-id relation instead of
     re-executing the scoring join (the r7 FileScan-audit discipline
@@ -464,11 +451,10 @@ def build_curation_frames(
 
     _check_heldout_args(val_frac, seeds_val)
     # The label frames are read ONCE: cached here, after the scrub,
-    # and released in the finally — every consumer (training, the
-    # seed and held-out curves, calibration) is collected before
-    # this function returns, so nothing it hands back reads them.
-    labels = _cache_uncached(seeds, seeds_val)
-    try:
+    # for the call — every consumer (training, the seed and held-out
+    # curves, calibration) is collected before this function returns,
+    # so nothing it hands back reads them.
+    with cached(seeds, seeds_val):
         seeds_train = seeds
         if val_frac is not None:
             # deterministic doc-level split on the seed+4 stream; pmod so
@@ -552,17 +538,25 @@ def build_curation_frames(
             )
         gate = F.col(gate_col) >= threshold
         gate_obs = Observation("gate_counts")
-        kept_ids = (
+        kept_ids = pin(
             scored.observe(
                 gate_obs,
                 F.count(F.lit(1)).alias("n_docs"),
                 F.coalesce(F.sum(gate.cast("long")), F.lit(0)).alias("n_kept"),
             )
             .filter(gate)
-            .select("doc_id")
-            .localCheckpoint(eager=True)  # THE one corpus-scoring job
+            .select("doc_id"),
+            "classifier gate scoring",  # THE one corpus-scoring job
         )
-        kept = docs.join(kept_ids, "doc_id")
+        # Spread by doc_id before the two DSIR passes' per-gram md5
+        # work: the broadcast join keeps the corpus scan's partitioning,
+        # which is ONE partition for a corpus read from one row group
+        # (after a shuffled join Spark drops this repartition as
+        # redundant). An explicit count, because AQE coalesces a tiny
+        # repartition-by-column back to one partition.
+        kept = docs.join(kept_ids, "doc_id").repartition(
+            int(spark.conf.get("spark.sql.shuffle.partitions")), "doc_id"
+        )
 
         table, default = dsir_log_ratio(
             dsir_bucket_counts(target, n_buckets=dsir_buckets),
@@ -608,9 +602,6 @@ def build_curation_frames(
             "rules_funnel": rules_funnel,
             "settings": settings,
         }
-    finally:
-        for f in labels:
-            f.unpersist()
 
 
 def run_curation_pipeline(
@@ -801,7 +792,7 @@ def run_ccnet_prefilter(
 
     Scoring-once (the r14 curation-job discipline, applied from the
     start): the per-doc score relation — three narrow columns — is
-    localCheckpointed, so the threshold fit and the filter both read
+    pinned, so the threshold fit and the filter both read
     the materialized scores instead of re-running the explode + LM
     join; the corpus/scored counts ride that job as Observations
     (token-less documents score nothing and are dropped — the H49
@@ -868,14 +859,14 @@ def run_ccnet_prefilter(
     # ONE pass counts both populations before the explicit drop
     cover = docs.select("doc_id", "source").join(scores, "doc_id", "left")
     score_obs = Observation("ccnet_scores")
-    scored = (
+    scored = pin(
         cover.observe(
             score_obs,
             F.count(F.lit(1)).alias("n_docs"),
             F.count("avg_nll").alias("n_scored"),
         )
-        .filter(F.col("avg_nll").isNotNull())
-        .localCheckpoint(eager=True)  # THE one corpus-scoring job
+        .filter(F.col("avg_nll").isNotNull()),
+        "ccnet scoring",  # THE one corpus-scoring job
     )
     # ONE execution of the fit aggregate: the collected rows feed both
     # the manifest and the filter (approx sketches need not reproduce

@@ -18,9 +18,8 @@ algorithm), Spark-first:
   (greedy left-to-right, non-overlapping — the reference semantics).
   Driver state is the merge list: k tuples, corpus-independent
   (the G12 unrolled-Lloyd / E8 k-center house pattern).
-- The word table is localCheckpoint'd per round to truncate lineage
-  (k rounds would otherwise nest k aggregate expressions); blocks are
-  freed by the ContextCleaner as each round's frame is dropped.
+- The word table is pinned per round to truncate lineage (k rounds
+  would otherwise nest k aggregate expressions).
 
 Parity: the reference repo has no tokenizer surface (its text path is
 Athena SQL over event payloads, athena.sql / simple-analyses.py); this
@@ -34,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from drive_bc_datapipeline_spark.session import local_frame
+from drive_bc_datapipeline_spark.session import local_frame, pin
 
 #: End-of-word marker appended as a terminal symbol, so merges can
 #: learn word-final units distinctly from word-internal ones (the
@@ -176,7 +175,7 @@ def bpe_train(
             "dedicated tokenizer library on a k-center/quality-scored "
             "sample instead (operators/ml.kcenter_coreset, E6/E7)"
         )
-    wt = word_freq_table(df, text_col).localCheckpoint(eager=True)
+    wt = pin(word_freq_table(df, text_col), "bpe word table")
     if not wt.take(1):
         raise ValueError("bpe_train needs a corpus with at least one word")
     merges: list[tuple[int, str, str, str, int]] = []
@@ -197,9 +196,8 @@ def bpe_train(
         merges.append((rank, left, right, merged, n))
         # Apply map-side; checkpoint to truncate lineage so round k+1's
         # aggregate doesn't re-fold every previous merge.
-        wt = wt.withColumn(
-            "syms", _merge_pair(F.col("syms"), left, right, merged)
-        ).localCheckpoint(eager=True)
+        wt = wt.withColumn("syms", _merge_pair(F.col("syms"), left, right, merged))
+        wt = pin(wt, "bpe merge round")
     return merges
 
 

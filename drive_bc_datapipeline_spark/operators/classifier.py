@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drive_bc_datapipeline_spark.session import local_frame, scoped_conf
+from drive_bc_datapipeline_spark.session import cached, local_frame, pin, scoped_conf
 
 
 def hash_bucket(col, n_buckets: int):
@@ -270,15 +270,12 @@ def train_hashed_linear(
     _check_n_gram(n_gram)
     toks = word_grams(text_col, use_bigrams=n_gram == 2)
     # per-doc label + token count (token-less docs kept: bias-only).
-    # r18: the training frames are hash-partitioned by __id and
-    # CACHED instead of localCheckpoint'd — every one of the n_rounds
-    # gradient plans keys its logits groupBy and both residual joins
-    # on __id, and cache() (unlike localCheckpoint, which drops
-    # partitioning info from the restored LogicalRDD) preserves the
-    # repartition layout, so each round pays ONE exchange (the final
+    # r18: the training frames are hash-partitioned by __id and cached
+    # for the call — every one of the n_rounds gradient plans keys its
+    # logits groupBy and both residual joins on __id, so with the
+    # layout kept each round pays ONE exchange (the final
     # groupBy(bucket)) instead of three (guide §2.4: operations keyed
-    # the same way share one exchange). The cached frames are
-    # unpersisted in the finally below — nothing outlives the call.
+    # the same way share one exchange).
     docs = (
         df.select(
             F.col(id_col).alias("__id"),
@@ -286,10 +283,8 @@ def train_hashed_linear(
             F.size(toks).alias("__nt"),
         )
         .repartition(F.col("__id"))
-        .cache()
     )
-    feats = None
-    try:
+    with cached(docs):
         # one validation job: NULL ids would silently vanish from every
         # equi-join below while still counting in the gradient divisor
         # n; non-binary labels break the logistic math
@@ -343,7 +338,6 @@ def train_hashed_linear(
                 )
             )
             .repartition(F.col("__id"))
-            .cache()
         )
         # The per-round plan reads two CACHED, pre-partitioned
         # relations and a broadcast model — AQE's stage-by-stage
@@ -351,7 +345,9 @@ def train_hashed_linear(
         # per-query-stage scheduling adds ~25% to each of the n_rounds
         # sequential jobs (r18 A/B: 5 rounds 2.5s on / 2.0s off,
         # interleaved twice). Scope the toggle to the round loop.
-        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        with cached(feats), scoped_conf(
+            spark, {"spark.sql.adaptive.enabled": "false"}
+        ):
             model: dict[int, float] = {-1: 0.0}  # -1 = bias
             for _round in range(n_rounds):
                 wdf = local_frame(
@@ -365,12 +361,6 @@ def train_hashed_linear(
                     w = model.get(b, 0.0)
                     reg = 0.0 if b == -1 else l2 * w  # bias unregularized
                     model[b] = w - lr * (float(row["g"]) / n + reg)
-    finally:
-        # unpersist on EVERY exit (including the validation raises
-        # above) so no invocation leaves CacheManager entries behind
-        docs.unpersist()
-        if feats is not None:
-            feats.unpersist()
     bias = model.pop(-1)
     return model, bias
 
@@ -462,7 +452,8 @@ def classifier_pr_curve(
     per_bin = binned.groupBy("__bin").agg(
         F.count(F.lit(1)).alias("__n"),
         F.sum("__y").cast("long").alias("__np"),
-    ).localCheckpoint(eager=True)  # <= n_bins+1 rows; scanned 2x below
+    )
+    per_bin = pin(per_bin, "pr curve bins")  # <= n_bins+1 rows; scanned 2x below
     bad = per_bin.filter(F.col("__bin").isNull()).collect()
     if bad:
         raise ValueError(
@@ -750,15 +741,15 @@ def calibration_report(
             f"n_bins={n_bins}: the reliability frame is model state, "
             f"bounded at {MAX_PR_BINS}"
         )
-    per_bin = (
+    per_bin = pin(
         _binned_scores(df, label_col, score_col, n_bins, with_score=True)
         .groupBy("__bin")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("__y").cast("long").alias("n_pos"),
             F.sum("__s").alias("__ssum"),
-        )
-        .localCheckpoint(eager=True)  # <= n_bins+1 rows, scanned twice
+        ),
+        "calibration bins",  # <= n_bins+1 rows, scanned twice
     )
     bad = per_bin.filter(F.col("__bin").isNull()).collect()
     if bad:

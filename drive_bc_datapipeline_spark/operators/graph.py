@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from drive_bc_datapipeline_spark.session import cached, pin
+
 
 def connected_components(
     edges: DataFrame,
@@ -41,15 +43,14 @@ def connected_components(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
-        .cache()
     )
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-    ).localCheckpoint()
-
-    try:  # finally-unpersist so the non-convergence raise can't leak `sym`
+    with cached(sym):  # every round joins the edge set
+        labels = pin(
+            sym.select(F.col("u").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("label")),
+            "cc initial labels",
+        )
         for _ in range(max_iter):
             neighbor_min = (
                 sym.join(labels, sym.v == labels.node)
@@ -79,8 +80,6 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )
-    finally:
-        sym.unpersist()
 
 
 def connected_components_lsss(
@@ -109,20 +108,20 @@ def connected_components_lsss(
     component: every node directly attached to its component minimum.
     """
     # canonical (hi, lo) undirected edge set, self-loops dropped
-    e = (
+    e = pin(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(
             F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "lsss edges",
     )
-    all_nodes = (
+    all_nodes = pin(
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "lsss nodes",
     )
 
     def large_star(cur: DataFrame) -> DataFrame:
@@ -204,8 +203,8 @@ def pagerank(
 
     Scale notes: the edges frame is cached once and re-partitioned on
     ``src`` so each iteration's join is co-located; the ranks frame is
-    |nodes| rows. Lineage is truncated with ``localCheckpoint`` every
-    round — without it the plan doubles per iteration. For
+    |nodes| rows. Lineage is truncated with a pin every round —
+    without it the plan doubles per iteration. For
     convergence-driven runs, loop until max |Δrank| < tol instead of a
     fixed count (same mechanics, one extra tiny agg per round).
 
@@ -216,12 +215,10 @@ def pagerank(
         edges.select(F.col(src).alias("node"))
         .unionAll(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .cache()
     )
     outw = (
         edges.groupBy(src)
         .agg(F.sum(weight).cast("double").alias("out_w"))
-        .cache()
     )
     # per-edge transition probability, partitioned once on src so every
     # iteration's rank join is exchange-free on the edge side
@@ -233,15 +230,12 @@ def pagerank(
             (F.col(weight).cast("double") / F.col("out_w")).alias("p"),
         )
         .repartition("e_src")
-        .cache()
     )
-    try:  # finally-unpersist so a mid-iteration failure can't leak
-        # the three CacheManager entries for the rest of the session
+    with cached(nodes, outw, trans):
         n_nodes = nodes.count()
         has_out = outw.select(F.col(src).alias("node"))
-        ranks = nodes.select(
-            "node", F.lit(1.0 / n_nodes).alias("rank")
-        ).localCheckpoint(eager=True)
+        ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
+        ranks = pin(ranks, "pagerank initial ranks")
         for _ in range(n_iter):
             contribs = (
                 trans.join(
@@ -254,7 +248,7 @@ def pagerank(
                 ranks.join(has_out, "node", "left_anti")
                 .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("mass"))
             )
-            ranks = (
+            ranks = pin(
                 nodes.join(contribs, "node", "left")
                 .crossJoin(F.broadcast(dangling))
                 .select(
@@ -267,16 +261,12 @@ def pagerank(
                             + F.col("mass") / n_nodes
                         )
                     ).alias("rank"),
-                )
-                .localCheckpoint(eager=True)
+                ),
+                "pagerank round",
             )
         # the final ranks frame is checkpoint-truncated, so the
         # iteration scaffolding is safe to release on every exit path
         return ranks
-    finally:
-        trans.unpersist()
-        outw.unpersist()
-        nodes.unpersist()
 
 
 def triangle_census(
@@ -298,12 +288,12 @@ def triangle_census(
     orientation key and an identical count, since triangle counts are
     orientation-invariant.
     """
-    e = (
+    e = pin(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)  # feeds 4 subtrees; one build
+        .distinct(),
+        "triangle edges",  # feeds 4 subtrees; one build
     )
     deg = (
         e.select(F.col("u").alias("node"))
@@ -361,9 +351,8 @@ def label_propagation(
     Per round: one join keyed on the edge source + one (node, label)
     aggregation + a per-node top-1 window — two shuffles, the same
     scale shape as `pagerank`. The symmetric edge frame is partitioned
-    once on its join key and cached; lineage is truncated per round
-    with localCheckpoint (and the cache is released in a finally so
-    non-convergent or failed runs don't leak CacheManager entries).
+    once on its join key and cached for the call; lineage is truncated
+    per round with a pin.
 
     Returns (node, label).
     """
@@ -375,28 +364,25 @@ def label_propagation(
         .groupBy("a", "b")
         .agg(F.sum("w").cast("double").alias("w"))
         .repartition("a")
-        .cache()
     )
-    try:
-        labels = (
+    with cached(sym):  # every round joins the edge set
+        labels = pin(
             sym.select(F.col("a").alias("node"))
             .distinct()
-            .select("node", F.col("node").alias("label"))
-            .localCheckpoint(eager=True)
+            .select("node", F.col("node").alias("label")),
+            "lpa initial labels",
         )
         top = Window.partitionBy("node").orderBy(
             F.desc("wsum"), F.asc("label")
         )
         for _ in range(n_iter):
-            labels = (
+            labels = pin(
                 sym.join(labels.withColumnRenamed("node", "a"), "a")
                 .groupBy(F.col("b").alias("node"), "label")
                 .agg(F.sum("w").alias("wsum"))
                 .withColumn("rn", F.row_number().over(top))
                 .filter(F.col("rn") == 1)
-                .select("node", "label")
-                .localCheckpoint(eager=True)
+                .select("node", "label"),
+                "lpa round",
             )
-    finally:
-        sym.unpersist()
     return labels

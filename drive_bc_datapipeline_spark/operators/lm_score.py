@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from drive_bc_datapipeline_spark.session import pin
+
 
 def unigram_lm_table(
     ref: DataFrame,
@@ -56,7 +58,7 @@ def unigram_lm_table(
     freq = tk.groupBy("tok").agg(F.count(F.lit(1)).alias("__n"))
     # vocabulary-bounded; consumed by the normalizer AND the logp
     # projection — pin it so the reference corpus tokenizes once
-    freq = freq.localCheckpoint(eager=True)
+    freq = pin(freq, "unigram lm counts")
     if freq.isEmpty():  # cheap: reads the materialized checkpoint
         raise ValueError(
             "unigram_lm_table: empty reference corpus — the LM has "
@@ -185,7 +187,7 @@ def ngram_lm_table(
     )
     tc = tuples.groupBy(*cols).agg(F.count(F.lit(1)).alias("n"))
     # vocabulary-bounded; feeds the tuple rows AND the context totals
-    tc = tc.localCheckpoint(eager=True)
+    tc = pin(tc, "ngram lm counts")
     if tc.isEmpty():  # cheap: reads the materialized checkpoint
         raise ValueError(
             f"ngram_lm_table(k={k}): no document in the reference has "

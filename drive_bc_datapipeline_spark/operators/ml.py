@@ -32,7 +32,7 @@ from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from drive_bc_datapipeline_spark.session import local_frame
+from drive_bc_datapipeline_spark.session import cached, local_frame
 
 LABEL = "duration_days"
 NUMERIC = ["num_items", "total_qty", "total_price"]
@@ -362,37 +362,38 @@ def kcenter_coreset(
         ).collect()[0]["s"]
         return (None if row is None else (-row["nd"], row["i"], row["v"]))
 
-    base = df.select(id_col, vec_col).persist()
+    base = df.select(id_col, vec_col)
+    # explicit cur/prev chain: a round's state is freed once the next one is built
     cur = None
     prev = None  # previous round's state, covered by the finally so a
     # throw between persist() and unpersist() can't leak blocks
-    try:
-        # Seed at the minimum id; md=0 makes argmax_far return exactly
-        # that row (with its vector) in the materializing pass.
-        seed = argmax_far(base.withColumn("md", F.lit(0.0)))
-        if seed is None:
-            raise ValueError("kcenter_coreset needs a non-empty frame")
-        _zero, first, cvec = seed
-        centers = [(0, first, 0.0)]
-        cur = base.withColumn("md", d2_to(cvec)).persist()
-        for rnd in range(1, k):
-            far = argmax_far(cur)
-            radius, cid, cvec = far
-            if radius == 0.0:
-                break  # fewer distinct points than k: cover is exact
-            centers.append((rnd, cid, radius))
-            nxt = cur.withColumn("md", F.least(F.col("md"), d2_to(cvec)))
-            nxt = nxt.persist()
-            # Swap BEFORE materializing: both states are now reachable
-            # from the finally, whichever call below throws.
-            prev, cur = cur, nxt
-            cur.count()  # materialize before releasing the old state
-            prev.unpersist()
-            prev = None
-        return local_frame(df.sparkSession, centers, out_schema)
-    finally:
-        if prev is not None:
-            prev.unpersist()
-        if cur is not None:
-            cur.unpersist()
-        base.unpersist()
+    with cached(base):  # every round scans the projection
+        try:
+            # Seed at the minimum id; md=0 makes argmax_far return exactly
+            # that row (with its vector) in the materializing pass.
+            seed = argmax_far(base.withColumn("md", F.lit(0.0)))
+            if seed is None:
+                raise ValueError("kcenter_coreset needs a non-empty frame")
+            _zero, first, cvec = seed
+            centers = [(0, first, 0.0)]
+            cur = base.withColumn("md", d2_to(cvec)).persist()
+            for rnd in range(1, k):
+                far = argmax_far(cur)
+                radius, cid, cvec = far
+                if radius == 0.0:
+                    break  # fewer distinct points than k: cover is exact
+                centers.append((rnd, cid, radius))
+                nxt = cur.withColumn("md", F.least(F.col("md"), d2_to(cvec)))
+                nxt = nxt.persist()
+                # Swap BEFORE materializing: both states are now reachable
+                # from the finally, whichever call below throws.
+                prev, cur = cur, nxt
+                cur.count()  # materialize before releasing the old state
+                prev.unpersist()
+                prev = None
+            return local_frame(df.sparkSession, centers, out_schema)
+        finally:
+            if prev is not None:
+                prev.unpersist()
+            if cur is not None:
+                cur.unpersist()

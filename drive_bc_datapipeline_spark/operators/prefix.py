@@ -20,11 +20,9 @@ boundaries per job (the sample seed depends on the RDD id of each
 execution), so a lazily re-executed lineage can land rows in
 different partitions between the totals-collect job and the final
 job, silently corrupting the offsets. We therefore pin ONE
-materialization with an eager ``localCheckpoint()`` before
-collecting totals: both jobs then read identical blocks. The
-materialization is the same order of cost as the sort shuffle the
-scan already pays; blocks are freed when the returned DataFrame is
-garbage-collected.
+materialization (``session.pin``) before collecting totals: both
+jobs then read identical blocks. The materialization is the same
+order of cost as the sort shuffle the scan already pays.
 """
 
 from __future__ import annotations
@@ -33,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from drive_bc_datapipeline_spark.session import local_frame
+from drive_bc_datapipeline_spark.session import local_frame, pin
 
 
 def exclusive_prefix_sum(
@@ -62,13 +60,10 @@ def exclusive_prefix_sum(
     # Pin the partitioning: repartitionByRange re-samples boundaries on
     # every job, so without this the __pid->offset map from the totals
     # job would be applied to DIFFERENT partition contents in the final
-    # job (observed: ~87% wrong prefix values at 5k rows). The eager
-    # local checkpoint truncates lineage so both jobs read one frozen
-    # set of blocks.
-    pinned = ranged.withColumn(
-        "__pid", F.spark_partition_id()
-    ).localCheckpoint(eager=True)
-    with_pid = pinned
+    # job (observed: ~87% wrong prefix values at 5k rows). The pin
+    # truncates lineage so both jobs read one frozen set of blocks.
+    with_pid = ranged.withColumn("__pid", F.spark_partition_id())
+    with_pid = pin(with_pid, "prefix-sum partitions")
 
     # phase 2: per-partition totals — |partitions| rows to the driver
     totals = {

@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from drive_bc_datapipeline_spark.session import pin
+
 # Quantization contract shared by the scorers below: nudge by an
 # epsilon far above float noise but far below the 6-dp grid, then
 # round — the same boundary-nudge rule as plans.registry.r6/EPS4
@@ -152,7 +154,6 @@ def mlt_candidate_terms(
     max_query_terms: int = 16,
     doc_col: str = "doc_id",
     tok_col: str = "tok",
-    pin_query_terms: bool = True,
     n_docs: int | None = None,
     tokens_distinct: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
@@ -166,11 +167,10 @@ def mlt_candidate_terms(
       screened tokens, ordered by (df, token), with the capped set
       size alongside.
 
-    ``qt`` is |queries|·M rows; ``pin_query_terms`` eagerly
-    localCheckpoints it (default) so consumers of the QUERY-TERM
-    subtree — the Jaccard ranking, a BM25 ranking, any other candidate
-    generator — never re-run its df aggregate + screen + rarest-M
-    window. ``scrbase`` itself is returned UNPINNED: each consumer of
+    ``qt`` is |queries|·M rows and pinned, so consumers of the
+    QUERY-TERM subtree — the Jaccard ranking, a BM25 ranking, any
+    other candidate generator — never re-run its df aggregate + screen
+    + rarest-M window. ``scrbase`` itself is returned UNPINNED: each consumer of
     the corpus side re-executes the df aggregate + screen join unless
     the caller pins it (callers with one scrbase consumer, like the
     gated hybrid plan, don't need to).
@@ -205,17 +205,16 @@ def mlt_candidate_terms(
         )
     scrbase = toks.select(doc_col, tok_col).join(F.broadcast(keep), tok_col)
     w_rare = Window.partitionBy(doc_col).orderBy("__df", tok_col)
-    qt = (
+    qt = pin(
         scrbase.filter(query_pred)
         .withColumn("__rn", F.row_number().over(w_rare))
         .filter(F.col("__rn") <= max_query_terms)
         .select(F.col(doc_col).alias("__query_id"), tok_col, "__df")
         .withColumn(
             "__qsz", F.count(F.lit(1)).over(Window.partitionBy("__query_id"))
-        )
+        ),
+        "query terms",
     )
-    if pin_query_terms:
-        qt = qt.localCheckpoint(eager=True)
     return scrbase, qt
 
 

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from drive_bc_datapipeline_spark.session import pin
+
 
 def _tokens(text_col: str):
     # H17's tokenization (plans/documents.py chunk_documents): split on
@@ -60,22 +62,20 @@ def _dup_window_occurrences(
     ``carry_cols`` (functionally dependent on the id, e.g. source)
     ride the per-doc frame so callers can roll up without re-scanning
     the corpus for the dimension."""
-    toks = (
+    # Pin the tokenized corpus ONCE (the H31 move): three consumers
+    # read it — the gram stream feeds both the duplicate-detection
+    # aggregate and the semi-join probe, and the per-doc counts frame
+    # joins back at the end. Without the pin each consumer re-scans the
+    # source parquet (3 FileScans observed); with it the text is read
+    # and split exactly once.
+    toks = pin(
         docs.select(
             F.col(id_col).alias("doc_id"),
             *carry_cols,
             _tokens(text_col).alias("tk"),
         )
-        .select("doc_id", *carry_cols, "tk", F.size("tk").alias("n_tokens"))
-        # Pin the tokenized corpus ONCE (the H31 move): three consumers
-        # read it — the gram stream feeds both the duplicate-detection
-        # aggregate and the semi-join probe, and the per-doc counts
-        # frame joins back at the end. Without the pin each consumer
-        # re-scans the source parquet (3 FileScans observed); with it
-        # the text is read and split exactly once, at the cost of
-        # materializing the token arrays to executor-local blocks
-        # (freed on GC of the returned frames).
-        .localCheckpoint(eager=True)
+        .select("doc_id", *carry_cols, "tk", F.size("tk").alias("n_tokens")),
+        "substring tokens",
     )
     n_tokens = toks.select("doc_id", *carry_cols, "n_tokens")
     # Window starts 0..n-L. sequence(0, n-L) DESCENDS when n < L (the

@@ -40,7 +40,7 @@ from drive_bc_datapipeline_spark.operators.bpe import (
     word_freq_table,
     words_array,
 )
-from drive_bc_datapipeline_spark.session import local_frame
+from drive_bc_datapipeline_spark.session import local_frame, pin
 
 
 def bpe_vocab(
@@ -341,10 +341,10 @@ def tokenizer_fertility_report(
     # words_array: the same word definition training and segmentation
     # use, so pieces-per-word divides consistent numerators/denominators
     words = words_array(F.col(text_col))
-    # localCheckpoint: the joined per-doc relation feeds TWO aggregates
+    # pinned: the joined per-doc relation feeds TWO aggregates
     # (counters, OOV anti-join); without the pin both subtrees re-scan
     # df + seg and re-run the join (the hybrid pinned-relation pattern)
-    base = (
+    base = pin(
         df.select(
             id_col,
             source_col,
@@ -358,8 +358,8 @@ def tokenizer_fertility_report(
             "__nb",
             F.size(tokens_col).alias("__nt"),
             F.col(tokens_col).alias("__toks"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "fertility per doc",
     )
     per_source = base.groupBy(source_col).agg(
         F.count(F.lit(1)).alias("n_docs"),

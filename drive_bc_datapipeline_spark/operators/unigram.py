@@ -42,6 +42,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from drive_bc_datapipeline_spark.session import pin
+
 #: Driver/broadcast piece-table bound — model state, corpus-independent
 #: (the pagerank-edge-collect guard class).
 MAX_SEED_PIECES = 262_144
@@ -155,7 +157,7 @@ def unigram_train(
         raise ValueError(f"max_piece_len must be >= 1, got {max_piece_len}")
     if min_count < 1:
         raise ValueError(f"min_count must be >= 1, got {min_count}")
-    wt = word_counts(df, text_col).localCheckpoint(eager=True)
+    wt = pin(word_counts(df, text_col), "unigram word counts")
     if not wt.take(1):
         raise ValueError("unigram_train needs a corpus with at least one word")
     seed = _seed_pieces(wt, max_piece_len, min_count)

@@ -336,7 +336,7 @@ GROUP BY 1
 @query("bloom_pruned_join_gate", BLOOM_GATE_ORACLE)
 def bloom_pruned_join_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from drive_bc_datapipeline_spark.operators.joins import bloom_pruned_joins
-    from drive_bc_datapipeline_spark.session import scoped_conf
+    from drive_bc_datapipeline_spark.session import pin, scoped_conf
 
     l = t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
@@ -367,4 +367,4 @@ def bloom_pruned_join_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         # Execute NOW (confs still widened) and pin the result; the
         # driver's later collect reads the checkpointed rows.
-        return joined.localCheckpoint(eager=True)
+        return pin(joined, "bloom-pruned join")

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from drive_bc_datapipeline_spark.functions import text as text_fns
+from drive_bc_datapipeline_spark.session import pin
 from drive_bc_datapipeline_spark.tables import spread
 from drive_bc_datapipeline_spark.plans.registry import (
     query,
@@ -122,8 +123,8 @@ JACCARD_MIN = 0.2
 # consumer re-executes its shuffles every time; materializing it once
 # per session is the materialized-view move a production engine makes
 # for a shared expensive intermediate. Keyed by applicationId so a new
-# session never sees a stale frame; pinned via localCheckpoint (blocks
-# are session-lifetime, the frames are |verified pairs| rows — tiny).
+# session never sees a stale frame; pinned (the frames are |verified
+# pairs| rows — tiny).
 # A process runs one SparkContext at a time, so entries of any other
 # application are dead and are dropped before the next build: the memo
 # never holds more than one session's frames.
@@ -139,7 +140,7 @@ def _memo_pairs(spark, sf_dir, key, build):
     if df is None:
         for stale in [m for m in _PAIR_MEMO if m[0] != app]:
             del _PAIR_MEMO[stale]
-        df = build().localCheckpoint(eager=True)
+        df = pin(build(), f"pairs {key}")
         _PAIR_MEMO[k] = df
     return df
 
@@ -233,11 +234,7 @@ def _verify_jaccard(
     # materialized once: it feeds three subtrees (two id projections +
     # the final join) and Spark re-executes the whole candidate
     # pipeline per subtree otherwise (measured 2x slower at sf0.1).
-    # localCheckpoint, not cache(): cache() entries live in the
-    # CacheManager for the whole session (one leaked cached plan per
-    # invocation), while checkpoint blocks are freed by the
-    # ContextCleaner when the returned DataFrame is garbage-collected.
-    cand = cand.localCheckpoint(eager=True)
+    cand = pin(cand, "jaccard candidates")
     cand_docs = (
         cand.select(F.col("doc_id_a").alias("doc_id"))
         .unionByName(cand.select(F.col("doc_id_b").alias("doc_id")))
@@ -251,12 +248,13 @@ def _verify_jaccard(
     # checkpoint Spark re-executes the semi-join + collect_set subtree
     # (and re-broadcasts it) once per alias — measured ~0.7 s of the
     # r6 verify cost at sf0.1.
-    docsets = (
+    docsets = pin(
         shingles.join(F.broadcast(cand_docs), "doc_id", "left_semi")
         .select("doc_id", h.alias("h"))
         .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_set("h")).alias("hs"))
-    ).localCheckpoint(eager=True)
+        .agg(F.sort_array(F.collect_set("h")).alias("hs")),
+        "jaccard docsets",
+    )
     a, b = docsets.alias("sa"), docsets.alias("sb")
     n_common = F.size(F.array_intersect(F.col("sa.hs"), F.col("sb.hs")))
     n_union = F.size("sa.hs") + F.size("sb.hs") - n_common
@@ -308,10 +306,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle bytes at this corpus; the ratio grows with n-gram
     # width). Collision risk is the same class _verify_jaccard already
     # documents (~|shingles|²/2⁶⁵ for any collision corpus-wide).
-    # Eager localCheckpoint, not cache(): the frame feeds three
-    # subtrees, and checkpoint blocks are freed by the ContextCleaner
-    # when the DataFrame is collected, instead of pinning CacheManager
-    # storage for the session.
+    # Pinned: the frame feeds three subtrees.
     # No spread — settled for the third time r17: a mid-round commit
     # briefly re-instated spread(by=doc_id) off an event-log profile
     # (the unspread checkpoint pins a 1-partition layout downstream),
@@ -324,10 +319,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # own exchange follows immediately, so the spread exchange is pure
     # extra cost here, unlike the keys whose heavy work sits directly
     # on the checkpoint layout. A/B: OPTIMIZATION_r17.md entry 6.
-    shingles = (
+    shingles = pin(
         word_ngrams(d, NGRAM_N, distinct=False)
-        .select("doc_id", F.xxhash64("shingle").alias("h"))
-        .localCheckpoint(eager=True)
+        .select("doc_id", F.xxhash64("shingle").alias("h")),
+        "ngram shingles",
     )
     rare = (
         shingles.groupBy("h")
@@ -661,24 +656,20 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     # duplicate shingles don't change min-hash mins or collect_set
     # verification → skip the distinct's 250k-row shuffle.
-    # localCheckpoint, not cache(): checkpoint blocks are freed when the
-    # returned frame is GC'd; cache() pins a CacheManager entry for the
-    # rest of the session (one leak per invocation).
     # spread: parallelize the shingle explode + 16 min-hash slices off
     # the one-row-group scan (no-op on multi-file corpora); hash by
     # doc_id skips round-robin's local row sort. A/B: SURVEY.md item 13 (r11).
-    shingles = word_ngrams(
-        spread(d, by="doc_id"), MH_N, distinct=False
-    ).localCheckpoint(eager=True)
+    shingles = word_ngrams(spread(d, by="doc_id"), MH_N, distinct=False)
+    shingles = pin(shingles, "minhash shingles")
     # Pinned like estimate-quality's signature table: both sides of the
     # band self-join otherwise re-run the 16 min-aggregations (the
     # initial plan shows no ReusedExchange for the aliased subtrees).
     # |docs| rows x 16 fixed-width hex — dimension-bounded.
-    sigs = (
+    sigs = pin(
         shingles.select("doc_id", *_mh_slice_cols())
         .groupBy("doc_id")
-        .agg(*_mh_cols_spark())
-        .localCheckpoint(eager=True)
+        .agg(*_mh_cols_spark()),
+        "minhash signatures",
     )
     # ALL band hashes in one projection + posexplode — a union of four
     # sigs.select(...) branches would re-run the signature aggregation
@@ -823,11 +814,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise re-run the tokenize + two-level aggregation (the plan
     # shows two documents scans and no ReusedExchange). |docs| rows x
     # one long — dimension-bounded.
-    sim = (
-        toks.groupBy("doc_id")
-        .agg(simhash.alias("simhash"))
-        .localCheckpoint(eager=True)
-    )
+    sim = toks.groupBy("doc_id").agg(simhash.alias("simhash"))
+    sim = pin(sim, "simhash signatures")
     # explode into (chunk_id, chunk_val) bands → candidate equi-join
     chunks = F.array(
         *[
@@ -1472,12 +1460,10 @@ JOIN sizes sb ON sb.doc_id = e.doc_id_b
 @query("minhash_estimate_quality", MINHASH_QUALITY_ORACLE)
 def minhash_estimate_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
-    # localCheckpoint, not cache() — same GC-freed-blocks rationale as
-    # dedup_minhash_lsh above; spread by doc_id for the same
-    # one-row-group shingle parallelism. A/B: SURVEY.md item 13 (r11).
-    shingles = word_ngrams(
-        spread(d, by="doc_id"), MH_N, distinct=False
-    ).localCheckpoint(eager=True)
+    # spread by doc_id for dedup_minhash_lsh's one-row-group shingle
+    # parallelism. A/B: SURVEY.md item 13 (r11).
+    shingles = word_ngrams(spread(d, by="doc_id"), MH_N, distinct=False)
+    shingles = pin(shingles, "minhash shingles")
     # Pin the signature table too: it feeds four subtrees (both sides
     # of the band self-join + both sides of the signature-agreement
     # compare). Measured at sf0.1: steady-state is a wash (AQE's
@@ -1485,11 +1471,11 @@ def minhash_estimate_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # but the COLD pass — which is what the driver's once-per-round
     # gate and the first bench pass pay — drops ~2x (6.7s -> 3.7s).
     # |docs| rows x 16 fixed-width hex — linear, narrow.
-    sigs = (
+    sigs = pin(
         shingles.select("doc_id", *_mh_slice_cols())
         .groupBy("doc_id")
-        .agg(*_mh_cols_spark())
-        .localCheckpoint(eager=True)
+        .agg(*_mh_cols_spark()),
+        "minhash signatures",
     )
     band_arr = F.array(
         *[
@@ -1789,7 +1775,7 @@ def cross_source_content_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream. Pinned: both sides of the self-join otherwise re-run the
     # full tokenize + explode + distinct (no ReusedExchange for the
     # aliased subtrees — the simhash/minhash finding).
-    sh = (
+    sh = pin(
         d.select("source", F.split("text", " ").alias("toks"))
         .select(
             "source",
@@ -1803,8 +1789,8 @@ def cross_source_content_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.xxhash64("shingle").alias("h"),
             F.length("shingle").alias("ln"),
         )
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "source shingles",
     )
     a = sh.alias("a")
     b = sh.alias("b")
@@ -2220,12 +2206,13 @@ GROUP BY p.token
 @query("cms_heavy_hitters", CMS_HEAVY_ORACLE)
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
-    exact = (
+    exact = pin(
         d.select(F.explode(F.split("text", " ")).alias("token"))
         .filter(F.col("token") != "")
         .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("c"))
-    ).localCheckpoint()  # feeds cells + topk + probes; one materialization
+        .agg(F.count(F.lit(1)).alias("c")),
+        "token counts",
+    )  # feeds cells + topk + probes; one materialization
 
     def bucket(j: int):
         return F.expr(_cms_bucket_sql(j))
@@ -2373,12 +2360,12 @@ def bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # query-terms-only tf relation feeds BOTH the df aggregate and the
     # scoring join — pin it so the tokenizing corpus scan runs once
-    tf = (
+    tf = pin(
         docs.select("doc_id", F.explode("toks").alias("token"))
         .filter(F.col("token").isin(*BM25_TERMS))
         .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("tf")),
+        "term frequencies",
     )
     df_ = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     idf = F.log(
@@ -2602,9 +2589,7 @@ def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned: the vocab-bounded LM table feeds the corpus total AND the
     # broadcast scoring join — unpinned, each consumer re-tokenizes the
     # whole corpus to rebuild it (same fix as zipf_slope)
-    freq = tk.groupBy("tok").agg(F.count(F.lit(1)).alias("n")).localCheckpoint(
-        eager=True
-    )
+    freq = pin(tk.groupBy("tok").agg(F.count(F.lit(1)).alias("n")), "token counts")
     tot = freq.agg(F.sum("n").cast("bigint").alias("total"))
     nll = -F.log2(F.col("n").cast("double") / F.col("total"))
     return (
@@ -2684,9 +2669,8 @@ def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ranked join below, and each consumer otherwise re-tokenizes the
     # whole corpus to rebuild it (3 documents scans). Vocab rows are
     # sublinear in corpus size — a dimension-bounded pin.
-    salted = freq.withColumn(
-        "salt", F.pmod(F.xxhash64("tok"), F.lit(S)).cast("int")
-    ).localCheckpoint(eager=True)
+    salted = freq.withColumn("salt", F.pmod(F.xxhash64("tok"), F.lit(S)).cast("int"))
+    salted = pin(salted, "salted vocabulary")
     blk = salted.groupBy("n", "salt").agg(F.count(F.lit(1)).alias("cnt"))
     nn = blk.groupBy("n").agg(F.sum("cnt").alias("ncnt"))
     wn = Window.orderBy(F.desc("n")).rowsBetween(
@@ -2908,9 +2892,9 @@ def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # 100 TB: each round is one degree aggregation (shuffle on node) and
 # two semi-joins (shuffle on endpoint) — O(rounds · |E|), the standard
-# distributed peel. The base edge set is pinned with one eager
-# localCheckpoint so the simhash banding pipeline runs once, not once
-# per round; per-round readouts are COUNT aggregates, never collected.
+# distributed peel. The base edge set is pinned so the simhash banding
+# pipeline runs once, not once per round; per-round readouts are COUNT
+# aggregates, never collected.
 # --------------------------------------------------------------------------
 
 KCORE_K = 2
@@ -2957,33 +2941,30 @@ n0 AS (
 
 @query("kcore_peeling", KCORE_ORACLE)
 def kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r17 replan: per-round localCheckpoint on the peeled edge/node
-    frames. The unrolled loop previously rebuilt each round's frames
-    from the round-0 lineage, so the final union's physical plan held
-    ~110 exchanges / ~100 sort-merge joins for 3 peel rounds (plan
-    size grows quadratically with rounds — guide §3.3's
-    planning-time trap; at real scale the re-executed prefix is also
-    recomputed work AQE's exchange reuse only partially dedupes).
-    Checkpointing each round keeps the plan linear: the counters
-    union reads 8 one-row aggregates over pinned, bounded frames.
+    """r17 replan: per-round pins of the peeled edge/node frames. The
+    unrolled loop previously rebuilt each round's frames from the
+    round-0 lineage, so the final union's physical plan held ~110
+    exchanges / ~100 sort-merge joins for 3 peel rounds (plan size grows
+    quadratically with rounds — guide §3.3's planning-time trap; at real
+    scale the re-executed prefix is also recomputed work AQE's exchange
+    reuse only partially dedupes). Pinning each round keeps the
+    plan linear: the counters union reads 8 one-row aggregates over
+    pinned, bounded frames.
     Same arithmetic, same oracle, identical rows.
 
-    Side effect (r17 ADVICE, same caveat as spread()): the 8 eager
-    localCheckpoints run AT PLAN-BUILD TIME — fn() triggers jobs even
-    in explain/dump-only contexts. Every round's pinned blocks must
-    stay alive until the final counters union executes (each round's
-    counter row references that round's frames), so they are freed by
-    the ContextCleaner when the returned DataFrame is collected, not
-    incrementally — repeated builds in one session hold ~8 small
-    pinned frames each until GC."""
+    Side effect (r17 ADVICE, same caveat as spread()): the 8 pins run
+    AT PLAN-BUILD TIME — fn() triggers jobs even in explain/dump-only
+    contexts. Every round's pinned blocks must stay alive until the
+    final counters union executes (each round's counter row references
+    that round's frames), so they are freed together when the returned
+    DataFrame is garbage-collected, not incrementally — repeated builds
+    in one session hold ~8 small pinned frames each until then."""
     edges = simhash_pairs(spark, sf_dir).select(
         F.col("doc_id_a").alias("u"), F.col("doc_id_b").alias("v")
-    ).localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.explode(F.array("u", "v")).alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
     )
+    edges = pin(edges, "kcore edges")
+    nodes = edges.select(F.explode(F.array("u", "v")).alias("node")).distinct()
+    nodes = pin(nodes, "kcore nodes")
     rounds = []
     for r in range(KCORE_ROUNDS + 1):
         rounds.append(
@@ -3001,17 +2982,14 @@ def kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        nodes = (
-            deg.filter(F.col("d") >= KCORE_K)
-            .select("node")
-            .localCheckpoint(eager=True)
-        )
-        edges = (
+        nodes = deg.filter(F.col("d") >= KCORE_K).select("node")
+        nodes = pin(nodes, "kcore round nodes")
+        edges = pin(
             edges.join(
                 nodes.withColumnRenamed("node", "u"), "u", "left_semi"
             )
-            .join(nodes.withColumnRenamed("node", "v"), "v", "left_semi")
-            .localCheckpoint(eager=True)
+            .join(nodes.withColumnRenamed("node", "v"), "v", "left_semi"),
+            "kcore round edges",
         )
     out = rounds[0]
     for frame in rounds[1:]:
@@ -3143,7 +3121,7 @@ def winnowing_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # makes. Pair generation then follows F3's in-array expansion: one
     # groupBy(fp) with the df cap applied to the collected doc list —
     # no fp self-join shuffle at all.
-    fps = (
+    fps = pin(
         keyed.select(
             "doc_id", "pos", F.min("key").over(w).alias("wkey")
         )
@@ -3152,8 +3130,8 @@ def winnowing_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.floor(F.col("wkey") / WIN_POS_MOD).cast("bigint").alias("fp"),
         )
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "winnowing fingerprints",
     )
     pair_expr = F.expr(
         "flatten(transform(docs, (a, i) -> "
@@ -3239,10 +3217,10 @@ def dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan would otherwise shingle on one core and pin a 1-partition
     # layout into every consumer's first stage (r10; no-op on
     # multi-file corpora).
-    sh = (
+    sh = pin(
         word_ngrams(spread(d), PPJ_N, distinct=True)
-        .select("doc_id", F.xxhash64("shingle").alias("h"))
-        .localCheckpoint(eager=True)
+        .select("doc_id", F.xxhash64("shingle").alias("h")),
+        "prefix shingles",
     )
     df_counts = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     # Per-doc shingle array sorted by the global (df, h) order. The
@@ -3337,7 +3315,7 @@ def chunk_dup_mass_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = t(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda x: x != "")
-    chunks = (
+    chunks = pin(
         d.select("doc_id", toks.alias("tk"))
         .select(
             "doc_id",
@@ -3355,8 +3333,8 @@ def chunk_dup_mass_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("chunk"),
         )
         .filter(F.col("chunk") != "")
-        .select("doc_id", F.xxhash64("chunk").alias("ch"))
-        .localCheckpoint(eager=True)  # feeds chunk-df AND per-doc join
+        .select("doc_id", F.xxhash64("chunk").alias("ch")),
+        "chunk hashes",  # feeds chunk-df AND per-doc join
     )
     cdf = chunks.groupBy("ch").agg(F.countDistinct("doc_id").alias("nd"))
     per_doc = (
@@ -3551,11 +3529,11 @@ def eval_containment_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     docs = d.select("doc_id", bucket.alias("bucket"))
-    sh = (
+    sh = pin(
         word_ngrams(d, CONT_N, distinct=True)
         .select("doc_id", F.xxhash64("shingle").alias("h"))
-        .join(docs, "doc_id")
-        .localCheckpoint(eager=True)  # feeds train slice, eval slice, sizes
+        .join(docs, "doc_id"),
+        "containment shingles",  # feeds train slice, eval slice, sizes
     )
     tr = sh.filter(F.col("bucket") < TRAIN_PCT).select(
         F.col("doc_id").alias("train_doc_id"), "h"
@@ -3672,10 +3650,9 @@ def incremental_dedup_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = word_ngrams(docs, CONT_N, distinct=True).select(
         "doc_id", F.xxhash64("shingle").alias("h"), bucket.alias("__b")
     )
-    bsh = (
-        sh.filter(F.col("__b") >= TRAIN_PCT)
-        .drop("__b")
-        .localCheckpoint(eager=True)  # feeds sizes + the overlap join
+    bsh = pin(
+        sh.filter(F.col("__b") >= TRAIN_PCT).drop("__b"),
+        "batch shingles",  # feeds sizes + the overlap join
     )
     csh = sh.filter(F.col("__b") < TRAIN_PCT).select(
         F.col("doc_id").alias("cdoc"), "h"
@@ -3890,14 +3867,17 @@ def llm_data_prep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_stop = F.size(F.filter(tokens, lambda x: x.isin(*STOPWORDS)))
     stop_ratio = n_stop.cast("double") / F.greatest(n_tokens, F.lit(1))
     q_ok = F.when((n_tokens >= 10) & (stop_ratio >= 0.05), 1).otherwise(0)
-    flags = d.select(
-        "doc_id",
-        "text",
-        q_ok.alias("q_ok"),
-        F.when(F.col("lang") == "en", 1).otherwise(0).alias("en"),
-        F.when(bucket < TRAIN_PCT, 1).otherwise(0).alias("tr"),
-        bucket.alias("bucket"),
-    ).localCheckpoint(eager=True)  # feeds s4, eval shingles, final agg
+    flags = pin(
+        d.select(
+            "doc_id",
+            "text",
+            q_ok.alias("q_ok"),
+            F.when(F.col("lang") == "en", 1).otherwise(0).alias("en"),
+            F.when(bucket < TRAIN_PCT, 1).otherwise(0).alias("tr"),
+            bucket.alias("bucket"),
+        ),
+        "funnel flags",
+    )  # feeds s4, eval shingles, final agg
 
     s4 = flags.filter(
         (F.col("q_ok") == 1) & (F.col("en") == 1) & (F.col("tr") == 1)
@@ -4065,7 +4045,9 @@ def apply_mixture_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = per_src.agg(
         F.sum(F.pow(F.col("n_docs").cast("double"), MIX_ALPHA)).alias("z")
     )
-    quota = (
+    # feeds the keep-filter AND the final readout join — tiny
+    # |sources|-row frame, pin it
+    quota = pin(
         per_src.crossJoin(F.broadcast(z))
         .select(
             "source",
@@ -4079,10 +4061,8 @@ def apply_mixture_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + 1e-9
                 ).cast("bigint"),
             ).alias("quota"),
-        )
-        # feeds the keep-filter AND the final readout join — tiny
-        # |sources|-row frame, pin it
-        .localCheckpoint(eager=True)
+        ),
+        "mixture quota",
     )
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), "doc_id"
@@ -4163,7 +4143,7 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing doc_id grouping — no windows, no self-joins."""
     d = t(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda x: x != "")
-    bg = (
+    bg = pin(
         d.select("doc_id", toks.alias("t"))
         .filter(F.size("t") >= 2)
         .select(
@@ -4176,8 +4156,8 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("u"),
         )
-        .select("doc_id", F.col("u.w1").alias("w1"), F.col("u.bg").alias("bg"))
-        .localCheckpoint(eager=True)  # feeds bigram df AND scoring join
+        .select("doc_id", F.col("u.w1").alias("w1"), F.col("u.bg").alias("bg")),
+        "bigram counts",  # feeds bigram df AND scoring join
     )
     toks_all = d.select(F.explode(toks).alias("tok"))
     ugc = toks_all.groupBy("tok").agg(F.count(F.lit(1)).alias("nug"))
@@ -4420,17 +4400,16 @@ def source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     # The (source, token) counts feed FOUR subtrees (main frame, source
     # totals, corpus counts, corpus total); without pinning, Spark
-    # re-executes the scan+explode+agg once per subtree. One eager
-    # localCheckpoint = one token shuffle, reused everywhere (blocks
-    # freed when the returned frame is GC'd).
-    sc = (
+    # re-executes the scan+explode+agg once per subtree. One pin = one
+    # token shuffle, reused everywhere.
+    sc = pin(
         d.select(
             "source", F.explode(F.split("text", " ")).alias("tok")
         )
         .filter(F.col("tok") != "")
         .groupBy("source", "tok")
-        .agg(F.count(F.lit(1)).cast("double").alias("c"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).cast("double").alias("c")),
+        "source token counts",
     )
     stot = sc.groupBy("source").agg(F.sum("c").alias("st"))
     cc = sc.groupBy("tok").agg(F.sum("c").alias("tc"))

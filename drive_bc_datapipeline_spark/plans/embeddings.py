@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from drive_bc_datapipeline_spark.functions import vectors
+from drive_bc_datapipeline_spark.session import pin
 from drive_bc_datapipeline_spark.tables import spread
 from drive_bc_datapipeline_spark.plans.registry import (
     query,
@@ -459,7 +460,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE |corpus| x NLIST ranking pass, filtered to the rows either
     # consumer needs and pinned (3 int-ish columns, ~|corpus| rows) —
     # assign and probes used to re-execute the crossJoin each
-    cells = (
+    cells = pin(
         e.crossJoin(F.broadcast(cent))
         .withColumn("ccos", ccos)
         .withColumn("crnk", F.row_number().over(w_assign))
@@ -467,8 +468,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("crnk") == 1)
             | ((F.col("crnk") <= IVF_NPROBE) & (F.col("vec_id") < N_QUERIES))
         )
-        .select("vec_id", "cid", "crnk")
-        .localCheckpoint(eager=True)
+        .select("vec_id", "cid", "crnk"),
+        "ivf cells",
     )
     assign = cells.filter(F.col("crnk") == 1).select("vec_id", "cid")
     probes = cells.filter(
@@ -1330,7 +1331,8 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("val").cast("double") * KM_GRID + 0.5)
         .cast("bigint")
         .alias("q"),
-    ).localCheckpoint(eager=True)
+    )
+    qrel = pin(qrel, "kmeans grid")
 
     def centroids(assign: DataFrame) -> DataFrame:
         return (
@@ -1368,7 +1370,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     a1 = assign(c0).select("vec_id", "cluster")
     # c1 feeds both the final assign and the norms readout — pin the
     # k*dim-row frame so the whole first Lloyd round runs once
-    c1 = centroids(a1).localCheckpoint(eager=True)
+    c1 = pin(centroids(a1), "kmeans centroids")
     a2 = assign(c1)
     norms = c1.groupBy("cluster").agg(
         (
@@ -1645,11 +1647,11 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join and the rel edge list — without the pin each consumer
     # re-executes the whole corpus relevance scan + partial top-k
     # (this plan used to show 9 embeddings FileScans)
-    cand = (
+    cand = pin(
         pruned.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= MMR_C)
-        .drop("rn")
-        .localCheckpoint(eager=True)
+        .drop("rn"),
+        "mmr pool",
     )
     # Re-attach embeddings to the C·|queries|-row pool, then build the
     # per-query pairwise-sim edge list JVM-side (C² rows per query).
@@ -1664,7 +1666,8 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rel",
         F.col("embedding").alias("emb_a"),
         F.col("nrm").alias("nrm_a"),
-    ).localCheckpoint(eager=True)
+    )
+    c1 = pin(c1, "mmr pool embeddings")
     c2 = cand.join(
         emb, cand.neighbor_id == emb.vec_id
     ).select(
@@ -2249,7 +2252,7 @@ def _pq_qrel(e: DataFrame) -> DataFrame:
     five subtrees (init centroids, refine assign, refined centroids,
     codes, LUT), so one materialization means the corpus is exploded
     exactly once."""
-    return (
+    return pin(
         e.select("vec_id", F.posexplode("embedding").alias("pos", "val"))
         .select(
             "vec_id",
@@ -2258,8 +2261,8 @@ def _pq_qrel(e: DataFrame) -> DataFrame:
             F.floor(F.col("val").cast("double") * KM_GRID + 0.5)
             .cast("bigint")
             .alias("q"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "pq grid",
     )
 
 
@@ -2312,9 +2315,7 @@ def _pq_train(qrel: DataFrame) -> DataFrame:
         .cast("bigint")
         .alias("cq")
     )
-    return _pq_centroids(qrel, _pq_assign_codes(qrel, c0)).localCheckpoint(
-        eager=True
-    )
+    return pin(_pq_centroids(qrel, _pq_assign_codes(qrel, c0)), "pq codebook")
 
 
 def _pq_lut(qrel: DataFrame, cent: DataFrame) -> DataFrame:
@@ -2652,13 +2653,13 @@ def hybrid_rrf_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for free, no second tokenize. Eager: measured faster than
     # folding the materialization into the qt pin job (lazy checkpoint
     # serializes the toks build into the consumer job's critical path).
-    toks = (
+    toks = pin(
         ds.select(
             "doc_id", F.size(raw).alias("dl"), F.explode(raw).alias("tok")
         )
         .groupBy("doc_id", "dl", "tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).cast("long").alias("tf")),
+        "hybrid tokens",
     )
     # screen denominator = |documents| (Lucene's maxDocFreqPct is over
     # all docs): a parquet footer count, no extra aggregate in-plan;
@@ -2793,7 +2794,7 @@ def ann_ivfpq_topk(
     w_assign = Window.partitionBy("vec_id").orderBy(
         F.desc("ccos"), F.asc("cid")
     )
-    cells = (
+    cells = pin(
         e.crossJoin(F.broadcast(cent))
         .withColumn("ccos", ccos)
         .withColumn("crnk", F.row_number().over(w_assign))
@@ -2801,8 +2802,8 @@ def ann_ivfpq_topk(
             (F.col("crnk") == 1)
             | ((F.col("crnk") <= nprobe) & (F.col("vec_id") < N_QUERIES))
         )
-        .select("vec_id", "cid", "crnk")
-        .localCheckpoint(eager=True)
+        .select("vec_id", "cid", "crnk"),
+        "ivfpq cells",
     )
     assign = cells.filter(F.col("crnk") == 1).select("vec_id", "cid")
     probes = cells.filter(

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from drive_bc_datapipeline_spark.session import local_frame
+from drive_bc_datapipeline_spark.session import local_frame, pin
 from drive_bc_datapipeline_spark.tables import spread
 from drive_bc_datapipeline_spark.plans.registry import (
     query,
@@ -659,14 +659,13 @@ def approx_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize once: the tiny per-type sketch frame feeds BOTH the
     # broadcast rank-scan and the final select; the broadcast exchange
     # and the plain join input don't exchange-reuse, so without this the
-    # full-table aggregation would execute twice. localCheckpoint, not
-    # cache(): blocks are GC-freed instead of pinned in the
-    # CacheManager for the session.
+    # full-table aggregation would execute twice.
     agg = e.groupBy("event_type").agg(
         F.expr("percentile(value, array(0.25, 0.5, 0.9, 0.99))").alias("qx"),
         F.percentile_approx("value", QUANTILE_PS, QUANTILE_ACCURACY).alias("qa"),
         F.count("value").alias("n"),
-    ).localCheckpoint(eager=True)
+    )
+    agg = pin(agg, "quantile sketches")
     rank_aggs = []
     for i in range(1, 5):
         qa_i = F.element_at("qa", i)
@@ -2232,15 +2231,15 @@ def pagerank_type_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (
+    edges = pin(
         e.select(
             F.lag("event_type").over(w).alias("src"),
             F.col("event_type").alias("dst"),
         )
         .filter(F.col("src").isNotNull())
         .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).cast("double").alias("w")),
+        "type graph edges",
     )
     # Guard on the quantity that is actually collected (r10 review
     # fix: a ≤4096-node graph can still hold nodes² ≈ 16.7M edges —
@@ -2359,10 +2358,10 @@ def hll_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # also stands in for the real-(type, day) filter below, which
     # otherwise re-scanned events a third time.
     e = t(spark, sf_dir, "events")
-    daily = (
+    daily = pin(
         e.groupBy("event_type", F.to_date("ts").alias("day"))
-        .agg(F.hll_sketch_agg("user_id").alias("sk"))
-        .localCheckpoint(eager=True)
+        .agg(F.hll_sketch_agg("user_id").alias("sk")),
+        "daily sketches",
     )
     est = (
         daily.select(
@@ -2611,7 +2610,8 @@ def chi2_type_by_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # total, grid join) — pin it so the fact scans once, not 4x
     cells = e.groupBy(
         "event_type", (F.expr("weekday(ts)") + 1).alias("dow")
-    ).agg(F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    ).agg(F.count(F.lit(1)).alias("n"))
+    cells = pin(cells, "type x dow cells")
     rt = cells.groupBy("event_type").agg(F.sum("n").alias("row_n"))
     ct = cells.groupBy("dow").agg(F.sum("n").alias("col_n"))
     tot = cells.agg(F.sum("n").alias("grand"))
@@ -2734,7 +2734,8 @@ def mutual_info_type_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once (the chi2 pattern)
     cells = e.groupBy(
         "event_type", F.hour("ts").cast("int").alias("hr")
-    ).agg(F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    ).agg(F.count(F.lit(1)).alias("n"))
+    cells = pin(cells, "type x hour cells")
     rt = cells.groupBy("event_type").agg(F.sum("n").alias("row_n"))
     ct = cells.groupBy("hr").agg(F.sum("n").alias("col_n"))
     tot = cells.agg(F.sum("n").alias("grand"))
@@ -3001,13 +3002,13 @@ def value_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the two per-type stat frames: `dev` is consumed twice (MAD
     # pass + flag pass) and re-derives its broadcast side each time —
     # pinned, exact MAD costs its minimum three fact passes, not four
-    med = e.groupBy("event_type").agg(
-        F.expr("percentile(value, 0.5)").alias("m")
-    ).localCheckpoint(eager=True)
+    med = e.groupBy("event_type").agg(F.expr("percentile(value, 0.5)").alias("m"))
+    med = pin(med, "type medians")
     dev = e.join(F.broadcast(med), "event_type")
     madt = dev.groupBy("event_type").agg(
         F.expr("percentile(abs(value - m), 0.5)").alias("mad")
-    ).localCheckpoint(eager=True)
+    )
+    madt = pin(madt, "type mads")
     flagged = dev.join(F.broadcast(madt), "event_type")
     return flagged.groupBy("event_type").agg(
         F.count("value").alias("n"),
@@ -3363,10 +3364,10 @@ def dow_seasonality_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     iso_dow = ((F.dayofweek(day) + 5) % 7) + 1
     # pinned: the (type x day) frame feeds the profile fit AND the
     # residual join — each consumer otherwise re-scans events
-    daily = (
+    daily = pin(
         e.groupBy("event_type", day.alias("day"), iso_dow.alias("dow"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("n")),
+        "daily counts",
     )
     profile = daily.groupBy("event_type", "dow").agg(
         F.avg("n").alias("dow_mean")
@@ -4045,10 +4046,10 @@ def value_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     # the tiny |types|x|days| daily frame feeds both the window pass
     # and the mu/sigma stats — pin it so the events scan runs once
-    daily = (
+    daily = pin(
         e.groupBy("event_type", F.to_date("ts").alias("day"))
-        .agg(F.count(F.lit(1)).cast("double").alias("n"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).cast("double").alias("n")),
+        "daily values",
     )
     st = daily.groupBy("event_type").agg(
         F.avg("n").alias("mu"), F.stddev_samp("n").alias("sd")

@@ -27,6 +27,7 @@ from drive_bc_datapipeline_spark.plans.registry import (
     r6_sql,
     t,
 )
+from drive_bc_datapipeline_spark.session import pin
 
 # --------------------------------------------------------------------------
 # C1 — flagship: TPC-H Q1 pricing summary.
@@ -712,7 +713,7 @@ def q13_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregation twice; on a cluster the two merges can differ in the
 # last ulp (shuffle-fetch arrival order) and the equality then matches
 # NOTHING. The Spark plan pins ONE materialization of the revenue view
-# (eager localCheckpoint) and then does scalar-MAX + broadcast equality
+# (``session.pin``) and then does scalar-MAX + broadcast equality
 # join against that pinned frame — the MAX job and the filter job read
 # the same double sums, so the equality is safe and keeps ties exactly
 # like rank()=1. (An earlier round used a rank window instead, but
@@ -764,11 +765,11 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Q15's "rank()=1 keeps ties" is max-equality: a scalar MAX + a
     # broadcast equality join, fully distributed — not a rank window
     # over the per-supplier frame, which Spark plans as ONE task
-    # holding every supplier. revenue is pinned (localCheckpoint) so
+    # holding every supplier. revenue is pinned so
     # the MAX job and the filter job read the SAME double sums —
     # re-executing the lineage could merge shuffle partials in a
     # different order and perturb the last ulp, breaking equality.
-    revenue = revenue.localCheckpoint(eager=True)
+    revenue = pin(revenue, "supplier revenue")
     mx = revenue.agg(F.max("total_revenue").alias("mx"))
     return (
         revenue.join(F.broadcast(mx), F.col("total_revenue") == F.col("mx"))
@@ -1629,14 +1630,14 @@ def brand_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion starts from the already-grouped arrays."""
     l = t(spark, sf_dir, "lineitem")
     p = t(spark, sf_dir, "part")
-    grouped = (
+    grouped = pin(
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .select(
             F.col("l_orderkey").alias("okey"), F.col("p_brand").alias("brand")
         )
         .groupBy("okey")
-        .agg(F.sort_array(F.collect_set("brand")).alias("bs"))
-        .localCheckpoint(eager=True)  # feeds basket count, brand counts, pairs
+        .agg(F.sort_array(F.collect_set("brand")).alias("bs")),
+        "order baskets",  # feeds basket count, brand counts, pairs
     )
     nb = grouped.count()
     bc = (
@@ -1746,7 +1747,9 @@ def cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e.kind").alias("kind"),
     )
     live = F.col("kind") != "del"
-    per_status = (
+    # tiny |statuses|-row frame feeds both the readout and the global op
+    # counts — one fact scan
+    per_status = pin(
         exploded.groupBy("o_orderstatus")
         .agg(
             F.sum(live.cast("int")).cast("bigint").alias("n_rows"),
@@ -1754,9 +1757,8 @@ def cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("kind") == "upd").cast("int")).cast("bigint").alias("u"),
             F.sum((F.col("kind") == "del").cast("int")).cast("bigint").alias("d"),
             F.sum((F.col("kind") == "ins").cast("int")).cast("bigint").alias("i"),
-        )
-        .localCheckpoint(eager=True)  # tiny |statuses|-row frame feeds
-        # both the readout and the global op counts — one fact scan
+        ),
+        "per-status counts",
     )
     ops = per_status.agg(
         F.sum("u").alias("n_updated"),

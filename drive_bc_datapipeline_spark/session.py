@@ -15,8 +15,11 @@ import os
 from collections.abc import Iterator, Mapping, Sequence
 from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+DESCRIPTION = "spark.job.description"
 
 
 def get_spark(
@@ -114,3 +117,54 @@ def scoped_conf(
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, value)
+
+
+def pin(df: DataFrame, label: str) -> DataFrame:
+    """``df`` materialized once, now, for several consumers — THE one
+    place a plan is pinned. The checkpoint's jobs (AQE runs each
+    shuffle stage as a job of its own) carry the job description
+    ``"<outer description> / <label>"`` (just ``label`` when none is
+    set), so an event log or status store names the pin that launched
+    them; the previous description comes back on every exit, a raise
+    included. The job group is left alone: whoever counts jobs by group
+    still finds the pin's jobs in its group.
+
+    An eager ``localCheckpoint``, not ``cache()``: the checkpoint blocks
+    are freed by the ContextCleaner once the returned frame is
+    garbage-collected, while a ``cache()`` entry stays in the session's
+    CacheManager until someone unpersists it — and a frame handed back
+    lazily gives nobody that chance (one leaked entry per call). The
+    checkpoint also cuts the lineage: every consumer plans against a
+    ``LogicalRDD`` instead of re-executing the pinned subtree.
+    """
+    sc = df.sparkSession.sparkContext
+    outer = sc.getLocalProperty(DESCRIPTION)
+    sc.setLocalProperty(DESCRIPTION, f"{outer} / {label}" if outer else label)
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        sc.setLocalProperty(DESCRIPTION, outer)
+
+
+@contextmanager
+def cached(*frames: DataFrame | None) -> Iterator[None]:
+    """``cache()`` each of ``frames`` that is not cached yet (``None``
+    entries are skipped) for the ``with`` block, and unpersist exactly
+    those on every exit, a raise included; a frame the caller had
+    cached already stays cached.
+
+    For frames read again and again inside one call and released
+    before it returns (an iteration's edge set, a training set every
+    round scans). Unlike ``pin``'s checkpoint, whose ``LogicalRDD``
+    drops the frame's output partitioning, a cached frame keeps its
+    ``repartition`` layout, so consumers keyed the same way add no
+    exchange; use ``pin`` for a frame that outlives the call.
+    """
+    owned = [f for f in frames if f is not None and f.storageLevel == StorageLevel.NONE]
+    try:
+        for f in owned:
+            f.cache()
+        yield
+    finally:
+        for f in owned:
+            f.unpersist()

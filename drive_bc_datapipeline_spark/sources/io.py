@@ -28,7 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from drive_bc_datapipeline_spark.session import scoped_conf
+from drive_bc_datapipeline_spark.session import pin, scoped_conf
 
 
 def read_parquet(
@@ -270,12 +270,15 @@ def read_jsonl_quarantine(
     full = StructType(
         list(schema.fields) + [SF_("_corrupt_record", StringType())]
     )
-    df = (
+    # Spark rejects a query over a raw JSON scan that reads only
+    # _corrupt_record; the filters below read the pinned rows instead,
+    # and both returned frames share the one parse.
+    df = pin(
         spark.read.schema(full)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-        .cache()  # Spark requires caching before filtering on _corrupt_record
+        .json(path),
+        "jsonl quarantine",
     )
     clean = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     quarantined = df.filter(F.col("_corrupt_record").isNotNull()).select(

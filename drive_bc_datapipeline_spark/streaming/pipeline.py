@@ -36,7 +36,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from drive_bc_datapipeline_spark.session import scoped_conf
+from drive_bc_datapipeline_spark.session import cached, scoped_conf
 
 # Explicit schema-on-read for the raw event stream (etl-events.py:16-30
 # declared its Kinesis JSON schema the same way).
@@ -616,7 +616,7 @@ def gate_batch_writer(sink_dir: str, gate):
     copy of the gate-writer replay protocol. The marker probe runs
     FIRST: a replayed committed batch builds no scoring plan (base
     would skip the write, but only after its isEmpty probe executed
-    the plan once). The kept frame is persisted around base's isEmpty
+    the plan once). The kept frame is cached around base's isEmpty
     probe + write so each fresh batch scores ONCE.
 
     ``gate(batch_df)`` returns either a bare DataFrame, or
@@ -635,11 +635,10 @@ def gate_batch_writer(sink_dir: str, gate):
             return
         out = gate(batch_df)
         kept, aux = out if isinstance(out, tuple) else (out, ())
-        kept = kept.persist()
         try:
-            base(kept, batch_id)
+            with cached(kept):
+                base(kept, batch_id)
         finally:
-            kept.unpersist()
             for frame in aux:
                 frame.unpersist()
 
@@ -939,6 +938,7 @@ def staged_gate(ccnet, classifier):
     would leave the pin behind, so it is released and re-raised here."""
 
     def kept_of_batch(batch_df: DataFrame):
+        # explicit: gate_batch_writer releases it (as aux) after the commit
         prefiltered = ccnet(batch_df).persist()
         try:
             prefiltered.count()

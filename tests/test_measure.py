@@ -109,3 +109,40 @@ def test_bad_arguments_exit_before_any_session(monkeypatch, argv):
     monkeypatch.setattr(measure, "get_spark", no_session)
     with pytest.raises(SystemExit):
         measure.main(argv)
+
+
+def test_dump_masks_the_run_counters():
+    """Two dumps of one commit differ in run counters: each is replaced
+    by a fixed token, and expression ids are renumbered in order of
+    first appearance, so the plan's structure is all that is left."""
+    plan = (
+        "Exchange hashpartitioning(o_orderkey#812L, x#97, 8), [plan_id=731]\n"
+        "Input [2]: [x#97, o_orderkey#812L]\n"
+        f"Location: file:{measure.REPO}/w/gate_orders__local-1760912345678/p\n"
+        "PushedFilters: [IsNotNull(path)] /tmp/spark_graft_stream_k2x_9ab/src\n"
+    )
+    assert measure.mask_run_counters(plan) == (
+        "Exchange hashpartitioning(o_orderkey#0L, x#1, 8), [plan_id=<n>]\n"
+        "Input [2]: [x#1, o_orderkey#0L]\n"
+        "Location: file:<repo>/w/gate_orders__local-<app>/p\n"
+        "PushedFilters: [IsNotNull(path)] /tmp/spark_graft_stream_<tmp>/src\n"
+    )
+
+
+def test_profile_prints_each_jobs_description(capsys):
+    log = {
+        "jobs": {
+            3: {"group": KEY, "submit": 10.0, "end": 10.5, "stages": [7]},
+            4: {"group": KEY, "submit": 10.6, "end": 11.0, "stages": []},
+            5: {"group": "other", "submit": 10.6, "end": 11.0, "stages": []},
+        },
+        "stages": {7: {"tasks": 4, "run_s": 1.0, "max_task_s": 0.3,
+                       "shuffle_write_bytes": 10, "input_bytes": 20}},
+    }
+    measure.print_profile(
+        [(KEY, 10.0, 0.55, 1.2)], log, {3: f"{KEY} / shingles", 4: KEY}
+    )
+    out = capsys.readouterr().out.splitlines()
+    assert out[1] == f"  job 3: 0.500s  {KEY} / shingles"
+    assert out[3] == f"  job 4: 0.400s  {KEY}"
+    assert not any("job 5" in line for line in out)

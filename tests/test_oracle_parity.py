@@ -48,8 +48,28 @@ def normalize(rows: list[tuple], cols: list[str]) -> list[tuple]:
     return sorted(out, key=lambda tup: tuple(str(x) for x in tup))
 
 
+def session_state(spark) -> tuple[dict[str, str], int]:
+    """The session's SQL conf map and its CacheManager entry count."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    return spark.conf.getAll, cache_manager.numCachedEntries()
+
+
+def assert_session_unchanged(spark, name: str, before) -> None:
+    """Session hygiene: running a key leaves no conf change and no
+    cached plan behind."""
+    (conf0, cached0), (conf1, cached1) = before, session_state(spark)
+    changed = {
+        k: (conf0.get(k), conf1.get(k))
+        for k in conf0.keys() | conf1.keys()
+        if conf0.get(k) != conf1.get(k)
+    }
+    assert not changed, f"{name}: session conf changed {changed}"
+    assert cached1 == cached0, f"{name}: CacheManager {cached0} -> {cached1} entries"
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, name):
+    before = session_state(spark)
     spark_df = QUERIES[name](spark, SF_DIR)
     spark_cols = spark_df.columns
     spark_rows = [tuple(r) for r in spark_df.collect()]
@@ -68,6 +88,7 @@ def test_query_matches_oracle(spark, name):
     ns, nd = normalize(spark_rows, spark_cols), normalize(duck_rows, duck_cols)
     mismatches = [(a, b) for a, b in zip(ns, nd) if a != b]
     assert not mismatches, f"{name}: {len(mismatches)} mismatching rows; first 3: {mismatches[:3]}"
+    assert_session_unchanged(spark, name, before)
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
@@ -94,9 +115,11 @@ def test_oracle_dtypes_are_cross_engine_safe(name):
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
 def test_rows_only_queries_run(spark, name):
+    before = session_state(spark)
     df = QUERIES[name](spark, SF_DIR)
     assert df.count() >= 0
     assert len(df.columns) > 0
+    assert_session_unchanged(spark, name, before)
 
 
 def test_entry_smoke(spark):

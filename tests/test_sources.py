@@ -169,11 +169,16 @@ def test_jsonl_quarantine_splits_corrupt_rows(spark, tmp_path):
         '{"id": 2, "name": "ok2", "val": 2.0}\n'
         '{"id": "NOT_AN_INT", "name": "bad-type", "val": 3.0}\n'
     )
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    cached_before = cache_manager.numCachedEntries()
     clean, quarantined = sio.read_jsonl_quarantine(spark, str(src), SCHEMA)
     assert sorted(r.id for r in clean.collect()) == [1, 2]
     bad = [r._corrupt_record for r in quarantined.collect()]
     assert len(bad) == 2
     assert any("not json" in b for b in bad)
+    # the two lazy frames give the caller no handle to release a cached
+    # read, so the read must leave no CacheManager entry behind
+    assert cache_manager.numCachedEntries() == cached_before
 
 
 def test_parquet_merge_schema_evolution(spark, tmp_path):

@@ -30,11 +30,17 @@ ab        A/B of one runtime SQL conf in one session. The arms run
           "B clearly"); anything closer is a "wash".
 profile   one cold and one steady pass, then the event-log readout
           (perfbench/tracing.py) of each steady run: build and exec
-          seconds, each job's wall time, and per stage its tasks, summed
-          run time, longest task, shuffle-write bytes and input bytes.
+          seconds, each job's wall time and description (the key, or
+          "<key> / <label>" for a ``session.pin`` job, read from the
+          status store), and per stage its tasks, summed run time,
+          longest task, shuffle-write bytes and input bytes.
 dump      ``explain('formatted')`` of each key (every key by default)
           into plans/r<ROUND>/<key>_<SUFFIX>.txt (SUFFIX defaults to
-          "before"); diff two suffixes to find the keys whose plan moved.
+          "before"), with the run counters masked (``plan_id``, the
+          application id in table locations, temp stream dirs, the
+          checkout path) and expression ids renumbered per plan, so
+          dumps of two runs or two checkouts differ below their header
+          lines only where a plan moved; diff two suffixes to find them.
 plans-md  regenerate PLANS.md: the final (post-AQE) plans of PICKS at
           sf0.01 on ``local[8]`` with 16 shuffle partitions.
 verify    the Spark-vs-DuckDB check of every oracle key (default sf0.01)
@@ -129,6 +135,18 @@ PICKS = {
     "substring_dup_mass_by_source": "ExactSubstr dedup: tokenized corpus pinned once; stride-1 window hashes -> duplicated-(hash, len) hash aggregate -> semi-join back -> doc-partitioned lag-window interval union -> |sources|-row rollup. Nothing corpus².",
 }
 
+#: run counters that differ between two runs of one commit, and the
+#: checkout's own path
+DUMP_MASKS = (
+    (re.compile(r"plan_id=\d+"), "plan_id=<n>"),
+    (re.compile(r"local-\d+"), "local-<app>"),
+    (re.compile(r"spark_graft_stream_\w+"), "spark_graft_stream_<tmp>"),
+    (re.compile(re.escape(REPO)), "<repo>"),
+)
+#: expression ids come from one JVM-wide counter, and AQE's runtime
+#: re-planning during a key's pin jobs draws a varying number of them
+EXPR_ID = re.compile(r"#(\d+)")
+
 PLANS_HEADER = """# PLANS — physical-plan audit (generated from live `explain`)
 
 Evidence for the scale claims in SURVEY §6 / module docstrings: the
@@ -219,7 +237,22 @@ def ab_keys(spark, conf: str, values, keys, sf_dir, passes) -> list[dict]:
     return rows
 
 
-def print_profile(steady, log: dict) -> None:
+def job_descriptions(spark, keys: list[str]) -> dict[int, str]:
+    """The description of each job of ``keys``' groups, from the
+    session's status store (the event-log readout carries none)."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    out = {}
+    for key in keys:
+        for jid in sc.statusTracker().getJobIdsForGroup(key):
+            desc = store.job(jid).description()
+            out[jid] = desc.get() if desc.isDefined() else ""
+    return out
+
+
+def print_profile(steady, log: dict, descriptions: dict[int, str]) -> None:
     for key, t0, build, total in steady:
         print(f"=== {key}: build {build:.3f}s exec {total - build:.3f}s")
         for jid, job in sorted(log["jobs"].items()):
@@ -227,7 +260,7 @@ def print_profile(steady, log: dict) -> None:
             if job["group"] != key or not t0 - 1e-3 <= job["submit"] <= t0 + total:
                 continue
             wall = f"{job['end'] - job['submit']:.3f}s" if job["end"] else "unfinished"
-            print(f"  job {jid}: {wall}")
+            print(f"  job {jid}: {wall}  {descriptions.get(jid, '')}")
             for sid in job["stages"]:
                 st = log["stages"].get(sid)  # None: the stage was skipped
                 if st:
@@ -237,6 +270,16 @@ def print_profile(steady, log: dict) -> None:
                         f"shuffle_write {st['shuffle_write_bytes']}B "
                         f"input {st['input_bytes']}B"
                     )
+
+
+def mask_run_counters(plan: str) -> str:
+    """``plan`` with the run counters masked and its expression ids
+    renumbered in order of first appearance (the plan's structure, which
+    attribute feeds which operator, is kept)."""
+    for pattern, repl in DUMP_MASKS:
+        plan = pattern.sub(repl, plan)
+    ids: dict[str, str] = {}
+    return EXPR_ID.sub(lambda m: "#" + ids.setdefault(m.group(1), str(len(ids))), plan)
 
 
 def dump_keys(spark, sf_dir: str, rnd: int, suffix: str, keys: list[str]) -> None:
@@ -251,7 +294,7 @@ def dump_keys(spark, sf_dir: str, rnd: int, suffix: str, keys: list[str]) -> Non
         with open(path, "w") as fh:
             fh.write(f"-- {key} ({suffix}) sf_dir={sf_dir}\n")
             fh.write(f"-- plan-build wall: {build:.3f}s\n")
-            fh.write(df._jdf.queryExecution().explainString(mode))
+            fh.write(mask_run_counters(df._jdf.queryExecution().explainString(mode)))
         print(f"{key}: build {build:.3f}s -> {path}", file=sys.stderr)
 
 
@@ -364,7 +407,8 @@ def cmd_profile(args) -> int:
         steady = [
             run[1:] for run in bench_passes(spark, args.keys, args.sf_dir, 1) if run[0]
         ]
-    print_profile(steady, read_event_log(log_dir))
+        descriptions = job_descriptions(spark, args.keys)
+    print_profile(steady, read_event_log(log_dir), descriptions)
     shutil.rmtree(work)
     return 0
 
